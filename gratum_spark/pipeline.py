@@ -7,8 +7,10 @@ mutate/reject rows; ``go()`` returns a LoadStatistic
 
 Spark design — wrap, don't re-implement:
   * a Pipeline holds a lazy ``DataFrame`` (the Catalyst logical plan IS
-    the step chain), a list of tagged reject DataFrames, and deferred
-    hooks (branches, on_rejection, after).
+    the step chain), the recipe for its reject-accounting plan (a tag
+    column over the same scan, see :mod:`gratum_spark.rejections`), the
+    lazily built rejected-row payload branches, and deferred hooks
+    (branches, on_rejection, after).
   * every operator is a pure function DataFrame -> DataFrame plus reject
     bookkeeping; nothing executes until ``go()`` / ``start()`` / a sink.
   * Catalyst supplies what gratum never had: predicate pushdown, column
@@ -30,6 +32,7 @@ import re
 import time
 import warnings
 from collections.abc import Callable, Iterable, Mapping
+from dataclasses import dataclass
 from typing import Any
 
 import pandas as pd
@@ -40,6 +43,7 @@ from pyspark.sql.types import (
     DataType,
     DoubleType,
     FloatType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -48,7 +52,6 @@ from pyspark.sql.types import (
 
 from .rejections import (
     REJECT_CATEGORY,
-    REJECT_COLS,
     REJECT_REASON,
     REJECT_STEP,
     LoadStatistic,
@@ -58,6 +61,7 @@ from .rejections import (
     tag_rejects,
     union_rejects,
 )
+from .rejections import REJECT_TAG as TAG
 
 ROW_ORDER = "_row_order"
 
@@ -81,22 +85,21 @@ def stamp_row_order(df: DataFrame) -> DataFrame:
     """
     # inputFiles() is non-empty only for file-scan plans — pre-check so
     # non-file sources don't hit (and noisily log) the analyzer error
-    # for the unresolvable _metadata column
+    # for the unresolvable _metadata column. CSV/JSON scans do have a
+    # _metadata struct, but without row_index: read its field names
+    # first instead of letting the analyzer fail (and log) every time.
     try:
-        is_file_scan = bool(df.inputFiles())
+        meta = df.select("_metadata").schema[0].dataType if df.inputFiles() else None
     except Exception:
-        is_file_scan = False
-    if is_file_scan:
-        try:
-            return df.withColumn(
-                ROW_ORDER,
-                F.struct(
-                    F.col("_metadata.file_path").alias("f"),
-                    F.col("_metadata.row_index").alias("i"),
-                ),
-            )
-        except Exception:
-            pass  # e.g. CSV/JSON scans: no row_index metadata field
+        meta = None
+    if meta is not None and "row_index" in meta.fieldNames():
+        return df.withColumn(
+            ROW_ORDER,
+            F.struct(
+                F.col("_metadata.file_path").alias("f"),
+                F.col("_metadata.row_index").alias("i"),
+            ),
+        )
     # same struct<f,i> shape as the metadata stamp so differently-
     # sourced pipelines stay union-compatible (concat)
     return df.withColumn(
@@ -135,7 +138,42 @@ def _is_regex(v: Any) -> bool:
     return isinstance(v, re.Pattern)
 
 
-def _pandas_value_predicate(fn: Callable[[Any], Any]):
+def _batch_udf(batch_fn: Callable[[Any], Any], return_type, gated: bool = False):
+    """Arrow-batched UDF over ``batch_fn`` (a pandas batch -> result).
+
+    ``gated=True`` gives the accounting plan's form (see
+    :mod:`gratum_spark.rejections`): the UDF takes the step's input plus
+    the live flag ``_live()``, runs ``batch_fn`` on the live rows only
+    and gives every other row a null result. The accounting plan carries
+    rows an earlier step rejected, and gratum never hands such a row to
+    a later closure."""
+    if not gated:
+
+        @F.pandas_udf(return_type)
+        def _udf(batch: pd.Series) -> pd.Series:
+            return batch_fn(batch)
+
+        return _udf
+    rt = _parse_ddl(None, return_type) if isinstance(return_type, str) else return_type
+
+    def nulls(n: int):
+        if isinstance(rt, StructType):
+            return pd.DataFrame({f.name: [None] * n for f in rt.fields})
+        return pd.Series([None] * n, dtype=object)
+
+    @F.pandas_udf(return_type)
+    def _live_only(batch: pd.Series, live: pd.Series) -> pd.Series:
+        m = live.to_numpy(dtype=bool)
+        if m.all():
+            return batch_fn(batch)
+        if not m.any():
+            return nulls(len(batch))
+        return batch_fn(batch[m]).reindex(batch.index)
+
+    return _live_only
+
+
+def _pandas_value_predicate(fn: Callable[[Any], Any], gated: bool = False):
     """Arrow-batched boolean predicate over a single column — the
     Condition-map closure form. One Arrow batch crosses the Python
     boundary per ~10k rows instead of one pickled value per row.
@@ -145,33 +183,32 @@ def _pandas_value_predicate(fn: Callable[[Any], Any]):
     closure like ``lambda x: x is None`` silently matched nothing after
     the r5 switch from F.udf (r5 ADVICE, verified). astype(object) +
     where(notna) restores None for every null, matching the row-at-a-time
-    boundary the reference's closures were written against."""
+    boundary the reference's closures were written against.
+    ``gated=True`` returns the accounting plan's live-only form."""
 
-    @F.pandas_udf(BooleanType())
-    def _pred(s: pd.Series) -> pd.Series:
+    def _eval(s: pd.Series) -> pd.Series:
         native = s.astype(object).where(s.notna(), None)
         return native.map(lambda x: bool(fn(x)))
 
-    return _pred
+    return _batch_udf(_eval, BooleanType(), gated)
 
 
-def _pandas_float_value_predicate(fn: Callable[[Any], Any]):
+def _pandas_float_value_predicate(fn: Callable[[Any], Any], gated: bool = False):
     """Float-column variant of :func:`_pandas_value_predicate` (r12):
     the input is struct(v, n) where ``n`` is a JVM-side ``isnan`` flag,
     so the closure sees float('nan') for a true NaN value and None for
     a null — the pandas_udf input conversion alone conflates them (null
     arrives as numpy NaN)."""
 
-    @F.pandas_udf(BooleanType())
-    def _pred(b: pd.DataFrame) -> pd.Series:
+    def _eval(b: pd.DataFrame) -> pd.Series:
         vals = b["v"].astype(object).where(b["v"].notna(), None)
         out = [
             bool(fn(float("nan") if flag else v))
             for v, flag in zip(vals, b["n"])
         ]
-        return pd.Series(out)
+        return pd.Series(out, index=b.index)
 
-    return _pred
+    return _batch_udf(_eval, BooleanType(), gated)
 
 
 # JVM-side NaN flags for closure-visible row dicts (r12): the pandas
@@ -326,7 +363,7 @@ def _distributed_run_ids(
     )
 
 
-def _pandas_row_predicate(fn: Callable[[dict], Any]):
+def _pandas_row_predicate(fn: Callable[[dict], Any], gated: bool = False):
     """Arrow-batched boolean predicate over the whole row (Condition's
     "*" wildcard closure): struct input arrives as a pandas DataFrame.
     Nulls are normalized to Python None before the closure sees the row
@@ -334,14 +371,13 @@ def _pandas_row_predicate(fn: Callable[[dict], Any]):
     cells carry ``__nan__*`` flags so a true NaN survives as
     float('nan') (r12)."""
 
-    @F.pandas_udf(BooleanType())
-    def _pred(batch: pd.DataFrame) -> pd.Series:
+    def _eval(batch: pd.DataFrame) -> pd.Series:
         native = batch.astype(object).where(batch.notna(), None)
         return native.apply(
             lambda r: bool(fn(_restore_nan_cells(r.to_dict()))), axis=1
         )
 
-    return _pred
+    return _batch_udf(_eval, BooleanType(), gated)
 
 
 # English month names for lenient text-month parsing (MMM/MMMM) —
@@ -1337,6 +1373,76 @@ def _hybrid_windowed_epoch_days(
     return out
 
 
+# ---------------------------------------------------------------------------
+# Reject accounting (design: gratum_spark.rejections module docstring)
+# ---------------------------------------------------------------------------
+
+def _live() -> Column:
+    """True on the rows of an accounting plan that no step rejected."""
+    return F.col(TAG).isNull()
+
+
+def _retag(rejects: Column, code: int) -> Column:
+    """The tag column after a step that rejects the live rows where
+    ``rejects`` holds. A tagged row keeps its tag and never evaluates
+    ``rejects``: CASE WHEN evaluates its branches in order, so a rejected
+    row cannot raise (e.g. an ANSI error) in a later step's expression."""
+    return F.when(F.col(TAG).isNotNull(), F.col(TAG)).when(rejects, F.lit(code))
+
+
+def _untagged(df: DataFrame) -> DataFrame:
+    return df.withColumn(TAG, F.lit(None).cast("int"))
+
+
+@dataclass(frozen=True)
+class _Segment:
+    """One accounting segment. ``build()`` returns a fresh plan with the
+    pipeline's columns plus the tag column; ``tags[code]`` is the
+    (category, step) that tag code stands for. Row-local steps extend
+    the open segment (:meth:`then`); other operators start a new one
+    from their output, and the old one is counted alongside it."""
+
+    build: Callable[[], DataFrame]
+    tags: tuple[tuple[str, str], ...] = ()
+
+    def then(self, step: Callable[[DataFrame], DataFrame], tags=()) -> "_Segment":
+        return _Segment(lambda: step(self.build()), self.tags + tuple(tags))
+
+
+def _split_segment(kept: DataFrame, rejected: DataFrame, tag: tuple[str, str]) -> _Segment:
+    """A new accounting segment from a step's kept rows and its rejected
+    rows, the latter tagged ``tag`` — for a rejecting step that cannot
+    extend the open segment. Reads the step's input twice."""
+    return _Segment(
+        lambda: _untagged(kept).unionByName(rejected.withColumn(TAG, F.lit(0))), (tag,)
+    )
+
+
+def _add_count(counts: dict, category: str, step: str, n: int) -> None:
+    by_step = counts.setdefault(category, {})
+    by_step[step] = by_step.get(step, 0) + n
+
+
+def _merged_counts(*counts: dict) -> dict:
+    out: dict[str, dict[str, int]] = {}
+    for c in counts:
+        for cat, by_step in c.items():
+            for step, n in by_step.items():
+                _add_count(out, cat, step, n)
+    return out
+
+
+def _progress_report(observations: list) -> "int | None":
+    """Rows seen by the most recent of a progress point's observations
+    whose action has finished (non-blocking: ``Observation.get`` waits
+    forever on an observation whose plan never ran)."""
+    for obs in reversed(observations):
+        jo = getattr(obs, "_jo", None)
+        if jo is not None and jo.future().isCompleted():
+            return obs.get["rows"]
+    return None
+
+
 class Pipeline:
     """Immutable-ish pipeline facade: every operator returns a new Pipeline.
 
@@ -1348,12 +1454,21 @@ class Pipeline:
         self,
         df: DataFrame,
         name: str = "pipeline",
-        rejects: list[DataFrame] | None = None,
+        rejects: list[Callable[[], DataFrame]] | None = None,
         hooks: dict | None = None,
     ) -> None:
         self.df = df
         self.name = name
+        # rejected-row payload branches, one plan function per rejecting step,
+        # built only by rejections_df() / on_rejection
         self._rejects = list(rejects or [])
+        # reject accounting: the open segment (df plus a null tag column
+        # until a rejecting step extends it), the closed segments before
+        # the last non-row-local operator, and counts a sink's write
+        # already produced (see _save_result)
+        self._acct = _Segment(functools.partial(_untagged, df))
+        self._closed: tuple[_Segment, ...] = ()
+        self._precounted: dict[str, dict[str, int]] = {}
         self._hooks = {
             "after": [],
             "on_rejection": [],
@@ -1368,14 +1483,15 @@ class Pipeline:
         # post-save result pipelines report the PARENT's loaded count
         # (reference: save() result rows are DO_NOT_TRACK,
         # Pipeline.groovy:833-844; asserted by PipelineTest.testSave).
-        # File saves capture the count from an Observation attached to
+        # File saves capture the counts from an Observation attached to
         # the write itself (no second execution of the parent plan) into
-        # _loaded_override; the Sink SPI path (arbitrary user attach())
-        # keeps a DataFrame to count at go(). NEITHER survives _next —
+        # _loaded_override and _precounted; the Sink SPI path (arbitrary
+        # user attach()) keeps the parent's open segment (one of
+        # _closed) whose live rows go() counts. NEITHER survives _next —
         # any operator applied to a result pipeline counts its own rows
         # (p.save(x).filter(...).go() reports the filtered count, not
         # the parent's).
-        self._count_source: DataFrame | None = None
+        self._count_source: _Segment | None = None
         self._loaded_override: int | None = None
         # Driver-measured size estimate for collection-backed sources
         # (bytes). Catalyst reports the unknown sentinel for RDD-backed
@@ -1389,18 +1505,35 @@ class Pipeline:
         # side falls to AQE.
         self._size_hint_bytes: int | None = None
         # (step name, float accumulator) per Python-closure step — go()
-        # snapshots these into LoadStatistic.step_timings (approximate;
-        # see LoadStatistic docstring)
+        # snapshots these into LoadStatistic.step_timings (see the
+        # LoadStatistic docstring); _step_ms holds the closure time a
+        # sink's write already spent
         self._step_timers: list[tuple[str, Any]] = []
+        self._step_ms: dict[str, float] = {}
 
     # ------------------------------------------------------------------ infra
 
     def _next(
         self,
         df: DataFrame,
-        rejects: list[DataFrame] | None = None,
+        rejects: list[Callable[[], DataFrame]] | None = None,
         keep_size_hint: bool = False,
+        *,
+        acct: Callable[[DataFrame], DataFrame] | None = None,
+        tags: Iterable[tuple[str, str]] = (),
+        segment: _Segment | None = None,
+        absorb: Iterable["Pipeline"] = (),
     ) -> "Pipeline":
+        """The pipeline after one operator.
+
+        Accounting: a row-local step passes ``acct``, its transform of
+        the open segment's plan (``tags`` names its new tag codes, which
+        start at ``len(self._acct.tags)``). Returning ``self.df``
+        unchanged keeps the segment as it is. Any other operator starts
+        a new segment — ``segment`` when given (an operator that tags
+        its own rejects), else ``df`` with no row tagged — and the old
+        segment is closed, to be counted next to it. ``absorb`` adds
+        other pipelines' accounting (concat, exchange)."""
         out = Pipeline(
             df,
             self.name,
@@ -1408,6 +1541,18 @@ class Pipeline:
             {k: list(v) for k, v in self._hooks.items()},
         )
         out._step_timers = list(self._step_timers)
+        out._step_ms = self._step_ms
+        out._precounted = self._precounted
+        if segment is None and (acct is not None or df is self.df):
+            out._closed = self._closed
+            out._acct = self._acct if acct is None else self._acct.then(acct, tags)
+        else:
+            out._closed = self._closed + (self._acct,)
+            if segment is not None:
+                out._acct = segment
+        for p in absorb:
+            out._closed += p._closed + (p._acct,)
+            out._precounted = _merged_counts(out._precounted, p._precounted)
         if keep_size_hint:
             # The caller guarantees its kept output is no larger than its
             # input (row subset / column subset / value-shrinking cast),
@@ -1427,18 +1572,42 @@ class Pipeline:
         step: str,
         category: RejectionCategory,
         reason: str,
+        acct_keep: Callable[[], Column] | None = None,
+        by_name: bool = True,
     ) -> "Pipeline":
-        """Split plan into kept rows and a tagged reject branch.
+        """Keep the rows where ``keep`` holds; reject the rest.
 
-        The reject branch shares the scan subtree; Catalyst pushes the
-        negated predicate down independently, so the reject count at
-        ``go()`` reads only what it must (column-pruned, filter-pushed).
+        The kept plan filters; the accounting plan tags the live rows
+        that fail ``keep`` (``acct_keep()`` instead when the predicate
+        holds closures, which must skip rejected rows); the payload
+        branch, built on demand, filters on the negated predicate.
+        A null predicate rejects, like a false one. A predicate that
+        does not resolve by column name (``by_name=False``, see
+        :meth:`_resolves_by_name`) starts a new accounting segment: the
+        kept rows plus this step's rejects, tagged.
         """
-        kept = self.df.filter(keep)
-        rejected = tag_rejects(
-            self.df.filter(~F.coalesce(keep, F.lit(False))), category, reason, step
+        df, code = self.df, len(self._acct.tags)
+        kept = df.filter(keep)
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                df.filter(~F.coalesce(keep, F.lit(False))), category, reason, step
+            )
+
+        if not by_name:
+            segment = _split_segment(
+                kept, df.filter(~F.coalesce(keep, F.lit(False))), (category.value, step)
+            )
+            return self._next(kept, [rejected], keep_size_hint=True, segment=segment)
+
+        def acct(d: DataFrame) -> DataFrame:
+            pred = acct_keep() if acct_keep is not None else keep
+            return d.withColumn(TAG, _retag(~F.coalesce(pred, F.lit(False)), code))
+
+        return self._next(
+            kept, [rejected], keep_size_hint=True,
+            acct=acct, tags=[(category.value, step)],
         )
-        return self._next(kept, [rejected], keep_size_hint=True)
 
     @property
     def spark(self):
@@ -1447,6 +1616,32 @@ class Pipeline:
     @property
     def columns(self) -> list[str]:
         return [c for c in self.df.columns if c != ROW_ORDER]
+
+    def _map(
+        self, fn: Callable[[DataFrame], DataFrame], keep_size_hint: bool = False
+    ) -> "Pipeline":
+        """A row-local column transform that rejects nothing: ``fn`` is
+        applied to the kept plan now and to the accounting plan when it
+        is built, so ``fn`` must name columns, not hold Columns bound to
+        one DataFrame. Rows another step rejected pass through it too, so
+        ``fn`` must not raise on them: a user expression takes the form
+        ``F.when(_live(), expr)`` in the accounting plan instead."""
+        return self._next(fn(self.df), keep_size_hint=keep_size_hint, acct=fn)
+
+    def _resolves_by_name(self, *cols: Column) -> bool:
+        """Whether user Columns resolve by column name alone (``F.col``,
+        ``F.expr``, SQL strings), so a step can apply them to the
+        accounting plan too. A Column bound to one DataFrame
+        (``p.df["x"]``) does not; such a step starts a new accounting
+        segment instead. Probed on an empty frame of the same schema:
+        analysis only, no job."""
+        from pyspark.errors import AnalysisException
+
+        try:
+            self.spark.createDataFrame([], self.df.schema).select(*cols)
+        except AnalysisException:
+            return False
+        return True
 
     def with_row_order(self) -> "Pipeline":
         """Stamp a source-order column. Survives later shuffles because
@@ -1480,11 +1675,14 @@ class Pipeline:
 
     # ---------------------------------------------------------------- filters
 
-    def _condition(self, cond: Mapping[str, Any]) -> Column:
+    def _condition(self, cond: Mapping[str, Any], gated: bool = False) -> Column:
         """Build gratum filter(Map) semantics (Condition.groovy:13-60):
         literal => equality, collection => IN, regex => rlike (find),
-        callable => per-value predicate UDF. AND-composed.
+        callable => per-value predicate UDF. AND-composed. ``gated``
+        builds the accounting-plan form, whose closures skip rejected
+        rows.
         """
+        live = [_live()] if gated else []
         exprs: list[Column] = []
         for col, v in cond.items():
             if col == "*" and callable(v):
@@ -1493,11 +1691,12 @@ class Pipeline:
                 # (same boundary as _filter_rows) — a row-at-a-time
                 # F.udf here would pickle per row in the hot path.
                 exprs.append(
-                    _pandas_row_predicate(v)(
+                    _pandas_row_predicate(v, gated)(
                         F.struct(
                             *[F.col(c) for c in self.df.columns],
                             *_nan_flag_cols(self.df, self.df.columns),
-                        )
+                        ),
+                        *live,
                     )
                 )
                 continue
@@ -1515,15 +1714,16 @@ class Pipeline:
             elif callable(v) and is_float_col:
                 # null-vs-NaN exact for float columns (r12)
                 exprs.append(
-                    _pandas_float_value_predicate(v)(
+                    _pandas_float_value_predicate(v, gated)(
                         F.struct(
                             c.alias("v"),
                             F.coalesce(F.isnan(c), F.lit(False)).alias("n"),
-                        )
+                        ),
+                        *live,
                     )
                 )
             elif callable(v):
-                exprs.append(_pandas_value_predicate(v)(c))
+                exprs.append(_pandas_value_predicate(v, gated)(c, *live))
             elif isinstance(v, Column):
                 exprs.append(v)
             else:
@@ -1545,12 +1745,17 @@ class Pipeline:
         a mapping with gratum Condition semantics, or a row-level Python
         callable (slow path: Arrow-batched pandas UDF).
         """
+        acct_keep, user_cols = None, []
         if isinstance(condition, Mapping):
             pred = self._condition(condition)
             step = name or f"filter {dict(condition)}"
+            if any(callable(v) for v in condition.values()):
+                acct_keep = functools.partial(self._condition, condition, True)
+            user_cols = [v for v in condition.values() if isinstance(v, Column)]
         elif isinstance(condition, Column):
             pred = condition
             step = name or "filter(expr)"
+            user_cols = [condition]
         elif isinstance(condition, str):
             pred = F.expr(condition)
             step = name or f"filter({condition})"
@@ -1558,7 +1763,10 @@ class Pipeline:
             return self._filter_rows(condition, name or "filter(closure)")
         else:  # pragma: no cover
             raise TypeError(f"unsupported filter condition: {type(condition)}")
-        return self._split(pred, step, RejectionCategory.IGNORE_ROW, "filtered out")
+        return self._split(
+            pred, step, RejectionCategory.IGNORE_ROW, "filtered out", acct_keep,
+            by_name=not user_cols or self._resolves_by_name(*user_cols),
+        )
 
     def _filter_rows(self, fn: Callable[[dict], bool], step: str) -> "Pipeline":
         """Whole-row Python predicate via Arrow-batched pandas UDF.
@@ -1567,9 +1775,9 @@ class Pipeline:
         SCRIPT_ERROR, mirroring Step.execute (etl/Step.groovy:23-51)."""
         cols = self.df.columns
         timer = self.spark.sparkContext.accumulator(0.0)
+        rt = "keep boolean, err string"
 
-        @F.pandas_udf("keep boolean, err string")
-        def _pred(batch: pd.DataFrame) -> pd.DataFrame:
+        def _eval(batch: pd.DataFrame) -> pd.DataFrame:
             import time as _time
 
             _t0 = _time.perf_counter()
@@ -1585,24 +1793,42 @@ class Pipeline:
             timer.add((_time.perf_counter() - _t0) * 1000.0)
             return out
 
-        marked = self.df.withColumn(
-            "__p__",
-            _pred(F.struct(*cols, *_nan_flag_cols(self.df, cols))),
-        )
+        row = F.struct(*cols, *_nan_flag_cols(self.df, cols))
+        marked = self.df.withColumn("__p__", _batch_udf(_eval, rt)(row))
         kept = marked.filter(F.col("__p__.keep")).drop("__p__")
-        rejected = tag_rejects(
-            marked.filter(~F.col("__p__.keep") & F.col("__p__.err").isNull()).drop("__p__"),
-            RejectionCategory.IGNORE_ROW,
-            "filtered out",
-            step,
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                marked.filter(~F.col("__p__.keep") & F.col("__p__.err").isNull()).drop("__p__"),
+                RejectionCategory.IGNORE_ROW,
+                "filtered out",
+                step,
+            )
+
+        def errored() -> DataFrame:
+            return tag_rejects(
+                marked.filter(F.col("__p__.err").isNotNull()).drop("__p__"),
+                RejectionCategory.SCRIPT_ERROR,
+                "closure raised",
+                step,
+            )
+
+        code = len(self._acct.tags)
+
+        def acct(d: DataFrame) -> DataFrame:
+            p = d.withColumn("__p__", _batch_udf(_eval, rt, gated=True)(row, _live()))
+            tag = (
+                F.when(F.col(TAG).isNotNull(), F.col(TAG))
+                .when(F.col("__p__.err").isNotNull(), F.lit(code + 1))
+                .when(~F.col("__p__.keep"), F.lit(code))
+            )
+            return p.withColumn(TAG, tag).drop("__p__")
+
+        out = self._next(
+            kept, [rejected, errored], keep_size_hint=True, acct=acct,
+            tags=[(RejectionCategory.IGNORE_ROW.value, step),
+                  (RejectionCategory.SCRIPT_ERROR.value, step)],
         )
-        errored = tag_rejects(
-            marked.filter(F.col("__p__.err").isNotNull()).drop("__p__"),
-            RejectionCategory.SCRIPT_ERROR,
-            "closure raised",
-            step,
-        )
-        out = self._next(kept, [rejected, errored], keep_size_hint=True)
         out._step_timers.append((step, timer))
         return out
 
@@ -1618,13 +1844,13 @@ class Pipeline:
         """
         strings = {f.name for f in self.df.schema.fields if isinstance(f.dataType, StringType)}
         java_trim = r"^[\x00-\x20]+|[\x00-\x20]+$"
-        return self._next(
-            self.df.select(
+        return self._map(
+            lambda d: d.select(
                 *[
                     F.regexp_replace(F.col(c), java_trim, "").alias(c)
                     if c in strings
                     else F.col(c)
-                    for c in self.df.columns
+                    for c in d.columns
                 ]
             ),
             keep_size_hint=True,
@@ -1639,16 +1865,32 @@ class Pipeline:
         window (one shuffle on the key); when reject accounting is not
         needed, prefer ``drop_duplicates`` which lets AQE pre-aggregate.
         """
-        w = Window.partitionBy(*[F.col(c) for c in columns]).orderBy(self._order_col())
+        order = self._order_col()
+        w = Window.partitionBy(*[F.col(c) for c in columns]).orderBy(order)
         marked = self.df.withColumn("__rn__", F.row_number().over(w))
         kept = marked.filter(F.col("__rn__") == 1).drop("__rn__")
-        rejected = tag_rejects(
-            marked.filter(F.col("__rn__") > 1).drop("__rn__"),
-            RejectionCategory.IGNORE_ROW,
-            f"duplicate {','.join(columns)}",
-            f"unique({','.join(columns)})",
+        step = f"unique({','.join(columns)})"
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                marked.filter(F.col("__rn__") > 1).drop("__rn__"),
+                RejectionCategory.IGNORE_ROW,
+                f"duplicate {','.join(columns)}",
+                step,
+            )
+
+        code = len(self._acct.tags)
+
+        def acct(d: DataFrame) -> DataFrame:
+            # rejected rows sit in windows of their own: only a live row
+            # can be a key's first occurrence
+            live_w = Window.partitionBy(_live(), *[F.col(c) for c in columns]).orderBy(order)
+            return d.withColumn(TAG, _retag(F.row_number().over(live_w) > 1, code))
+
+        return self._next(
+            kept, [rejected], keep_size_hint=True, acct=acct,
+            tags=[(RejectionCategory.IGNORE_ROW.value, step)],
         )
-        return self._next(kept, [rejected], keep_size_hint=True)
 
     def drop_duplicates(self, *columns: str) -> "Pipeline":
         """Exact dedup without reject accounting — map-side partial dedup,
@@ -1679,13 +1921,19 @@ class Pipeline:
         kept = base.limit(n)
         if halt:
             return self._next(kept, keep_size_hint=True)
-        rejected = tag_rejects(
-            base.offset(n),
-            RejectionCategory.IGNORE_ROW,
-            f"row number > {n}",
-            f"limit({n})",
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                base.offset(n),
+                RejectionCategory.IGNORE_ROW,
+                f"row number > {n}",
+                f"limit({n})",
+            )
+
+        segment = _split_segment(
+            kept, base.offset(n), (RejectionCategory.IGNORE_ROW.value, f"limit({n})")
         )
-        return self._next(kept, [rejected], keep_size_hint=True)
+        return self._next(kept, [rejected], keep_size_hint=True, segment=segment)
 
     # ----------------------------------------------------- generic steps
 
@@ -1735,23 +1983,42 @@ class Pipeline:
             out_fields = list(_schema_fields(schema))
         out_names = [f.name for f in out_fields]
 
-        full = StructType(out_fields)
+        payload = list(out_fields)
         if has_order:
-            full = full.add(self.df.schema[ROW_ORDER])
-        full = full.add("__cat__", StringType()).add("__reason__", StringType())
-        full_names = [f.name for f in full.fields]
+            payload.append(self.df.schema[ROW_ORDER])
+        full = StructType(
+            payload
+            + [StructField("__cat__", StringType()), StructField("__reason__", StringType())]
+        )
+        # a rejected row carries nulls in the accounting plan
+        tagged = StructType(
+            [StructField(f.name, f.dataType, True) for f in payload]
+            + [StructField(TAG, IntegerType())]
+        )
         callback = fn  # local bind for serialization
         timer = self.spark.sparkContext.accumulator(0.0)
+        # the accounting plan's tag codes: one per category, from `code`
+        code = len(self._acct.tags)
+        categories = [c.value for c in RejectionCategory]
 
-        def _run(batches: Iterable[pd.DataFrame]):
+        def _run(batches: Iterable[pd.DataFrame], accounting: bool = False):
+            """Kept plan: every row gets (__cat__, __reason__), null when
+            the closure kept it. Accounting plan: rows arrive with the
+            tag column; a tagged row skips the closure and carries only
+            its tag, and a rejection sets the category's tag code."""
             import time as _time
 
             from .rejections import Rejection as _Rej
 
+            names = [f.name for f in (tagged if accounting else full).fields]
             for pdf in batches:
                 _t0 = _time.perf_counter()
                 out_rows = []
-                for r in pdf.to_dict("records"):
+                tags_in = pdf.pop(TAG) if accounting else None
+                for i, r in enumerate(pdf.to_dict("records")):
+                    if accounting and pd.notna(tags_in.iat[i]):
+                        out_rows.append({TAG: int(tags_in.iat[i])})
+                        continue
                     r = _na_to_none(r)
                     order_v = r.pop(ROW_ORDER, None)
                     orig = {k: r.get(k) for k in out_names}
@@ -1772,21 +2039,35 @@ class Pipeline:
                             row["__cat__"] = row["__reason__"] = None
                     if has_order:
                         row[ROW_ORDER] = order_v
+                    if accounting:
+                        cat = row.pop("__cat__")
+                        del row["__reason__"]
+                        row[TAG] = None if cat is None else code + categories.index(cat)
                     out_rows.append(row)
                 timer.add((_time.perf_counter() - _t0) * 1000.0)
                 # dtype=object: a plain float64 frame would fold None
                 # (null) and float('nan') (a value) together before the
                 # NaN-exact Arrow conversion could tell them apart
-                yield pd.DataFrame(out_rows, columns=full_names, dtype=object)
+                yield pd.DataFrame(out_rows, columns=names, dtype=object)
 
         marked = _map_in_pandas_exact(self.df, _run, full)
         kept = marked.filter(F.col("__cat__").isNull()).drop("__cat__", "__reason__")
-        rejected = (
-            marked.filter(F.col("__cat__").isNotNull())
-            .withColumnsRenamed({"__cat__": REJECT_CATEGORY, "__reason__": REJECT_REASON})
-            .withColumn(REJECT_STEP, F.lit(step))
+
+        def rejected() -> DataFrame:
+            return (
+                marked.filter(F.col("__cat__").isNotNull())
+                .withColumnsRenamed({"__cat__": REJECT_CATEGORY, "__reason__": REJECT_REASON})
+                .withColumn(REJECT_STEP, F.lit(step))
+            )
+
+        def acct(d: DataFrame) -> DataFrame:
+            return _map_in_pandas_exact(
+                d, functools.partial(_run, accounting=True), tagged
+            )
+
+        out = self._next(
+            kept, [rejected], acct=acct, tags=[(c, step) for c in categories]
         )
-        out = self._next(kept, [rejected])
         out._step_timers.append((step, timer))
         return out
 
@@ -1879,9 +2160,9 @@ class Pipeline:
             # failing the job (reference Step.execute, etl/Step.groovy:23-51)
             cols = self.df.columns
             rt = returnType.simpleString() if isinstance(returnType, DataType) else returnType
+            rt = f"value {rt}, err string"
 
-            @F.pandas_udf(f"value {rt}, err string")
-            def _field(batch: pd.DataFrame) -> pd.DataFrame:
+            def _eval(batch: pd.DataFrame) -> pd.DataFrame:
                 def one(r):
                     try:
                         return value(_restore_nan_cells(r.to_dict())), None
@@ -1892,29 +2173,48 @@ class Pipeline:
                 out.columns = ["value", "err"]
                 return out
 
-            marked = self.df.withColumn(
-                "__f__",
-                _field(F.struct(*cols, *_nan_flag_cols(self.df, cols))),
-            )
+            row = F.struct(*cols, *_nan_flag_cols(self.df, cols))
+            marked = self.df.withColumn("__f__", _batch_udf(_eval, rt)(row))
             kept = (
                 marked.filter(F.col("__f__.err").isNull())
                 .withColumn(name, F.col("__f__.value"))
                 .drop("__f__")
             )
-            errored = tag_rejects(
-                marked.filter(F.col("__f__.err").isNotNull()).drop("__f__"),
-                RejectionCategory.SCRIPT_ERROR,
-                "closure raised",
-                f"add_field({name})",
+            step = f"add_field({name})"
+
+            def errored() -> DataFrame:
+                return tag_rejects(
+                    marked.filter(F.col("__f__.err").isNotNull()).drop("__f__"),
+                    RejectionCategory.SCRIPT_ERROR,
+                    "closure raised",
+                    step,
+                )
+
+            code = len(self._acct.tags)
+
+            def acct(d: DataFrame) -> DataFrame:
+                f = d.withColumn("__f__", _batch_udf(_eval, rt, gated=True)(row, _live()))
+                return f.withColumns({
+                    TAG: _retag(F.col("__f__.err").isNotNull(), code),
+                    name: F.col("__f__.value"),
+                }).drop("__f__")
+
+            return self._next(
+                kept, [errored], acct=acct,
+                tags=[(RejectionCategory.SCRIPT_ERROR.value, step)],
             )
-            return self._next(kept, [errored])
         else:
             col = F.lit(value)
-        return self._next(self.df.withColumn(name, col))
+        if isinstance(value, Column) and not self._resolves_by_name(col):
+            return self._next(self.df.withColumn(name, col))  # new segment
+        return self._next(
+            self.df.withColumn(name, col),
+            acct=lambda d: d.withColumn(name, F.when(_live(), col)),
+        )
 
     def set_field(self, name: str, value: Any) -> "Pipeline":
         """Constant column (Pipeline.groovy:912-918)."""
-        return self._next(self.df.withColumn(name, F.lit(value)))
+        return self._map(lambda d: d.withColumn(name, F.lit(value)))
 
     def remove_field(
         self, name: str, condition: Column | str | None = None
@@ -1922,19 +2222,20 @@ class Pipeline:
         """Drop a column; with a condition, null it out on matching rows only
         (Pipeline.groovy:950-962)."""
         if condition is None:
-            return self._next(self.df.drop(name), keep_size_hint=True)
+            return self._map(lambda d: d.drop(name), keep_size_hint=True)
         cond = F.expr(condition) if isinstance(condition, str) else condition
+        nulled = F.when(cond, F.lit(None)).otherwise(F.col(name))
+        by_name = isinstance(condition, str) or self._resolves_by_name(cond)
         return self._next(
-            self.df.withColumn(
-                name, F.when(cond, F.lit(None)).otherwise(F.col(name))
-            ),
+            self.df.withColumn(name, nulled),
             keep_size_hint=True,
+            acct=(lambda d: d.withColumn(name, F.when(_live(), nulled))) if by_name else None,
         )
 
     def rename_fields(self, mapping: Mapping[str, str]) -> "Pipeline":
         """Rename src->dest preserving others (Pipeline.groovy:463-472)."""
-        return self._next(
-            self.df.withColumnsRenamed(dict(mapping)), keep_size_hint=True
+        return self._map(
+            lambda d: d.withColumnsRenamed(dict(mapping)), keep_size_hint=True
         )
 
     def clip(self, *columns: str) -> "Pipeline":
@@ -1942,7 +2243,10 @@ class Pipeline:
         Column pruning reaches the scan — at 100 TB this is the operator
         that turns a full-width read into a 2-column read."""
         keep = list(columns) + ([ROW_ORDER] if ROW_ORDER in self.df.columns else [])
-        return self._next(self.df.select(*keep), keep_size_hint=True)
+        return self._map(
+            lambda d: d.select(*keep, *([TAG] if TAG in d.columns else [])),
+            keep_size_hint=True,
+        )
 
     def _groovy_falsy(self, c: str) -> Column:
         """Groovy truthiness per type (the reference tests ``!row[key]``,
@@ -1970,7 +2274,7 @@ class Pipeline:
             c: F.when(self._groovy_falsy(c), F.lit(v)).otherwise(F.col(c))
             for c, v in defaults.items()
         }
-        return self._next(self.df.withColumns(updates))
+        return self._map(lambda d: d.withColumns(updates))
 
     def defaults_by(self, dest_src: Mapping[str, str]) -> "Pipeline":
         """Set dest column from src column when dest is Groovy-falsy
@@ -1980,12 +2284,12 @@ class Pipeline:
             dest: F.when(self._groovy_falsy(dest), F.col(src)).otherwise(F.col(dest))
             for dest, src in dest_src.items()
         }
-        return self._next(self.df.withColumns(updates))
+        return self._map(lambda d: d.withColumns(updates))
 
     def replace_all(self, column: str, pattern: str, replacement: str) -> "Pipeline":
         """Regex replace with $1-style groups (Pipeline.groovy:1146-1152)."""
-        return self._next(
-            self.df.withColumn(column, F.regexp_replace(F.col(column), pattern, replacement))
+        return self._map(
+            lambda d: d.withColumn(column, F.regexp_replace(F.col(column), pattern, replacement))
         )
 
     def replace_values(self, column: str, mapping: Mapping[str, Any]) -> "Pipeline":
@@ -2004,7 +2308,7 @@ class Pipeline:
             out = F.when(cond, F.lit(v)) if out is None else out.when(cond, F.lit(v))
         if out is None:
             return self._next(self.df)
-        return self._next(self.df.withColumn(column, out.otherwise(col)))
+        return self._map(lambda d: d.withColumn(column, out.otherwise(col)))
 
     # ------------------------------------------------------------- coercions
 
@@ -2023,13 +2327,29 @@ class Pipeline:
             .withColumn(column, F.col("__parsed__"))
             .drop("__parsed__")
         )
-        rejected = tag_rejects(
-            marked.filter(bad).drop("__parsed__"),
-            RejectionCategory.INVALID_FORMAT,
-            f"Could not parse value as {type_name}",
-            f"as{type_name}({column})",
+        step = f"as{type_name}({column})"
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                marked.filter(bad).drop("__parsed__"),
+                RejectionCategory.INVALID_FORMAT,
+                f"Could not parse value as {type_name}",
+                step,
+            )
+
+        code = len(self._acct.tags)
+
+        def acct(d: DataFrame) -> DataFrame:
+            return (
+                d.withColumn("__parsed__", parsed)
+                .withColumns({TAG: _retag(bad, code), column: F.col("__parsed__")})
+                .drop("__parsed__")
+            )
+
+        return self._next(
+            kept, [rejected], acct=acct,
+            tags=[(RejectionCategory.INVALID_FORMAT.value, step)],
         )
-        return self._next(kept, [rejected])
 
     def as_int(self, column: str) -> "Pipeline":
         """Parse as long (gratum Integer; long for 100 TB key spaces).
@@ -2093,7 +2413,7 @@ class Pipeline:
             )
             .otherwise(F.lower(c) == "true")  # Boolean.parseBoolean
         )
-        return self._next(self.df.withColumn(column, parsed))
+        return self._map(lambda d: d.withColumn(column, parsed))
 
     def as_date(
         self,
@@ -2643,13 +2963,13 @@ class Pipeline:
             for r in rows:
                 r.pop(ROW_ORDER, None)
         dfs: list[DataFrame] = []
-        extra_rejects: list[DataFrame] = []
+        subs: list[Pipeline] = []
         for r in rows:
             res = fn(r)
             if res is None:
                 continue
             if isinstance(res, Pipeline):
-                extra_rejects.extend(res._rejects)
+                subs.append(res)
                 dfs.append(res.df)
             else:
                 dfs.append(res)
@@ -2658,7 +2978,9 @@ class Pipeline:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
-        return self._next(out, extra_rejects)
+        return self._next(
+            out, [r for p in subs for r in p._rejects], absorb=subs
+        )
 
     # ------------------------------------------------------------- grouping
 
@@ -2817,14 +3139,25 @@ class Pipeline:
         if left:
             return self._next(joined.drop("__matched__"))
         kept = joined.filter(F.col("__matched__")).drop("__matched__")
-        rejected = tag_rejects(
-            joined.filter(F.col("__matched__").isNull())
-            .select(*self.df.columns),
-            RejectionCategory.IGNORE_ROW,
-            f"Could not join on {lkeys}",
-            f"join({lkeys})",
+        step, left_cols = f"join({lkeys})", self.df.columns
+
+        def rejected() -> DataFrame:
+            return tag_rejects(
+                joined.filter(F.col("__matched__").isNull()).select(*left_cols),
+                RejectionCategory.IGNORE_ROW,
+                f"Could not join on {lkeys}",
+                step,
+            )
+
+        # the join starts a new accounting segment: its own output, with
+        # the unmatched left rows tagged
+        segment = _Segment(
+            lambda: joined.withColumn(
+                TAG, F.when(F.col("__matched__").isNull(), F.lit(0)).cast("int")
+            ).drop("__matched__"),
+            ((RejectionCategory.IGNORE_ROW.value, step),),
         )
-        return self._next(kept, [rejected])
+        return self._next(kept, [rejected], segment=segment)
 
     def intersect(
         self, other: "Pipeline | DataFrame", on: str | Iterable[str] | Mapping[str, str]
@@ -2866,7 +3199,7 @@ class Pipeline:
         re-prefixed ("0:"/"1:" on the file field) so that ordering
         survives the union while within-side order is untouched."""
         right_df = other.df if isinstance(other, Pipeline) else other
-        rejects = other._rejects if isinstance(other, Pipeline) else []
+        absorb = [other] if isinstance(other, Pipeline) else []
         left_df = self.df
         if ROW_ORDER in left_df.columns and ROW_ORDER in right_df.columns:
             def _prefix(df: DataFrame, tag: str) -> DataFrame:
@@ -2881,7 +3214,9 @@ class Pipeline:
             left_df = _prefix(left_df, "0:")
             right_df = _prefix(right_df, "1:")
         return self._next(
-            left_df.unionByName(right_df, allowMissingColumns=True), rejects
+            left_df.unionByName(right_df, allowMissingColumns=True),
+            [r for p in absorb for r in p._rejects],
+            absorb=absorb,
         )
 
     def branch(
@@ -2920,15 +3255,17 @@ class Pipeline:
     def on_rejection(self, configure: Callable[["Pipeline"], Any]) -> "Pipeline":
         """Attach processing to the rejections pipeline
         (Pipeline.groovy:166-199). Runs at go() time with a Pipeline over
-        the union of all reject branches (payload + rejectionCategory/
-        Reason/Step columns)."""
+        :meth:`rejections_df`, built then."""
         out = self._next(self.df)
         out._hooks["on_rejection"].append(configure)
         return out
 
     def rejections_df(self) -> DataFrame | None:
-        """The union of all reject branches as a DataFrame (lazy)."""
-        return union_rejects(self._rejects)
+        """The rejected rows, each with its values at the moment a step
+        rejected it plus the rejectionCategory/Reason/Step columns: the
+        union of every rejecting step's payload branch, built by this
+        call (a lazy plan; each branch re-runs the steps above it)."""
+        return union_rejects([build() for build in self._rejects])
 
     def persist(self) -> "Pipeline":
         return self._next(self.df.persist())
@@ -2936,43 +3273,20 @@ class Pipeline:
     def go(self) -> LoadStatistic:
         """Execute and return LoadStatistic (Pipeline.groovy:1333-1342).
 
-        SINGLE action: the kept stream (tagged ``__kept__``) and every
-        reject branch are projected down to (category, step) and unioned,
-        then one groupBy-count aggregate yields loaded + per-category×step
-        reject counts together. Each branch's subtree stays column-pruned
-        to its grouping tags (scans read nothing but what its own filters
-        need), and shared shuffle subtrees are deduplicated by Spark's
-        exchange reuse — this is the one-pass accounting design from
-        SURVEY §3.3 without a second scan of the kept rows for counting.
+        The counts come from the accounting plan (see
+        :mod:`gratum_spark.rejections`): one aggregate over its tag
+        column yields the loaded count and every category×step count,
+        and each row crosses the step chain once. On the result of a
+        file sink the write already produced them, so ``go()`` runs no
+        Spark job — unless a non-row-local operator closed an earlier
+        accounting segment, which the one aggregate then counts.
         """
         start = now_ms()
         self._run_deferred()
         # accumulators persist across actions — snapshot so a repeated
         # go() reports only THIS run's closure time
         timer_base = {id(acc): acc.value for _, acc in self._step_timers}
-        loaded = 0
-        rejections: dict[str, dict[str, int]] = {}
-        if self._loaded_override is not None:
-            # a file save already counted its written rows via Observation —
-            # don't execute anything again for the kept-row count
-            loaded = self._loaded_override
-            counts_df = None
-        else:
-            counted = self._count_source if self._count_source is not None else self.df
-            counts_df = counted.select(
-                F.lit("__kept__").alias(REJECT_CATEGORY), F.lit("").alias(REJECT_STEP)
-            )
-        for r in self._rejects:
-            tags = r.select(REJECT_CATEGORY, REJECT_STEP)
-            counts_df = tags if counts_df is None else counts_df.unionAll(tags)
-        if counts_df is not None:
-            for row in counts_df.groupBy(REJECT_CATEGORY, REJECT_STEP).count().collect():
-                if row[REJECT_CATEGORY] == "__kept__":
-                    loaded = row["count"]
-                else:
-                    rejections.setdefault(row[REJECT_CATEGORY], {})[row[REJECT_STEP]] = row[
-                        "count"
-                    ]
+        loaded, rejections = self._tally()
         if loaded == 0:
             from .rejections import MAX_ERROR_THRESHOLD, PipelineAbortException
 
@@ -2983,23 +3297,55 @@ class Pipeline:
                     f"(threshold {MAX_ERROR_THRESHOLD})"
                 )
         self._report_progress()
-        rej = self.rejections_df()
         for side, configure in self._hooks["branches"]:
             configured = configure(side)
             if isinstance(configured, Pipeline):
                 configured.start()
-        if rej is not None:
-            for configure in self._hooks["on_rejection"]:
-                configure(Pipeline(rej, f"{self.name}-rejections"))
+        if self._hooks["on_rejection"]:
+            rej = self.rejections_df()
+            if rej is not None:
+                for configure in self._hooks["on_rejection"]:
+                    configure(Pipeline(rej, f"{self.name}-rejections"))
         for hook in self._hooks["after"]:
             hook()
-        step_timings: dict[str, float] = {}
+        step_timings = dict(self._step_ms)
         for step_name, acc in self._step_timers:
             delta = acc.value - timer_base[id(acc)]
             step_timings[step_name] = step_timings.get(step_name, 0.0) + delta
         return LoadStatistic(
             self.name, loaded, start, now_ms(), rejections, step_timings
         )
+
+    def _tally(self) -> tuple[int, dict[str, dict[str, int]]]:
+        """(loaded, rejections) from one aggregate over the accounting
+        segments still to count: the closed ones contribute their tagged
+        rows, and the segment whose live rows are this pipeline's output
+        its tags and its loaded count. Counts a sink already took are
+        added without running anything."""
+        rejections = _merged_counts(self._precounted)
+        live = self._count_source
+        # a closed segment without tags counts nothing
+        segments = [s for s in self._closed if s.tags or s is live]
+        if self._loaded_override is None and live is None:
+            live = self._acct
+            segments.append(live)
+        loaded = self._loaded_override or 0
+        if not segments:
+            return loaded, rejections
+        frames = []
+        for i, seg in enumerate(segments):
+            f = seg.build()
+            if seg is not live:
+                f = f.filter(F.col(TAG).isNotNull())
+            frames.append(f.select(F.lit(i).alias("__seg__"), F.col(TAG)))
+        counts = functools.reduce(DataFrame.unionAll, frames)
+        for row in counts.groupBy("__seg__", TAG).count().collect():
+            code = row[TAG]
+            if code is None:
+                loaded = row["count"]
+            else:
+                _add_count(rejections, *segments[row["__seg__"]].tags[code], row["count"])
+        return loaded, rejections
 
     @staticmethod
     def go_stats_script_errors(rejections: dict[str, dict[str, int]]) -> int:
@@ -3028,27 +3374,63 @@ class Pipeline:
         return df
 
     def _observed_for_save(self, columns: Iterable[str] | None = None):
-        """The outgoing write plan plus an Observation riding on it, so the
-        saved-row count is a byproduct of the write — go() on the result
-        pipeline never re-executes the parent plan just to count."""
+        """The outgoing write plan: the accounting plan, observed for
+        its live-row and per-tag counts, then filtered to its live rows.
+        The write itself thus yields the LoadStatistic, and go() on the
+        result pipeline re-executes nothing. Returns the plan and the
+        handle :meth:`_save_result` reads after the write."""
         from pyspark.sql import Observation
 
         obs = Observation()
-        return (
-            self._clean_df(columns).observe(obs, F.count(F.lit(1)).alias("rows")),
-            obs,
+        metrics = [F.count(F.when(_live(), 1)).alias("loaded")] + [
+            F.count(F.when(F.col(TAG) == code, 1)).alias(f"t{code}")
+            for code in range(len(self._acct.tags))
+        ]
+        df = (
+            self._acct.build().observe(obs, *metrics)
+            .filter(_live()).drop(TAG, ROW_ORDER)
         )
+        if columns:
+            df = df.select(*columns)
+        timers = {id(acc): acc.value for _, acc in self._step_timers}
+        return df, (obs, timers)
 
-    def _save_result(self, path: str, obs) -> "Pipeline":
-        result = self.spark.createDataFrame([(path,)], "filename string")
-        out = Pipeline(result, f"{self.name}-saved", self._rejects, self._hooks)
+    def _sink_result(self, result: DataFrame, name: str) -> "Pipeline":
+        """The 1-row pipeline a sink returns. Its go() reports the
+        parent's counts: the live rows of the parent's open segment
+        (counted at go()), unless a file write already counted them."""
+        out = Pipeline(result, name, self._rejects, self._hooks)
+        out._precounted, out._step_ms = self._precounted, self._step_ms
+        out._closed = self._closed
         if self._loaded_override is not None:
             # chained saves keep reporting the ORIGINAL parent's count
             out._loaded_override = self._loaded_override
         elif self._count_source is not None:
             out._count_source = self._count_source
         else:
-            out._loaded_override = int(obs.get["rows"])
+            out._count_source = self._acct
+            out._closed += (self._acct,)
+        return out
+
+    def _save_result(self, path: str, handle) -> "Pipeline":
+        obs, timers = handle
+        result = self.spark.createDataFrame([(path,)], "filename string")
+        name = f"{self.name}-saved"
+        if self._loaded_override is not None or self._count_source is not None:
+            out = self._sink_result(result, name)  # a result saved again
+        else:
+            counts = obs.get
+            out = Pipeline(result, name, self._rejects, self._hooks)
+            out._closed = self._closed
+            out._loaded_override = int(counts["loaded"])
+            out._precounted = _merged_counts(self._precounted)
+            for code, (cat, step) in enumerate(self._acct.tags):
+                if counts[f"t{code}"]:
+                    _add_count(out._precounted, cat, step, int(counts[f"t{code}"]))
+        # the closure time the write spent reaches go() on the result
+        out._step_ms = dict(self._step_ms)
+        for step, acc in self._step_timers:
+            out._step_ms[step] = out._step_ms.get(step, 0.0) + acc.value - timers[id(acc)]
         return out
 
     def save(
@@ -3063,9 +3445,16 @@ class Pipeline:
         always-quoted fields). Returns a 1-row result pipeline {filename}
         like the reference (Pipeline.groovy:833-844).
 
+        One pass: the write runs the accounting plan (see
+        :meth:`_observed_for_save`) and keeps its live rows, so the
+        result's ``go()`` reports the loaded count, every
+        category×step count and the closures' step timings without
+        running another Spark job.
+
         Passing a :class:`gratum_spark.sinks.Sink` instead of a path uses
         the pluggable Sink SPI (sink/Sink.groovy:5-13): attach → close →
-        result-row pipeline."""
+        result-row pipeline. The sink consumes the kept plan, and the
+        result's ``go()`` counts the accounting plan with one aggregate."""
         from .sinks import Sink as _Sink
 
         if isinstance(path, _Sink):
@@ -3075,15 +3464,9 @@ class Pipeline:
             payload = sink.result() or {"sink": sink.name}
             result = self.spark.createDataFrame([tuple(payload.values())],
                                                 list(payload.keys()))
-            out = Pipeline(result, sink.name, self._rejects, self._hooks)
             # arbitrary user attach() — the consumed count isn't observable
-            # from out here, so go() counts the parent plan (documented cost)
-            out._loaded_override = self._loaded_override
-            if out._loaded_override is None:
-                out._count_source = (
-                    self._count_source if self._count_source is not None else self.df
-                )
-            return out
+            # from out here, so go() counts the parent's accounting plan
+            return self._sink_result(result, sink.name)
         df, obs = self._observed_for_save(columns)
         (
             df.write.mode("overwrite")
@@ -3191,18 +3574,26 @@ class Pipeline:
         parity; batched execution has no per-N-rows console moment."""
         from pyspark.sql import Observation
 
-        obs = Observation()
-        out = self._next(self.df.observe(obs, F.count(F.lit(1)).alias("rows")))
+        # every observation of this point, kept plan first; each build
+        # of the accounting plan adds one (an Observation fires once)
+        seen = [Observation()]
+
+        def acct(d: DataFrame) -> DataFrame:
+            seen.append(Observation())
+            return d.observe(seen[-1], F.count(F.when(_live(), 1)).alias("rows"))
+
+        out = self._next(
+            self.df.observe(seen[0], F.count(F.lit(1)).alias("rows")), acct=acct
+        )
         out._hooks.setdefault("progress", [])
-        out._hooks["progress"] = list(out._hooks["progress"]) + [obs]
+        out._hooks["progress"] = list(out._hooks["progress"]) + [seen]
         return out
 
     def _report_progress(self) -> None:
-        for obs in self._hooks.get("progress", []):
-            try:
-                print(f"[{self.name}] progress: {obs.get['rows']} rows")
-            except Exception:  # pragma: no cover - observation not reached
-                pass
+        for seen in self._hooks.get("progress", []):
+            rows = _progress_report(seen)
+            if rows is not None:
+                print(f"[{self.name}] progress: {rows} rows")
 
     def print_row(self, *columns: str, n: int = 20) -> "Pipeline":
         """Log selected columns (Pipeline.groovy:884-894)."""

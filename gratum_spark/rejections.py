@@ -8,13 +8,27 @@ secondary "rejections" pipeline carrying ``rejectionCategory``,
 (reference: src/main/groovy/gratum/etl/Rejection.groovy:9-22,
 RejectionCategory.groovy:9-17, LoadStatistic.groovy:12-163)
 
-Spark design: each rejecting operator *splits* the lazy plan — main
-continues as ``df.filter(pred)``, and ``df.filter(~pred)`` plus the
-rejection metadata columns is appended to the pipeline's reject list.
-Catalyst pushes the (negated) predicate to the scan on both branches, so
-at 100 TB each reject branch is an independent pushed-down scan rather
-than a driver-side re-iteration; counts are computed in one union-all
-aggregate action at ``go()`` time.
+Spark design — rejects as a tagged column. Besides its kept plan
+(``Pipeline.df``), a pipeline describes an *accounting plan*: the same
+scan carrying one extra int column, :data:`REJECT_TAG`, that stays null
+while a row is live. A row-local rejecting step sets the tag on the live
+rows it rejects — the code indexes that segment's (category, step)
+table — and a tagged row skips every later step, closures included, as
+gratum's ``__reject__`` row does (Pipeline.groovy:1384-1387). Each row
+therefore crosses the step chain once, and one aggregate over the tag
+column yields the loaded count and every category×step count together:
+a file sink writes ``accounting.observe(counts).filter(live)``, so the
+write itself produces the ``LoadStatistic`` and ``go()`` on its result
+runs no Spark job. Operators that are not row-local (joins, sorts,
+aggregates, limits, unions, ...) start a new accounting segment from
+their output; the segments before it are counted in the same aggregate.
+
+The accounting plan is built only when counts are asked for. So are the
+rejected-row *payloads* behind ``rejections_df()`` / ``on_rejection``:
+one lazily built plan branch per rejecting step, carrying each row's
+values at the moment it was rejected (e.g. the raw ``"12x"`` that
+``as_int`` refused) plus the three metadata columns. Callers that only
+read ``Pipeline.df`` pay for neither.
 """
 
 from __future__ import annotations
@@ -31,6 +45,9 @@ REJECT_CATEGORY = "rejectionCategory"
 REJECT_REASON = "rejectionReason"
 REJECT_STEP = "rejectionStep"
 REJECT_COLS = (REJECT_CATEGORY, REJECT_REASON, REJECT_STEP)
+# The accounting plan's tag column: null while the row is live, else an
+# int code into the accounting segment's (category, step) table.
+REJECT_TAG = "__reject__"
 
 
 class RejectionCategory(str, Enum):
@@ -81,7 +98,7 @@ def tag_rejects(
 
 
 def union_rejects(rejects: list[DataFrame]) -> DataFrame | None:
-    """Union all reject branches by name, tolerating differing payload schemas."""
+    """Union reject payload branches by name, tolerating differing payload schemas."""
     if not rejects:
         return None
     return _reduce(
@@ -95,11 +112,12 @@ class LoadStatistic:
 
     Mirrors gratum's LoadStatistic (LoadStatistic.groovy:12-163). Per-step
     wall timings exist only for Python-closure steps (add_step, closure
-    filters), measured executor-side via accumulators; expression-only
-    steps fuse into whole-stage codegen and have no separable time. A
-    step's reported ms is the SUM over every plan branch that executed it
-    (kept + reject branches may each run the step), so totals are
-    APPROXIMATE and can exceed the action's wall-clock.
+    filters), measured executor-side via accumulators over the action
+    that produced the counts (the sink's write, or ``go()``'s aggregate);
+    expression-only steps fuse into whole-stage codegen and have no
+    separable time. Each live row runs each closure once, but timings
+    are summed over executor tasks, so under parallelism they can exceed
+    the action's wall-clock.
     """
 
     name: str
@@ -169,6 +187,6 @@ class PipelineAbortException(RuntimeError):
     """Raised by go() when SCRIPT_ERROR counts exceed MAX_ERROR_THRESHOLD
     with zero loaded rows (util/PipelineAbortException.java:3-12).
 
-    Under lazy execution the check is post-hoc (after the single counting
+    Under lazy execution the check is post-hoc (after the counting
     action) rather than mid-stream; the contract — a fully-broken step
     never reports success — is preserved."""

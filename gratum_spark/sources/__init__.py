@@ -929,4 +929,6 @@ def concat(*pipelines: Pipeline) -> Pipeline:
         [p.df for p in pipelines],
     )
     rejects = [r for p in pipelines for r in p._rejects]
-    return Pipeline(df, "concat", rejects)
+    out = Pipeline(df, "concat", rejects)
+    # each input's reject accounting joins the union's (same df: no new segment)
+    return out._next(df, absorb=pipelines)

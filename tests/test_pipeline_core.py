@@ -1777,3 +1777,96 @@ def test_load_statistic_merge_without_step_timings(spark):
     s1.merge(s2, include_timings=False)
     assert s1.loaded == 50 + 25
     assert s1.step_timings == before  # timings NOT folded in
+
+
+def test_step_timings_reach_go_after_save(spark, tmp_path):
+    # a closure's time accrues during the write that produces the counts;
+    # go() on the saved result reports it without running anything
+    rows = [{"v": i} for i in range(200)]
+    p = sources.from_collection(spark, rows, name="timed").add_step(
+        "bump", lambda r: {**r, "w": r["v"] + 1}
+    )
+    stat = p.save(str(tmp_path / "timed_csv")).go()
+    assert stat.loaded == 200
+    assert stat.step_timings["bump"] > 0
+
+
+def test_rejected_rows_skip_later_closures(spark, tmp_path):
+    # gratum's short-circuit rule (Pipeline.groovy:1384-1387): a row that
+    # as_int rejected never reaches a later step. Each closure raises on
+    # such a row (raw == "bad"), and on a row whose values were blanked,
+    # so any leak would surface as a SCRIPT_ERROR count.
+    rows = [
+        {"id": i, "n": "bad" if i in (1, 4, 7) else str(i),
+         "raw": "bad" if i in (1, 4, 7) else str(i)}
+        for i in range(10)
+    ]
+
+    def guard(r):
+        if r["raw"] in ("bad", None):
+            raise AssertionError(f"closure got a rejected row: {r}")
+        return r
+
+    parsed = sources.from_collection(
+        spark, rows, "id long, n string, raw string", name="sc"
+    ).as_int("n")
+    p = (
+        parsed
+        .filter(lambda r: guard(r)["n"] % 2 == 0, name="even")
+        .add_field("n10", lambda r: guard(r)["n"] * 10, "long")
+        .add_step("checked", lambda r: {**guard(r), "ok": True})
+    )
+    expected = {"INVALID_FORMAT": {"asInt(n)": 3}, "IGNORE_ROW": {"even": 3}}
+    for stat in (p.go(), p.save(str(tmp_path / "sc_csv")).go()):
+        assert stat.rejections_for(RejectionCategory.SCRIPT_ERROR) == 0
+        assert stat.loaded == 4
+        assert stat.rejections == expected
+    # the payload branch keeps the value as_int refused
+    assert [r["n"] for r in parsed.rejections_df().collect()] == ["bad"] * 3
+
+
+def test_stamp_row_order_csv_reads_metadata_fields_first(spark, tmp_path, monkeypatch):
+    # CSV/JSON scans have a _metadata struct without row_index: the stamp
+    # must check its fields instead of referencing row_index and
+    # swallowing the analyzer's FIELD_NOT_FOUND (logged by Spark on every
+    # ordered CSV source)
+    from pyspark.errors import AnalysisException
+
+    from gratum_spark.pipeline import ROW_ORDER, stamp_row_order
+
+    f = tmp_path / "t.csv"
+    f.write_text("a,b\n1,x\n2,y\n3,z\n")
+    df = spark.read.option("header", True).csv(str(f))
+    swallowed = []
+    cls = type(df)
+    for meth in ("withColumn", "select"):
+        orig = getattr(cls, meth)
+
+        def spy(self, *a, _orig=orig, **k):
+            try:
+                return _orig(self, *a, **k)
+            except AnalysisException as e:
+                swallowed.append(e)
+                raise
+
+        monkeypatch.setattr(cls, meth, spy)
+    out = stamp_row_order(df)
+    monkeypatch.undo()
+    assert swallowed == []
+    assert out.schema[ROW_ORDER].dataType.simpleString() == "struct<f:string,i:bigint>"
+    got = [r[ROW_ORDER]["i"] for r in out.orderBy(ROW_ORDER).collect()]
+    assert got == sorted(got) and len(set(got)) == 3
+    assert [r["a"] for r in out.orderBy(ROW_ORDER).collect()] == ["1", "2", "3"]
+
+
+def test_bound_column_steps_still_count(spark, tmp_path):
+    # a Column bound to one DataFrame (p.df["n"]) cannot be applied to
+    # the accounting plan by name; the step starts a new accounting
+    # segment and every count stays exact
+    rows = [{"id": i, "n": str(i) if i % 4 else "x"} for i in range(12)]
+    p = sources.from_collection(spark, rows, "id long, n string", name="b").as_int("n")
+    q = p.filter(p.df["n"] > 2, name="gt2")
+    q = q.add_field("m", q.df["n"] + 1).remove_field("m", q.df["id"] > 100)
+    expected = {"INVALID_FORMAT": {"asInt(n)": 3}, "IGNORE_ROW": {"gt2": 2}}
+    for stat in (q.go(), q.save(str(tmp_path / "b_csv")).go()):
+        assert (stat.loaded, stat.rejections) == (7, expected)

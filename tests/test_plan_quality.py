@@ -955,3 +955,43 @@ def test_span_shingle_index_materialized_once(spark, sf):
     plan = plan_of(duplicate_spans(docs, "doc_id", "text", k=10))
     assert len(re.findall(r"\(\d+\) Generate", plan)) == 0
     assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) >= 2
+
+
+def test_save_then_go_job_budget(spark, sf, tmp_path):
+    """save() writes the accounting plan — kept rows plus the tag counts
+    observed on the way — so it launches no more Spark jobs than a noop
+    write of the kept plan alone, and go() on its result launches none:
+    the rejects are counted from the tag column in the write, not by
+    re-running a plan branch per rejecting step. Job counts are exact,
+    so timing noise cannot move this check."""
+    sc = spark.sparkContext
+    p = (
+        table(spark, sf, "customer")
+        .clip("c_custkey", "c_nationkey", "c_mktsegment")
+        .filter({"c_mktsegment": ["BUILDING", "MACHINERY"]}, name="segment")
+        .add_field("num", "IF(c_custkey % 5 = 0, 'x', CAST(c_custkey AS STRING))")
+        .as_int("num")
+        .filter(lambda r: r["c_custkey"] % 7 != 0, name="sevens")
+        .unique("c_nationkey")
+    )
+
+    def jobs(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    _, noop = jobs(
+        "budget_noop_write",
+        lambda: p.df.write.format("noop").mode("overwrite").save(),
+    )
+    result, saved = jobs("budget_save", lambda: p.save(str(tmp_path / "budget")))
+    stat, went = jobs("budget_go", result.go)
+    assert saved <= noop
+    assert went == 0
+    assert stat.loaded == p.df.count()
+    assert stat.loaded > 0
+    assert stat.rejections_for("IGNORE_ROW") > 0
+    assert stat.rejections_for("INVALID_FORMAT") > 0

@@ -289,3 +289,49 @@ def test_flatten_window_runs_match_sequential_model(spark, vals):
     key = lambda t: (t[0] is None, t[0] or "", t[1])  # noqa: E731
     got = sorted(((r["g"], r["n"]) for r in p.df.collect()), key=key)
     assert got == sorted(expected, key=key)
+
+
+# Row-local rejecting steps: (name, pipeline -> pipeline). Each rejects
+# some rows of the ROW strategy, and their step names are distinct.
+REJECTING_STEPS = {
+    "filter_map": lambda p: p.filter({"k": ["a", "b"]}, name="filter_map"),
+    "filter_expr": lambda p: p.filter("v IS NULL OR v <> 'x'", name="filter_expr"),
+    "filter_closure": lambda p: p.filter(
+        lambda r: (r["v"] or "") != "zz", name="filter_closure"
+    ),
+    "as_int": lambda p: p.as_int("n"),
+    "unique": lambda p: p.unique("k", "v"),
+    "add_step": lambda p: p.add_step(
+        "add_step",
+        lambda r: None if r["v"] == "0" else {**r, "v": (r["v"] or "") + "y"},
+    ),
+    "add_field_closure": lambda p: p.add_field(
+        "m", lambda r: 1 // (len(r["v"] or "") - 1), "long"
+    ),
+}
+
+
+@given(rows=ROWS, chain=st.lists(st.sampled_from(sorted(REJECTING_STEPS)), min_size=1, max_size=4))
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_tag_counts_agree_with_payload_branches(spark, tmp_path_factory, rows, chain):
+    """For any chain of row-local rejecting steps, the accounting plan's
+    tag counts — from go()'s aggregate and from the observed write —
+    equal the payload branches behind rejections_df(), grouped by
+    (category, step); and loaded is the kept plan's row count."""
+    p = _pipe(spark, rows)
+    for name in chain:
+        p = REJECTING_STEPS[name](p)
+    stat = p.go()
+    saved = p.save(str(tmp_path_factory.mktemp("chain") / "out")).go()
+    by_payload: dict[str, dict[str, int]] = {}
+    rej = p.rejections_df()
+    if rej is not None:
+        for r in rej.groupBy("rejectionCategory", "rejectionStep").count().collect():
+            by_payload.setdefault(r["rejectionCategory"], {})[r["rejectionStep"]] = r["count"]
+    assert stat.rejections == saved.rejections == by_payload
+    assert stat.loaded == saved.loaded == p.df.count()
+    assert stat.loaded + stat.rejected == len(rows)
