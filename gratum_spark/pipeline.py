@@ -1432,15 +1432,32 @@ def _merged_counts(*counts: dict) -> dict:
     return out
 
 
-def _progress_report(observations: list) -> "int | None":
-    """Rows seen by the most recent of a progress point's observations
-    whose action has finished (non-blocking: ``Observation.get`` waits
-    forever on an observation whose plan never ran)."""
-    for obs in reversed(observations):
-        jo = getattr(obs, "_jo", None)
-        if jo is not None and jo.future().isCompleted():
-            return obs.get["rows"]
-    return None
+def _observed_rows(obs) -> "int | None":
+    """The ``rows`` an Observation took, or None while its plan has not
+    run. ``Observation.get`` waits forever on a plan that never runs, so
+    this asks the JVM Observation's future first, through PySpark's
+    ``Observation._jo`` — present on classic PySpark 4 sessions, which
+    :meth:`Pipeline.progress` checks for up front."""
+    if obs is None or obs._jo is None or not obs._jo.future().isCompleted():
+        return None
+    return obs.get["rows"]
+
+
+def _pollable_observation():
+    """A fresh Observation that :func:`_observed_rows` can poll. Raises
+    where it cannot (PySpark 3's JVM Observation has no future; Spark
+    Connect's has no JVM object), instead of progress() printing
+    nothing."""
+    import pyspark
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    if int(pyspark.__version__.split(".")[0]) < 4 or not hasattr(obs, "_jo"):
+        raise NotImplementedError(
+            f"progress() needs a classic PySpark 4 session, not "
+            f"{type(obs).__name__} on PySpark {pyspark.__version__}"
+        )
+    return obs
 
 
 class Pipeline:
@@ -1482,17 +1499,14 @@ class Pipeline:
         self._ops: list[tuple[str, tuple, dict]] = []
         # post-save result pipelines report the PARENT's loaded count
         # (reference: save() result rows are DO_NOT_TRACK,
-        # Pipeline.groovy:833-844; asserted by PipelineTest.testSave).
-        # File saves capture the counts from an Observation attached to
-        # the write itself (no second execution of the parent plan) into
-        # _loaded_override and _precounted; the Sink SPI path (arbitrary
-        # user attach()) keeps the parent's open segment (one of
-        # _closed) whose live rows go() counts. NEITHER survives _next —
-        # any operator applied to a result pipeline counts its own rows
-        # (p.save(x).filter(...).go() reports the filtered count, not
-        # the parent's).
-        self._count_source: _Segment | None = None
-        self._loaded_override: int | None = None
+        # Pipeline.groovy:833-844; asserted by PipelineTest.testSave):
+        # the count a file write observed, or the parent's open segment
+        # (one of _closed) whose live rows go() counts — see _sink_result.
+        # None: this pipeline's own open segment. It does not survive
+        # _next — any operator applied to a result pipeline counts its
+        # own rows (p.save(x).filter(...).go() reports the filtered
+        # count, not the parent's).
+        self._loaded_from: _Segment | int | None = None
         # Driver-measured size estimate for collection-backed sources
         # (bytes). Catalyst reports the unknown sentinel for RDD-backed
         # plans (createDataFrame from Python rows = LogicalRDD), so
@@ -1573,7 +1587,7 @@ class Pipeline:
         category: RejectionCategory,
         reason: str,
         acct_keep: Callable[[], Column] | None = None,
-        by_name: bool = True,
+        extend: bool = True,
     ) -> "Pipeline":
         """Keep the rows where ``keep`` holds; reject the rest.
 
@@ -1582,8 +1596,8 @@ class Pipeline:
         holds closures, which must skip rejected rows); the payload
         branch, built on demand, filters on the negated predicate.
         A null predicate rejects, like a false one. A predicate that
-        does not resolve by column name (``by_name=False``, see
-        :meth:`_resolves_by_name`) starts a new accounting segment: the
+        cannot extend the open segment (``extend=False``, see
+        :meth:`_extends_segment`) starts a new accounting segment: the
         kept rows plus this step's rejects, tagged.
         """
         df, code = self.df, len(self._acct.tags)
@@ -1594,7 +1608,7 @@ class Pipeline:
                 df.filter(~F.coalesce(keep, F.lit(False))), category, reason, step
             )
 
-        if not by_name:
+        if not extend:
             segment = _split_segment(
                 kept, df.filter(~F.coalesce(keep, F.lit(False))), (category.value, step)
             )
@@ -1628,20 +1642,36 @@ class Pipeline:
         ``F.when(_live(), expr)`` in the accounting plan instead."""
         return self._next(fn(self.df), keep_size_hint=keep_size_hint, acct=fn)
 
-    def _resolves_by_name(self, *cols: Column) -> bool:
-        """Whether user Columns resolve by column name alone (``F.col``,
-        ``F.expr``, SQL strings), so a step can apply them to the
-        accounting plan too. A Column bound to one DataFrame
-        (``p.df["x"]``) does not; such a step starts a new accounting
-        segment instead. Probed on an empty frame of the same schema:
+    def _extends_segment(self, *cols: Column) -> bool:
+        """Whether a step with these user Columns can extend the open
+        accounting segment, where rejected rows pass through it too.
+        Two kinds of Column cannot, and such a step starts a new segment
+        from its kept rows instead:
+
+        * a Column bound to one DataFrame (``p.df["x"]``), which does not
+          resolve against the accounting plan by name;
+        * a Column holding a Python UDF: Spark evaluates a Python UDF on
+          every row, outside the ``F.when(live, ...)`` that guards the
+          step in the accounting plan, so the UDF would receive rows an
+          earlier step rejected (and fail on, say, their nulls).
+
+        Probed on an empty JVM-side relation of the same schema:
         analysis only, no job."""
         from pyspark.errors import AnalysisException
 
+        session = self.spark._jsparkSession
+        empty = DataFrame(
+            session.createDataFrame(
+                self.spark._jvm.java.util.ArrayList(),
+                session.parseDataType(self.df.schema.json()),
+            ),
+            self.spark,
+        )
         try:
-            self.spark.createDataFrame([], self.df.schema).select(*cols)
+            analyzed = empty.select(*cols)._jdf.queryExecution().analyzed()
         except AnalysisException:
             return False
-        return True
+        return 'expressions.PythonUDF"' not in analyzed.toJSON()
 
     def with_row_order(self) -> "Pipeline":
         """Stamp a source-order column. Survives later shuffles because
@@ -1759,13 +1789,14 @@ class Pipeline:
         elif isinstance(condition, str):
             pred = F.expr(condition)
             step = name or f"filter({condition})"
+            user_cols = [pred]
         elif callable(condition):
             return self._filter_rows(condition, name or "filter(closure)")
         else:  # pragma: no cover
             raise TypeError(f"unsupported filter condition: {type(condition)}")
         return self._split(
             pred, step, RejectionCategory.IGNORE_ROW, "filtered out", acct_keep,
-            by_name=not user_cols or self._resolves_by_name(*user_cols),
+            extend=not user_cols or self._extends_segment(*user_cols),
         )
 
     def _filter_rows(self, fn: Callable[[dict], bool], step: str) -> "Pipeline":
@@ -2205,7 +2236,7 @@ class Pipeline:
             )
         else:
             col = F.lit(value)
-        if isinstance(value, Column) and not self._resolves_by_name(col):
+        if isinstance(value, (Column, str)) and not self._extends_segment(col):
             return self._next(self.df.withColumn(name, col))  # new segment
         return self._next(
             self.df.withColumn(name, col),
@@ -2214,6 +2245,8 @@ class Pipeline:
 
     def set_field(self, name: str, value: Any) -> "Pipeline":
         """Constant column (Pipeline.groovy:912-918)."""
+        if isinstance(value, Column):  # an expression, not a constant
+            return self.add_field(name, value)
         return self._map(lambda d: d.withColumn(name, F.lit(value)))
 
     def remove_field(
@@ -2225,11 +2258,13 @@ class Pipeline:
             return self._map(lambda d: d.drop(name), keep_size_hint=True)
         cond = F.expr(condition) if isinstance(condition, str) else condition
         nulled = F.when(cond, F.lit(None)).otherwise(F.col(name))
-        by_name = isinstance(condition, str) or self._resolves_by_name(cond)
         return self._next(
             self.df.withColumn(name, nulled),
             keep_size_hint=True,
-            acct=(lambda d: d.withColumn(name, F.when(_live(), nulled))) if by_name else None,
+            acct=(
+                (lambda d: d.withColumn(name, F.when(_live(), nulled)))
+                if self._extends_segment(cond) else None
+            ),
         )
 
     def rename_fields(self, mapping: Mapping[str, str]) -> "Pipeline":
@@ -3323,13 +3358,12 @@ class Pipeline:
         its tags and its loaded count. Counts a sink already took are
         added without running anything."""
         rejections = _merged_counts(self._precounted)
-        live = self._count_source
+        live = self._acct if self._loaded_from is None else self._loaded_from
         # a closed segment without tags counts nothing
         segments = [s for s in self._closed if s.tags or s is live]
-        if self._loaded_override is None and live is None:
-            live = self._acct
+        if live is self._acct:
             segments.append(live)
-        loaded = self._loaded_override or 0
+        loaded = live if isinstance(live, int) else 0
         if not segments:
             return loaded, rejections
         frames = []
@@ -3395,38 +3429,39 @@ class Pipeline:
         timers = {id(acc): acc.value for _, acc in self._step_timers}
         return df, (obs, timers)
 
-    def _sink_result(self, result: DataFrame, name: str) -> "Pipeline":
+    def _sink_result(
+        self, result: DataFrame, name: str, observed: "tuple[int, dict] | None" = None
+    ) -> "Pipeline":
         """The 1-row pipeline a sink returns. Its go() reports the
-        parent's counts: the live rows of the parent's open segment
-        (counted at go()), unless a file write already counted them."""
+        parent's counts: ``observed`` — the (loaded, rejections) a file
+        write took from the parent's open segment — or else that
+        segment's live rows and tags, counted at go(). A result saved
+        again keeps reporting the original parent's counts."""
         out = Pipeline(result, name, self._rejects, self._hooks)
         out._precounted, out._step_ms = self._precounted, self._step_ms
         out._closed = self._closed
-        if self._loaded_override is not None:
-            # chained saves keep reporting the ORIGINAL parent's count
-            out._loaded_override = self._loaded_override
-        elif self._count_source is not None:
-            out._count_source = self._count_source
-        else:
-            out._count_source = self._acct
+        if self._loaded_from is not None:
+            out._loaded_from = self._loaded_from
+        elif observed is None:
+            out._loaded_from = self._acct
             out._closed += (self._acct,)
+        else:
+            out._loaded_from = observed[0]
+            out._precounted = _merged_counts(self._precounted, observed[1])
         return out
 
     def _save_result(self, path: str, handle) -> "Pipeline":
         obs, timers = handle
-        result = self.spark.createDataFrame([(path,)], "filename string")
-        name = f"{self.name}-saved"
-        if self._loaded_override is not None or self._count_source is not None:
-            out = self._sink_result(result, name)  # a result saved again
-        else:
-            counts = obs.get
-            out = Pipeline(result, name, self._rejects, self._hooks)
-            out._closed = self._closed
-            out._loaded_override = int(counts["loaded"])
-            out._precounted = _merged_counts(self._precounted)
-            for code, (cat, step) in enumerate(self._acct.tags):
-                if counts[f"t{code}"]:
-                    _add_count(out._precounted, cat, step, int(counts[f"t{code}"]))
+        counts = obs.get
+        tagged: dict[str, dict[str, int]] = {}
+        for code, (cat, step) in enumerate(self._acct.tags):
+            if counts[f"t{code}"]:
+                _add_count(tagged, cat, step, int(counts[f"t{code}"]))
+        out = self._sink_result(
+            self.spark.createDataFrame([(path,)], "filename string"),
+            f"{self.name}-saved",
+            (int(counts["loaded"]), tagged),
+        )
         # the closure time the write spent reaches go() on the result
         out._step_ms = dict(self._step_ms)
         for step, acc in self._step_timers:
@@ -3450,6 +3485,13 @@ class Pipeline:
         result's ``go()`` reports the loaded count, every
         category×step count and the closures' step timings without
         running another Spark job.
+
+        The cost of that pass: a filter in the accounting plan tags rows
+        instead of dropping them, so its predicate is not pushed into
+        the source scan. A save over a selective filter on a parquet
+        table reads the whole table, where writing ``self.df`` would
+        read only the row groups the filter can match. When ``go()``
+        follows, the rejected rows have to be read to be counted anyway.
 
         Passing a :class:`gratum_spark.sinks.Sink` instead of a path uses
         the pluggable Sink SPI (sink/Sink.groovy:5-13): attach → close →
@@ -3572,15 +3614,13 @@ class Pipeline:
         Python in the data path) and reports it when the action
         (``go()``/``start()``) completes. ``every`` is accepted for API
         parity; batched execution has no per-N-rows console moment."""
-        from pyspark.sql import Observation
-
-        # every observation of this point, kept plan first; each build
-        # of the accounting plan adds one (an Observation fires once)
-        seen = [Observation()]
+        # [kept plan, latest accounting-plan build] observations of this
+        # point; an Observation fires once, so each build takes a new one
+        seen = [_pollable_observation(), None]
 
         def acct(d: DataFrame) -> DataFrame:
-            seen.append(Observation())
-            return d.observe(seen[-1], F.count(F.when(_live(), 1)).alias("rows"))
+            seen[1] = _pollable_observation()
+            return d.observe(seen[1], F.count(F.when(_live(), 1)).alias("rows"))
 
         out = self._next(
             self.df.observe(seen[0], F.count(F.lit(1)).alias("rows")), acct=acct
@@ -3590,8 +3630,9 @@ class Pipeline:
         return out
 
     def _report_progress(self) -> None:
-        for seen in self._hooks.get("progress", []):
-            rows = _progress_report(seen)
+        for kept, latest in self._hooks.get("progress", []):
+            rows = _observed_rows(latest)
+            rows = _observed_rows(kept) if rows is None else rows
             if rows is not None:
                 print(f"[{self.name}] progress: {rows} rows")
 

@@ -1268,9 +1268,11 @@ FROM events GROUP BY event_type ORDER BY event_type
 
 def op_reject_accounting(spark, sf) -> DataFrame:
     """The rejection CHANNEL itself, driver-checked: a filter step
-    (IGNORE_ROW) and a failed coercion (INVALID_FORMAT) both route rows
-    into the rejects union with category/step tags; the query returns
-    per-(category, step) counts — SURVEY §3.3's one-pass design."""
+    (IGNORE_ROW) and a failed coercion (INVALID_FORMAT) both tag the
+    rows they reject; the query returns ``go()``'s per-(category, step)
+    counts, which come from the accounting plan's tag column — SURVEY
+    §3.3's one-pass design. Runs that one aggregate job while it builds
+    the (driver-side) result."""
     p = (
         T(spark, sf, "documents")
         .filter("n_chars >= 120", name="min-chars")
@@ -1282,12 +1284,14 @@ def op_reject_accounting(spark, sf) -> DataFrame:
         )
         .as_int("maybe_num")
     )
-    return (
-        p.rejections_df()
-        .groupBy("rejectionCategory", "rejectionStep")
-        .agg(F.count("*").alias("n"))
-        .orderBy("rejectionCategory")
-    )
+    counts = [
+        (category, step, n)
+        for category, by_step in p.go().rejections.items()
+        for step, n in by_step.items()
+    ]
+    return spark.createDataFrame(
+        counts, "rejectionCategory string, rejectionStep string, n long"
+    ).orderBy("rejectionCategory")
 
 
 ORACLE_REJECT_ACCOUNTING = """

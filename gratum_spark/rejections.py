@@ -22,6 +22,8 @@ write itself produces the ``LoadStatistic`` and ``go()`` on its result
 runs no Spark job. Operators that are not row-local (joins, sorts,
 aggregates, limits, unions, ...) start a new accounting segment from
 their output; the segments before it are counted in the same aggregate.
+So does a step whose user Column holds a Python UDF: Spark runs such a
+UDF on every row, rejected ones too, so it runs on the kept rows instead.
 
 The accounting plan is built only when counts are asked for. So are the
 rejected-row *payloads* behind ``rejections_df()`` / ``on_rejection``:

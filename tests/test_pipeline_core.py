@@ -1509,6 +1509,13 @@ def test_progress_reports_after_start(people, capsys):
     assert "progress: 2 rows" in capsys.readouterr().out
 
 
+def test_progress_reports_after_save_then_go(people, tmp_path, capsys):
+    # the write counts the rows; go() on its result runs no job and
+    # still reports them
+    people.filter({"gender": "male"}).progress().save(str(tmp_path / "pr")).go()
+    assert "progress: 2 rows" in capsys.readouterr().out
+
+
 def test_fill_down_by_decider_closure(spark):
     from gratum_spark import sources
 
@@ -1857,6 +1864,33 @@ def test_stamp_row_order_csv_reads_metadata_fields_first(spark, tmp_path, monkey
     got = [r[ROW_ORDER]["i"] for r in out.orderBy(ROW_ORDER).collect()]
     assert got == sorted(got) and len(set(got)) == 3
     assert [r["a"] for r in out.orderBy(ROW_ORDER).collect()] == ["1", "2", "3"]
+
+
+def test_python_udf_steps_never_see_rejected_rows(spark, tmp_path):
+    # Spark evaluates a Python UDF on every row, even under CASE WHEN, so
+    # a step whose user Column holds one starts a new accounting segment
+    # from the kept rows: each UDF below raises on the nulls that the
+    # first filter rejected, and no write or go() may fail on them
+    rows = [{"id": i, "name": None if i % 3 == 0 else f"n{i}"} for i in range(12)]
+    up = F.udf(lambda s: s.upper())
+    short = F.udf(lambda s: len(s) < 3, "boolean")
+    spark.udf.register("udf_steps_up", lambda s: s.upper())
+    p = (
+        sources.from_collection(spark, rows, "id long, name string", name="udf")
+        .filter("name IS NOT NULL", name="named")
+        .add_field("up", up("name"))
+        .add_field("up_sql", "udf_steps_up(name)")
+        .set_field("up_set", up("name"))
+        .remove_field("up_sql", up("name") == "N1")
+        .filter(short("name"), name="short")
+        .filter({"up": up("name") != "N2"}, name="not2")
+    )
+    expected = {"IGNORE_ROW": {"named": 4, "short": 2, "not2": 1}}
+    for stat in (p.go(), p.save(str(tmp_path / "udf_csv")).go()):
+        assert (stat.loaded, stat.rejections) == (5, expected)
+    got = sorted((r["up"], r["up_set"], r["up_sql"]) for r in p.df.collect())
+    assert got == [("N1", "N1", None), ("N4", "N4", "N4"), ("N5", "N5", "N5"),
+                   ("N7", "N7", "N7"), ("N8", "N8", "N8")]
 
 
 def test_bound_column_steps_still_count(spark, tmp_path):

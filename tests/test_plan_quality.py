@@ -995,3 +995,21 @@ def test_save_then_go_job_budget(spark, sf, tmp_path):
     assert stat.loaded > 0
     assert stat.rejections_for("IGNORE_ROW") > 0
     assert stat.rejections_for("INVALID_FORMAT") > 0
+
+
+def test_save_write_plan_keeps_filtered_rows_in_scan(spark, sf):
+    """Pins the known cost of one-pass save(): the write runs the
+    accounting plan, where a filter tags the rows it rejects instead of
+    dropping them, so its predicate does not reach the parquet scan and
+    a save over a selective filter reads the whole table. The kept plan
+    (``.df``) still pushes it. A change that gets the predicate back into
+    the write's scan should update this pin."""
+    p = table(spark, sf, "orders").filter(
+        "o_orderdate >= DATE'1995-01-01'", name="recent"
+    )
+    kept = plan_of(p.df)
+    written, _ = p._observed_for_save()
+    write = plan_of(written)
+    assert "PushedFilters: [" in kept
+    assert "GreaterThanOrEqual(o_orderdate" in kept
+    assert "PushedFilters" not in write
