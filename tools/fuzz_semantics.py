@@ -493,7 +493,9 @@ def fuzz_jsonl_roundtrip(spark, n: int, seed: int) -> list[str]:
                 spark, rows, "id long, a string, b string, num long", name="fzj"
             )
             p.jsonl(path)
-            back = {r["id"]: r for r in sources.json(spark, path).df.collect()}
+            # the sink writes one record per line; sources.json's default
+            # reads each file as one JSON document
+            back = {r["id"]: r for r in sources.jsonl(spark, path).df.collect()}
             if len(back) != len(rows):
                 failures.append(
                     f"jsonl trial={t} seed={seed}: {len(rows)} rows in, "
