@@ -289,6 +289,12 @@ def minhash_verified_pairs(
     hash-based plan oracle-checkable — while scaling as candidates,
     not pairs.
     Returns (a, b, jaccard) with exact jaccard >= threshold.
+
+    Building this plan launches Spark jobs: the candidate pair set is
+    cut with an eager ``localCheckpoint`` before the verify joins, so
+    the call runs the shingle, signature and band-join stages and keeps
+    the pairs in executor storage. The returned DataFrame is lazy from
+    there on.
     """
     if bands is None:
         bands, _ = derive_banding(n_hashes, threshold)
@@ -365,6 +371,11 @@ def minhash_verified_pairs_cross(
     are distinct; a doc appearing in both sides pairs with itself at
     jaccard 1.0, which is exactly what an incremental pipeline wants to
     catch).
+
+    Building this plan launches Spark jobs: the candidate pair set is
+    cut with an eager ``localCheckpoint``, so the call runs the
+    signature and band-join stages of both inputs and keeps the pairs in
+    executor storage. The returned DataFrame is lazy from there on.
     """
     if bands is None:
         bands, _ = derive_banding(n_hashes, threshold)

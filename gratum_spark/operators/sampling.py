@@ -276,7 +276,12 @@ def dsir_logratios(
     slice of my corpus" setup): the target model is then derived from
     the source feature table by a semi join on id (identical counts —
     per-doc bucket counts are exact partials), skipping the second
-    tokenize+hash pass over the target corpus entirely.
+    tokenize+hash pass over the target corpus entirely. It also needs
+    ids that are unique on both sides, and nothing checks it: a target
+    id that repeats is counted once instead of once per row (the semi
+    join keeps each source row once), and a source id shared by several
+    documents brings all of their grams into the target model. Either
+    silently changes every score; pass ``False`` when ids may repeat.
     """
     B = 16 ** prefix_len
     if n_partitions:

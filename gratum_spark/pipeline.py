@@ -8,9 +8,9 @@ mutate/reject rows; ``go()`` returns a LoadStatistic
 Spark design — wrap, don't re-implement:
   * a Pipeline holds a lazy ``DataFrame`` (the Catalyst logical plan IS
     the step chain), the recipe for its reject-accounting plan (a tag
-    column over the same scan, see :mod:`gratum_spark.rejections`), the
-    lazily built rejected-row payload branches, and deferred hooks
-    (branches, on_rejection, after).
+    column over the same scan, which also yields the rejected rows —
+    see :mod:`gratum_spark.rejections`), and deferred hooks (branches,
+    on_rejection, after).
   * every operator is a pure function DataFrame -> DataFrame plus reject
     bookkeeping; nothing executes until ``go()`` / ``start()`` / a sink.
   * Catalyst supplies what gratum never had: predicate pushdown, column
@@ -32,19 +32,21 @@ import re
 import time
 import warnings
 from collections.abc import Callable, Iterable, Mapping
-from dataclasses import dataclass
-from typing import Any
+from dataclasses import dataclass, replace
+from typing import Any, NamedTuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
     DataType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -58,9 +60,8 @@ from .rejections import (
     Rejection,
     RejectionCategory,
     now_ms,
-    tag_rejects,
-    union_rejects,
 )
+from .rejections import REJECT_PAYLOAD as PAYLOAD
 from .rejections import REJECT_TAG as TAG
 
 ROW_ORDER = "_row_order"
@@ -1390,46 +1391,114 @@ def _retag(rejects: Column, code: int) -> Column:
     return F.when(F.col(TAG).isNotNull(), F.col(TAG)).when(rejects, F.lit(code))
 
 
-def _untagged(df: DataFrame) -> DataFrame:
+def _untagged(df: DataFrame, payload: bool = False) -> DataFrame:
+    """``df`` as the root of an accounting segment: no row tagged, and,
+    in a payload build (see :class:`_Segment`), no payload yet."""
+    if payload:
+        df = df.withColumn(PAYLOAD, F.lit(None).cast("variant"))
     return df.withColumn(TAG, F.lit(None).cast("int"))
 
 
-@dataclass(frozen=True)
-class _Segment:
-    """One accounting segment. ``build()`` returns a fresh plan with the
-    pipeline's columns plus the tag column; ``tags[code]`` is the
-    (category, step) that tag code stands for. Row-local steps extend
-    the open segment (:meth:`then`); other operators start a new one
-    from their output, and the old one is counted alongside it."""
+# the atomic types a VARIANT can hold, by DataType.typeName()
+_VARIANT_ATOMS = {
+    "boolean", "byte", "short", "integer", "long", "float", "double", "decimal",
+    "string", "char", "varchar", "binary", "date", "timestamp", "timestamp_ntz", "variant",
+}
 
-    build: Callable[[], DataFrame]
-    tags: tuple[tuple[str, str], ...] = ()
+
+def _payload_type(dt: DataType) -> DataType:
+    """The type a column keeps inside a payload: its own, or string when
+    a VARIANT cannot hold it at some depth (null, time, interval, UDT, a
+    map with non-string keys): such a column is kept in its string form."""
+    if isinstance(dt, StructType):
+        ok = all(_payload_type(f.dataType) is f.dataType for f in dt.fields)
+    elif isinstance(dt, ArrayType):
+        ok = _payload_type(dt.elementType) is dt.elementType
+    elif isinstance(dt, MapType):
+        ok = isinstance(dt.keyType, StringType) and _payload_type(dt.valueType) is dt.valueType
+    else:
+        ok = dt.typeName() in _VARIANT_ATOMS
+    return dt if ok else StringType()
+
+
+def _tagged(
+    d: DataFrame,
+    code: int,
+    tag: Column | None = None,
+    cols: Iterable[str] | None = None,
+    reason: Column | None = None,
+) -> DataFrame:
+    """``d`` after a step that tags rows with the codes from ``code`` on:
+    its tag column set to ``tag`` (None: the step set it already) and,
+    in a payload build, the payload of the rows it newly tagged set to
+    their values in ``cols`` (default: ``d``'s own columns), plus
+    ``reason`` when each row carries its own."""
+    if tag is not None:
+        d = d.withColumn(TAG, tag)
+    if PAYLOAD not in d.columns:
+        return d
+    types = {f.name: f.dataType for f in d.schema.fields}
+
+    def ref(c: str) -> Column:  # quoted: a name may hold dots
+        col = F.col("`" + c.replace("`", "``") + "`")
+        return col if _payload_type(types[c]) is types[c] else col.cast("string").alias(c)
+
+    row = [ref(c) for c in (d.columns if cols is None else cols) if c not in (TAG, PAYLOAD, ROW_ORDER)]
+    if reason is not None:
+        row.append(reason.alias(REJECT_REASON))
+    new = F.col(TAG) >= code
+    return d.withColumn(
+        PAYLOAD, F.when(new, F.to_variant_object(F.struct(*row))).otherwise(F.col(PAYLOAD))
+    )
+
+
+class _Tag(NamedTuple):
+    """What one tag code of an accounting segment stands for. ``row`` is
+    a plan with the rejected row's columns (only its schema is read);
+    ``reason`` None means each row carries its own in its payload."""
+
+    category: str
+    step: str
+    reason: str | None
+    row: DataFrame
+
+
+@dataclass(frozen=True, eq=False)
+class _Segment:
+    """One accounting segment. ``build(payload=False)`` returns a fresh
+    plan with the pipeline's columns plus the tag column — and, when
+    ``payload`` is set, the payload column too (see
+    :func:`_tagged`); ``tags[code]`` is what a tag code stands
+    for. Row-local steps extend the open segment (:meth:`then`); other
+    operators start a new one from their output, and the old one is
+    counted alongside it. ``counts`` holds the rows per tag code that a
+    file write already observed, so it is not counted again."""
+
+    build: Callable[..., DataFrame]
+    tags: tuple[_Tag, ...] = ()
+    counts: dict | None = None
 
     def then(self, step: Callable[[DataFrame], DataFrame], tags=()) -> "_Segment":
-        return _Segment(lambda: step(self.build()), self.tags + tuple(tags))
+        return _Segment(
+            lambda payload=False: step(self.build(payload)), self.tags + tuple(tags)
+        )
 
 
-def _split_segment(kept: DataFrame, rejected: DataFrame, tag: tuple[str, str]) -> _Segment:
+def _split_segment(kept: DataFrame, rejected: DataFrame, tag: _Tag) -> _Segment:
     """A new accounting segment from a step's kept rows and its rejected
     rows, the latter tagged ``tag`` — for a rejecting step that cannot
     extend the open segment. Reads the step's input twice."""
-    return _Segment(
-        lambda: _untagged(kept).unionByName(rejected.withColumn(TAG, F.lit(0))), (tag,)
-    )
+
+    def build(payload: bool = False) -> DataFrame:
+        rej = _tagged(_untagged(rejected, payload), 0, F.lit(0))
+        return _untagged(kept, payload).unionByName(rej)
+
+    return _Segment(build, (tag,))
 
 
 def _add_count(counts: dict, category: str, step: str, n: int) -> None:
     by_step = counts.setdefault(category, {})
     by_step[step] = by_step.get(step, 0) + n
-
-
-def _merged_counts(*counts: dict) -> dict:
-    out: dict[str, dict[str, int]] = {}
-    for c in counts:
-        for cat, by_step in c.items():
-            for step, n in by_step.items():
-                _add_count(out, cat, step, n)
-    return out
 
 
 def _observed_rows(obs) -> "int | None":
@@ -1471,21 +1540,15 @@ class Pipeline:
         self,
         df: DataFrame,
         name: str = "pipeline",
-        rejects: list[Callable[[], DataFrame]] | None = None,
         hooks: dict | None = None,
     ) -> None:
         self.df = df
         self.name = name
-        # rejected-row payload branches, one plan function per rejecting step,
-        # built only by rejections_df() / on_rejection
-        self._rejects = list(rejects or [])
         # reject accounting: the open segment (df plus a null tag column
-        # until a rejecting step extends it), the closed segments before
-        # the last non-row-local operator, and counts a sink's write
-        # already produced (see _save_result)
+        # until a rejecting step extends it), and the closed segments
+        # before the last non-row-local operator
         self._acct = _Segment(functools.partial(_untagged, df))
         self._closed: tuple[_Segment, ...] = ()
-        self._precounted: dict[str, dict[str, int]] = {}
         self._hooks = {
             "after": [],
             "on_rejection": [],
@@ -1530,11 +1593,10 @@ class Pipeline:
     def _next(
         self,
         df: DataFrame,
-        rejects: list[Callable[[], DataFrame]] | None = None,
         keep_size_hint: bool = False,
         *,
         acct: Callable[[DataFrame], DataFrame] | None = None,
-        tags: Iterable[tuple[str, str]] = (),
+        tags: Iterable[_Tag] = (),
         segment: _Segment | None = None,
         absorb: Iterable["Pipeline"] = (),
     ) -> "Pipeline":
@@ -1548,15 +1610,9 @@ class Pipeline:
         its own rejects), else ``df`` with no row tagged — and the old
         segment is closed, to be counted next to it. ``absorb`` adds
         other pipelines' accounting (concat, exchange)."""
-        out = Pipeline(
-            df,
-            self.name,
-            self._rejects + list(rejects or []),
-            {k: list(v) for k, v in self._hooks.items()},
-        )
+        out = Pipeline(df, self.name, {k: list(v) for k, v in self._hooks.items()})
         out._step_timers = list(self._step_timers)
         out._step_ms = self._step_ms
-        out._precounted = self._precounted
         if segment is None and (acct is not None or df is self.df):
             out._closed = self._closed
             out._acct = self._acct if acct is None else self._acct.then(acct, tags)
@@ -1566,7 +1622,6 @@ class Pipeline:
                 out._acct = segment
         for p in absorb:
             out._closed += p._closed + (p._acct,)
-            out._precounted = _merged_counts(out._precounted, p._precounted)
         if keep_size_hint:
             # The caller guarantees its kept output is no larger than its
             # input (row subset / column subset / value-shrinking cast),
@@ -1593,35 +1648,24 @@ class Pipeline:
 
         The kept plan filters; the accounting plan tags the live rows
         that fail ``keep`` (``acct_keep()`` instead when the predicate
-        holds closures, which must skip rejected rows); the payload
-        branch, built on demand, filters on the negated predicate.
-        A null predicate rejects, like a false one. A predicate that
-        cannot extend the open segment (``extend=False``, see
-        :meth:`_extends_segment`) starts a new accounting segment: the
-        kept rows plus this step's rejects, tagged.
+        holds closures, which must skip rejected rows). A null predicate
+        rejects, like a false one. A predicate that cannot extend the
+        open segment (``extend=False``, see :meth:`_extends_segment`)
+        starts a new accounting segment: the kept rows plus this step's
+        rejects, tagged.
         """
         df, code = self.df, len(self._acct.tags)
         kept = df.filter(keep)
-
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                df.filter(~F.coalesce(keep, F.lit(False))), category, reason, step
-            )
-
+        tag = _Tag(category.value, step, reason, df)
         if not extend:
-            segment = _split_segment(
-                kept, df.filter(~F.coalesce(keep, F.lit(False))), (category.value, step)
-            )
-            return self._next(kept, [rejected], keep_size_hint=True, segment=segment)
+            segment = _split_segment(kept, df.filter(~F.coalesce(keep, F.lit(False))), tag)
+            return self._next(kept, keep_size_hint=True, segment=segment)
 
         def acct(d: DataFrame) -> DataFrame:
             pred = acct_keep() if acct_keep is not None else keep
-            return d.withColumn(TAG, _retag(~F.coalesce(pred, F.lit(False)), code))
+            return _tagged(d, code, _retag(~F.coalesce(pred, F.lit(False)), code))
 
-        return self._next(
-            kept, [rejected], keep_size_hint=True,
-            acct=acct, tags=[(category.value, step)],
-        )
+        return self._next(kept, keep_size_hint=True, acct=acct, tags=[tag])
 
     @property
     def spark(self):
@@ -1827,23 +1871,6 @@ class Pipeline:
         row = F.struct(*cols, *_nan_flag_cols(self.df, cols))
         marked = self.df.withColumn("__p__", _batch_udf(_eval, rt)(row))
         kept = marked.filter(F.col("__p__.keep")).drop("__p__")
-
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                marked.filter(~F.col("__p__.keep") & F.col("__p__.err").isNull()).drop("__p__"),
-                RejectionCategory.IGNORE_ROW,
-                "filtered out",
-                step,
-            )
-
-        def errored() -> DataFrame:
-            return tag_rejects(
-                marked.filter(F.col("__p__.err").isNotNull()).drop("__p__"),
-                RejectionCategory.SCRIPT_ERROR,
-                "closure raised",
-                step,
-            )
-
         code = len(self._acct.tags)
 
         def acct(d: DataFrame) -> DataFrame:
@@ -1853,12 +1880,12 @@ class Pipeline:
                 .when(F.col("__p__.err").isNotNull(), F.lit(code + 1))
                 .when(~F.col("__p__.keep"), F.lit(code))
             )
-            return p.withColumn(TAG, tag).drop("__p__")
+            return _tagged(p, code, tag, d.columns).drop("__p__")
 
         out = self._next(
-            kept, [rejected, errored], keep_size_hint=True, acct=acct,
-            tags=[(RejectionCategory.IGNORE_ROW.value, step),
-                  (RejectionCategory.SCRIPT_ERROR.value, step)],
+            kept, keep_size_hint=True, acct=acct,
+            tags=[_Tag(RejectionCategory.IGNORE_ROW.value, step, "filtered out", self.df),
+                  _Tag(RejectionCategory.SCRIPT_ERROR.value, step, "closure raised", self.df)],
         )
         out._step_timers.append((step, timer))
         return out
@@ -1901,26 +1928,18 @@ class Pipeline:
         marked = self.df.withColumn("__rn__", F.row_number().over(w))
         kept = marked.filter(F.col("__rn__") == 1).drop("__rn__")
         step = f"unique({','.join(columns)})"
-
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                marked.filter(F.col("__rn__") > 1).drop("__rn__"),
-                RejectionCategory.IGNORE_ROW,
-                f"duplicate {','.join(columns)}",
-                step,
-            )
-
         code = len(self._acct.tags)
 
         def acct(d: DataFrame) -> DataFrame:
             # rejected rows sit in windows of their own: only a live row
             # can be a key's first occurrence
             live_w = Window.partitionBy(_live(), *[F.col(c) for c in columns]).orderBy(order)
-            return d.withColumn(TAG, _retag(F.row_number().over(live_w) > 1, code))
+            return _tagged(d, code, _retag(F.row_number().over(live_w) > 1, code))
 
         return self._next(
-            kept, [rejected], keep_size_hint=True, acct=acct,
-            tags=[(RejectionCategory.IGNORE_ROW.value, step)],
+            kept, keep_size_hint=True, acct=acct,
+            tags=[_Tag(RejectionCategory.IGNORE_ROW.value, step,
+                       f"duplicate {','.join(columns)}", self.df)],
         )
 
     def drop_duplicates(self, *columns: str) -> "Pipeline":
@@ -1952,19 +1971,9 @@ class Pipeline:
         kept = base.limit(n)
         if halt:
             return self._next(kept, keep_size_hint=True)
-
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                base.offset(n),
-                RejectionCategory.IGNORE_ROW,
-                f"row number > {n}",
-                f"limit({n})",
-            )
-
-        segment = _split_segment(
-            kept, base.offset(n), (RejectionCategory.IGNORE_ROW.value, f"limit({n})")
-        )
-        return self._next(kept, [rejected], keep_size_hint=True, segment=segment)
+        tag = _Tag(RejectionCategory.IGNORE_ROW.value, f"limit({n})", f"row number > {n}", base)
+        segment = _split_segment(kept, base.offset(n), tag)
+        return self._next(kept, keep_size_hint=True, segment=segment)
 
     # ----------------------------------------------------- generic steps
 
@@ -2014,16 +2023,14 @@ class Pipeline:
             out_fields = list(_schema_fields(schema))
         out_names = [f.name for f in out_fields]
 
-        payload = list(out_fields)
+        row_fields = list(out_fields)
         if has_order:
-            payload.append(self.df.schema[ROW_ORDER])
-        full = StructType(
-            payload
-            + [StructField("__cat__", StringType()), StructField("__reason__", StringType())]
-        )
+            row_fields.append(self.df.schema[ROW_ORDER])
+        reason = StructField("__reason__", StringType())
+        full = StructType(row_fields + [StructField("__cat__", StringType()), reason])
         # a rejected row carries nulls in the accounting plan
         tagged = StructType(
-            [StructField(f.name, f.dataType, True) for f in payload]
+            [StructField(f.name, f.dataType, True) for f in row_fields]
             + [StructField(TAG, IntegerType())]
         )
         callback = fn  # local bind for serialization
@@ -2032,23 +2039,28 @@ class Pipeline:
         code = len(self._acct.tags)
         categories = [c.value for c in RejectionCategory]
 
-        def _run(batches: Iterable[pd.DataFrame], accounting: bool = False):
+        def _run(batches: Iterable[pd.DataFrame], schema: StructType = full):
             """Kept plan: every row gets (__cat__, __reason__), null when
             the closure kept it. Accounting plan: rows arrive with the
             tag column; a tagged row skips the closure and carries only
-            its tag, and a rejection sets the category's tag code."""
+            its tag (and its payload, in a payload build), and a
+            rejection sets the category's tag code and, in a payload
+            build, keeps its reason."""
             import time as _time
 
             from .rejections import Rejection as _Rej
 
-            names = [f.name for f in (tagged if accounting else full).fields]
+            names = schema.fieldNames()
+            accounting = TAG in names
             for pdf in batches:
                 _t0 = _time.perf_counter()
                 out_rows = []
                 tags_in = pdf.pop(TAG) if accounting else None
+                carried = pdf.pop(PAYLOAD) if PAYLOAD in pdf.columns else None
                 for i, r in enumerate(pdf.to_dict("records")):
                     if accounting and pd.notna(tags_in.iat[i]):
-                        out_rows.append({TAG: int(tags_in.iat[i])})
+                        out_rows.append({TAG: int(tags_in.iat[i]),
+                                         PAYLOAD: carried.iat[i] if carried is not None else None})
                         continue
                     r = _na_to_none(r)
                     order_v = r.pop(ROW_ORDER, None)
@@ -2072,32 +2084,29 @@ class Pipeline:
                         row[ROW_ORDER] = order_v
                     if accounting:
                         cat = row.pop("__cat__")
-                        del row["__reason__"]
                         row[TAG] = None if cat is None else code + categories.index(cat)
                     out_rows.append(row)
                 timer.add((_time.perf_counter() - _t0) * 1000.0)
                 # dtype=object: a plain float64 frame would fold None
                 # (null) and float('nan') (a value) together before the
-                # NaN-exact Arrow conversion could tell them apart
+                # NaN-exact Arrow conversion could tell them apart; keys
+                # outside ``names`` are dropped
                 yield pd.DataFrame(out_rows, columns=names, dtype=object)
 
         marked = _map_in_pandas_exact(self.df, _run, full)
         kept = marked.filter(F.col("__cat__").isNull()).drop("__cat__", "__reason__")
 
-        def rejected() -> DataFrame:
-            return (
-                marked.filter(F.col("__cat__").isNotNull())
-                .withColumnsRenamed({"__cat__": REJECT_CATEGORY, "__reason__": REJECT_REASON})
-                .withColumn(REJECT_STEP, F.lit(step))
-            )
-
         def acct(d: DataFrame) -> DataFrame:
-            return _map_in_pandas_exact(
-                d, functools.partial(_run, accounting=True), tagged
-            )
+            if PAYLOAD not in d.columns:
+                return _map_in_pandas_exact(d, functools.partial(_run, schema=tagged), tagged)
+            schema = StructType(tagged.fields + [d.schema[PAYLOAD], reason])
+            out = _map_in_pandas_exact(d, functools.partial(_run, schema=schema), schema)
+            return _tagged(
+                out, code, cols=[f.name for f in row_fields], reason=F.col("__reason__")
+            ).drop("__reason__")
 
         out = self._next(
-            kept, [rejected], acct=acct, tags=[(c, step) for c in categories]
+            kept, acct=acct, tags=[_Tag(c, step, None, kept) for c in categories]
         )
         out._step_timers.append((step, timer))
         return out
@@ -2212,27 +2221,16 @@ class Pipeline:
                 .drop("__f__")
             )
             step = f"add_field({name})"
-
-            def errored() -> DataFrame:
-                return tag_rejects(
-                    marked.filter(F.col("__f__.err").isNotNull()).drop("__f__"),
-                    RejectionCategory.SCRIPT_ERROR,
-                    "closure raised",
-                    step,
-                )
-
             code = len(self._acct.tags)
 
             def acct(d: DataFrame) -> DataFrame:
                 f = d.withColumn("__f__", _batch_udf(_eval, rt, gated=True)(row, _live()))
-                return f.withColumns({
-                    TAG: _retag(F.col("__f__.err").isNotNull(), code),
-                    name: F.col("__f__.value"),
-                }).drop("__f__")
+                f = _tagged(f, code, _retag(F.col("__f__.err").isNotNull(), code), d.columns)
+                return f.withColumn(name, F.col("__f__.value")).drop("__f__")
 
             return self._next(
-                kept, [errored], acct=acct,
-                tags=[(RejectionCategory.SCRIPT_ERROR.value, step)],
+                kept, acct=acct,
+                tags=[_Tag(RejectionCategory.SCRIPT_ERROR.value, step, "closure raised", self.df)],
             )
         else:
             col = F.lit(value)
@@ -2279,7 +2277,7 @@ class Pipeline:
         that turns a full-width read into a 2-column read."""
         keep = list(columns) + ([ROW_ORDER] if ROW_ORDER in self.df.columns else [])
         return self._map(
-            lambda d: d.select(*keep, *([TAG] if TAG in d.columns else [])),
+            lambda d: d.select(*keep, *[c for c in (TAG, PAYLOAD) if c in d.columns]),
             keep_size_hint=True,
         )
 
@@ -2363,27 +2361,16 @@ class Pipeline:
             .drop("__parsed__")
         )
         step = f"as{type_name}({column})"
-
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                marked.filter(bad).drop("__parsed__"),
-                RejectionCategory.INVALID_FORMAT,
-                f"Could not parse value as {type_name}",
-                step,
-            )
-
         code = len(self._acct.tags)
 
         def acct(d: DataFrame) -> DataFrame:
-            return (
-                d.withColumn("__parsed__", parsed)
-                .withColumns({TAG: _retag(bad, code), column: F.col("__parsed__")})
-                .drop("__parsed__")
-            )
+            p = _tagged(d.withColumn("__parsed__", parsed), code, _retag(bad, code), d.columns)
+            return p.withColumn(column, F.col("__parsed__")).drop("__parsed__")
 
         return self._next(
-            kept, [rejected], acct=acct,
-            tags=[(RejectionCategory.INVALID_FORMAT.value, step)],
+            kept, acct=acct,
+            tags=[_Tag(RejectionCategory.INVALID_FORMAT.value, step,
+                       f"Could not parse value as {type_name}", self.df)],
         )
 
     def as_int(self, column: str) -> "Pipeline":
@@ -2967,7 +2954,7 @@ class Pipeline:
 
         The closure may return a DataFrame or a Pipeline (the reference
         shape — closures return Sources/Pipelines); a returned Pipeline's
-        reject branches merge into this pipeline's accounting, and
+        accounting segments merge into this pipeline's accounting, and
         rejects from steps BEFORE the exchange are preserved — both
         counted in the final LoadStatistic (reference
         PipelineTest.groovy:1099-1123 testExchangeRejections).
@@ -3013,9 +3000,7 @@ class Pipeline:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
-        return self._next(
-            out, [r for p in subs for r in p._rejects], absorb=subs
-        )
+        return self._next(out, absorb=subs)
 
     # ------------------------------------------------------------- grouping
 
@@ -3174,25 +3159,17 @@ class Pipeline:
         if left:
             return self._next(joined.drop("__matched__"))
         kept = joined.filter(F.col("__matched__")).drop("__matched__")
-        step, left_cols = f"join({lkeys})", self.df.columns
+        left_cols = self.df.columns
 
-        def rejected() -> DataFrame:
-            return tag_rejects(
-                joined.filter(F.col("__matched__").isNull()).select(*left_cols),
-                RejectionCategory.IGNORE_ROW,
-                f"Could not join on {lkeys}",
-                step,
-            )
+        def build(payload: bool = False) -> DataFrame:
+            # the join starts a new accounting segment: its own output,
+            # with the unmatched left rows tagged
+            tag = F.when(F.col("__matched__").isNull(), F.lit(0)).cast("int")
+            return _tagged(_untagged(joined, payload), 0, tag, left_cols).drop("__matched__")
 
-        # the join starts a new accounting segment: its own output, with
-        # the unmatched left rows tagged
-        segment = _Segment(
-            lambda: joined.withColumn(
-                TAG, F.when(F.col("__matched__").isNull(), F.lit(0)).cast("int")
-            ).drop("__matched__"),
-            ((RejectionCategory.IGNORE_ROW.value, step),),
-        )
-        return self._next(kept, [rejected], segment=segment)
+        tag = _Tag(RejectionCategory.IGNORE_ROW.value, f"join({lkeys})",
+                   f"Could not join on {lkeys}", self.df)
+        return self._next(kept, segment=_Segment(build, (tag,)))
 
     def intersect(
         self, other: "Pipeline | DataFrame", on: str | Iterable[str] | Mapping[str, str]
@@ -3249,9 +3226,7 @@ class Pipeline:
             left_df = _prefix(left_df, "0:")
             right_df = _prefix(right_df, "1:")
         return self._next(
-            left_df.unionByName(right_df, allowMissingColumns=True),
-            [r for p in absorb for r in p._rejects],
-            absorb=absorb,
+            left_df.unionByName(right_df, allowMissingColumns=True), absorb=absorb
         )
 
     def branch(
@@ -3290,17 +3265,49 @@ class Pipeline:
     def on_rejection(self, configure: Callable[["Pipeline"], Any]) -> "Pipeline":
         """Attach processing to the rejections pipeline
         (Pipeline.groovy:166-199). Runs at go() time with a Pipeline over
-        :meth:`rejections_df`, built then."""
+        :meth:`rejections_df` — the rejected rows the accounting plan
+        carries — built then."""
         out = self._next(self.df)
         out._hooks["on_rejection"].append(configure)
         return out
 
     def rejections_df(self) -> DataFrame | None:
         """The rejected rows, each with its values at the moment a step
-        rejected it plus the rejectionCategory/Reason/Step columns: the
-        union of every rejecting step's payload branch, built by this
-        call (a lazy plan; each branch re-runs the steps above it)."""
-        return union_rejects([build() for build in self._rejects])
+        rejected it plus the rejectionCategory/Reason/Step columns, or
+        None when no step can reject. A lazy plan over the accounting
+        segments, built with their payload column (see
+        :mod:`gratum_spark.rejections`): it reads each source once per
+        segment. A column comes back at its kept-plan type when every
+        rejecting step saw it at one type; otherwise as a string (so
+        ``as_int``'s refused ``"12x"`` survives next to later steps'
+        parsed values)."""
+        frames, tags = [], []
+        for seg in (*self._closed, self._acct):
+            if seg.tags:
+                rows = seg.build(True).filter(~_live())
+                frames.append(rows.select((F.col(TAG) + len(tags)).alias(TAG), PAYLOAD))
+                tags += seg.tags
+        if not frames:
+            return None
+        types: dict[str, set] = {}
+        for tag in tags:
+            for f in tag.row.schema.fields:
+                if f.name != ROW_ORDER:
+                    types.setdefault(f.name, set()).add(_payload_type(f.dataType))
+        row = StructType([
+            StructField(n, t.pop() if len(t) == 1 else StringType()) for n, t in types.items()
+        ])
+
+        def pick(i: int) -> Column:
+            return F.array(*[F.lit(t[i]) for t in tags])[F.col(TAG)]
+
+        own_reason = F.variant_get(F.col(PAYLOAD), f"$.{REJECT_REASON}", "string")
+        return functools.reduce(DataFrame.unionAll, frames).select(
+            F.col(PAYLOAD).cast(row).alias(PAYLOAD),
+            pick(0).alias(REJECT_CATEGORY),
+            F.coalesce(pick(2), own_reason).alias(REJECT_REASON),
+            pick(1).alias(REJECT_STEP),
+        ).select(f"{PAYLOAD}.*", REJECT_CATEGORY, REJECT_REASON, REJECT_STEP)
 
     def persist(self) -> "Pipeline":
         return self._next(self.df.persist())
@@ -3357,28 +3364,31 @@ class Pipeline:
         rows, and the segment whose live rows are this pipeline's output
         its tags and its loaded count. Counts a sink already took are
         added without running anything."""
-        rejections = _merged_counts(self._precounted)
+        rejections: dict[str, dict[str, int]] = {}
         live = self._acct if self._loaded_from is None else self._loaded_from
         # a closed segment without tags counts nothing
         segments = [s for s in self._closed if s.tags or s is live]
         if live is self._acct:
             segments.append(live)
         loaded = live if isinstance(live, int) else 0
-        if not segments:
-            return loaded, rejections
+        # (segment, tag code, rows): None codes the live rows
+        counts = [(i, c, n) for i, s in enumerate(segments) for c, n in (s.counts or {}).items()]
         frames = []
         for i, seg in enumerate(segments):
-            f = seg.build()
-            if seg is not live:
-                f = f.filter(F.col(TAG).isNotNull())
-            frames.append(f.select(F.lit(i).alias("__seg__"), F.col(TAG)))
-        counts = functools.reduce(DataFrame.unionAll, frames)
-        for row in counts.groupBy("__seg__", TAG).count().collect():
-            code = row[TAG]
+            if seg.counts is None:
+                f = seg.build()
+                if seg is not live:
+                    f = f.filter(F.col(TAG).isNotNull())
+                frames.append(f.select(F.lit(i).alias("__seg__"), F.col(TAG)))
+        if frames:
+            agg = functools.reduce(DataFrame.unionAll, frames).groupBy("__seg__", TAG).count()
+            counts += [(r["__seg__"], r[TAG], r["count"]) for r in agg.collect()]
+        for i, code, n in counts:
             if code is None:
-                loaded = row["count"]
+                loaded = n
             else:
-                _add_count(rejections, *segments[row["__seg__"]].tags[code], row["count"])
+                tag = segments[i].tags[code]
+                _add_count(rejections, tag.category, tag.step, n)
         return loaded, rejections
 
     @staticmethod
@@ -3433,34 +3443,33 @@ class Pipeline:
         self, result: DataFrame, name: str, observed: "tuple[int, dict] | None" = None
     ) -> "Pipeline":
         """The 1-row pipeline a sink returns. Its go() reports the
-        parent's counts: ``observed`` — the (loaded, rejections) a file
-        write took from the parent's open segment — or else that
+        parent's counts: ``observed`` — the (loaded, rows per tag code)
+        a file write took from the parent's open segment — or else that
         segment's live rows and tags, counted at go(). A result saved
         again keeps reporting the original parent's counts."""
-        out = Pipeline(result, name, self._rejects, self._hooks)
-        out._precounted, out._step_ms = self._precounted, self._step_ms
-        out._closed = self._closed
+        out = Pipeline(result, name, self._hooks)
+        out._step_ms, out._closed = self._step_ms, self._closed
         if self._loaded_from is not None:
             out._loaded_from = self._loaded_from
         elif observed is None:
             out._loaded_from = self._acct
             out._closed += (self._acct,)
         else:
+            # the open segment stays, for rejections_df(), but is not counted again
             out._loaded_from = observed[0]
-            out._precounted = _merged_counts(self._precounted, observed[1])
+            out._closed += (replace(self._acct, counts=observed[1]),)
         return out
 
     def _save_result(self, path: str, handle) -> "Pipeline":
         obs, timers = handle
         counts = obs.get
-        tagged: dict[str, dict[str, int]] = {}
-        for code, (cat, step) in enumerate(self._acct.tags):
-            if counts[f"t{code}"]:
-                _add_count(tagged, cat, step, int(counts[f"t{code}"]))
         out = self._sink_result(
             self.spark.createDataFrame([(path,)], "filename string"),
             f"{self.name}-saved",
-            (int(counts["loaded"]), tagged),
+            (int(counts["loaded"]), {
+                code: int(counts[f"t{code}"])
+                for code in range(len(self._acct.tags)) if counts[f"t{code}"]
+            }),
         )
         # the closure time the write spent reaches go() on the result
         out._step_ms = dict(self._step_ms)

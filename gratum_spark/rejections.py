@@ -12,25 +12,32 @@ Spark design — rejects as a tagged column. Besides its kept plan
 (``Pipeline.df``), a pipeline describes an *accounting plan*: the same
 scan carrying one extra int column, :data:`REJECT_TAG`, that stays null
 while a row is live. A row-local rejecting step sets the tag on the live
-rows it rejects — the code indexes that segment's (category, step)
-table — and a tagged row skips every later step, closures included, as
-gratum's ``__reject__`` row does (Pipeline.groovy:1384-1387). Each row
-therefore crosses the step chain once, and one aggregate over the tag
-column yields the loaded count and every category×step count together:
-a file sink writes ``accounting.observe(counts).filter(live)``, so the
-write itself produces the ``LoadStatistic`` and ``go()`` on its result
-runs no Spark job. Operators that are not row-local (joins, sorts,
-aggregates, limits, unions, ...) start a new accounting segment from
-their output; the segments before it are counted in the same aggregate.
-So does a step whose user Column holds a Python UDF: Spark runs such a
-UDF on every row, rejected ones too, so it runs on the kept rows instead.
+rows it rejects — the code indexes that segment's (category, step,
+reason) table — and a tagged row skips every later step, closures
+included, as gratum's ``__reject__`` row does (Pipeline.groovy:1384-1387).
+Each row therefore crosses the step chain once, and one aggregate over
+the tag column yields the loaded count and every category×step count
+together: a file sink writes ``accounting.observe(counts).filter(live)``,
+so the write itself produces the ``LoadStatistic`` and ``go()`` on its
+result runs no Spark job. Operators that are not row-local (joins,
+sorts, aggregates, limits, unions, ...) start a new accounting segment
+from their output; the segments before it are counted in the same
+aggregate. So does a step whose user Column holds a Python UDF: Spark
+runs such a UDF on every row, rejected ones too, so it runs on the kept
+rows instead.
 
-The accounting plan is built only when counts are asked for. So are the
-rejected-row *payloads* behind ``rejections_df()`` / ``on_rejection``:
-one lazily built plan branch per rejecting step, carrying each row's
-values at the moment it was rejected (e.g. the raw ``"12x"`` that
-``as_int`` refused) plus the three metadata columns. Callers that only
-read ``Pipeline.df`` pay for neither.
+The rejected rows themselves ride the same plan. ``rejections_df()`` /
+``on_rejection`` build each accounting segment once more with one extra
+VARIANT column, :data:`REJECT_PAYLOAD`: a step that tags a row also sets
+it to ``to_variant_object(struct(<the row's columns>))`` — its values at
+the moment it was rejected, e.g. the raw ``"12x"`` that ``as_int``
+refused — plus, for ``add_step``, the reason its closure gave. The
+rejected rows of every segment are unioned, their tag codes mapped to
+category, step and reason, and their payloads expanded. A column comes
+back at its type in the kept plan when every rejecting step saw it at
+one type, and as a string otherwise. Only that build carries the
+payload: the write plan and ``go()``'s aggregate never do. Callers that
+only read ``Pipeline.df`` pay for none of this.
 """
 
 from __future__ import annotations
@@ -38,18 +45,16 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 from enum import Enum
-from functools import reduce as _reduce
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 REJECT_CATEGORY = "rejectionCategory"
 REJECT_REASON = "rejectionReason"
 REJECT_STEP = "rejectionStep"
 REJECT_COLS = (REJECT_CATEGORY, REJECT_REASON, REJECT_STEP)
 # The accounting plan's tag column: null while the row is live, else an
-# int code into the accounting segment's (category, step) table.
+# int code into the accounting segment's (category, step, reason) table.
 REJECT_TAG = "__reject__"
+# A rejected row's values, as one VARIANT; only rejections_df() builds it.
+REJECT_PAYLOAD = "__payload__"
 
 
 class RejectionCategory(str, Enum):
@@ -84,28 +89,6 @@ def reject(
 ) -> Rejection:
     """Convenience mirroring gratum's ``reject(...)`` static helper."""
     return Rejection(reason, category)
-
-
-def tag_rejects(
-    df: DataFrame, category: RejectionCategory, reason: str, step: str
-) -> DataFrame:
-    """Attach the rejection metadata columns to a rejected-rows DataFrame."""
-    return df.withColumns(
-        {
-            REJECT_CATEGORY: F.lit(category.value),
-            REJECT_REASON: F.lit(reason),
-            REJECT_STEP: F.lit(step),
-        }
-    )
-
-
-def union_rejects(rejects: list[DataFrame]) -> DataFrame | None:
-    """Union reject payload branches by name, tolerating differing payload schemas."""
-    if not rejects:
-        return None
-    return _reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), rejects
-    )
 
 
 @dataclass

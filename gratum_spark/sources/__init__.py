@@ -928,7 +928,5 @@ def concat(*pipelines: Pipeline) -> Pipeline:
         lambda a, b: a.unionByName(b, allowMissingColumns=True),
         [p.df for p in pipelines],
     )
-    rejects = [r for p in pipelines for r in p._rejects]
-    out = Pipeline(df, "concat", rejects)
     # each input's reject accounting joins the union's (same df: no new segment)
-    return out._next(df, absorb=pipelines)
+    return Pipeline(df, "concat")._next(df, absorb=pipelines)

@@ -1832,6 +1832,53 @@ def test_rejected_rows_skip_later_closures(spark, tmp_path):
     assert [r["n"] for r in parsed.rejections_df().collect()] == ["bad"] * 3
 
 
+def test_rejections_df_after_type_change(spark):
+    # as_int turns v into a long, so rejected rows meet two types of v:
+    # the raw "12x" as_int refused and the parsed 1 the filter dropped.
+    # Both come back, as strings, each with its own step. A null-typed
+    # column, which a VARIANT cannot hold, comes back too.
+    rows = [{"v": "12x"}, {"v": "1"}, {"v": "5"}, {"v": None}]
+    p = (
+        sources.from_collection(spark, rows, "v string")
+        .set_field("none", None)
+        .as_int("v")
+        .filter("v > 1")
+    )
+    rej = p.rejections_df()
+    assert dict(rej.dtypes)["v"] == "string"
+    got = sorted((r["rejectionStep"], r["v"] or "", r["none"]) for r in rej.collect())
+    assert got == [
+        ("asInt(v)", "12x", None), ("filter(v > 1)", "", None), ("filter(v > 1)", "1", None)
+    ]
+
+
+def test_rejections_df_across_join_matches_go(spark, tmp_path):
+    # the join closes the accounting segment of as_int and the filter;
+    # rejections_df() holds the rejected rows of both segments, and
+    # saving first does not lose the closed or the observed segment
+    rows = [{"id": i, "n": "bad" if i % 4 == 0 else str(i)} for i in range(12)]
+    right = sources.from_collection(spark, [{"id": i, "w": "x"} for i in range(0, 12, 3)])
+    p = (
+        sources.from_collection(spark, rows, "id long, n string")
+        .as_int("n")
+        .filter("n % 2 = 1", name="odd")
+        .join(right, on="id")
+        .filter("id > 3", name="big")
+    )
+    stat = p.go()
+    for rej in (p.rejections_df(), p.save(str(tmp_path / "joined")).rejections_df()):
+        by_step: dict[str, dict[str, int]] = {}
+        for r in rej.collect():
+            steps = by_step.setdefault(r["rejectionCategory"], {})
+            steps[r["rejectionStep"]] = steps.get(r["rejectionStep"], 0) + 1
+            assert (r["n"] == "bad") == (r["rejectionStep"] == "asInt(n)")
+        assert by_step == stat.rejections
+    assert stat.rejections == {
+        "INVALID_FORMAT": {"asInt(n)": 3},
+        "IGNORE_ROW": {"odd": 3, "join(['id'])": 4, "big": 1},
+    }
+
+
 def test_stamp_row_order_csv_reads_metadata_fields_first(spark, tmp_path, monkeypatch):
     # CSV/JSON scans have a _metadata struct without row_index: the stamp
     # must check its fields instead of referencing row_index and

@@ -1013,3 +1013,39 @@ def test_save_write_plan_keeps_filtered_rows_in_scan(spark, sf):
     assert "PushedFilters: [" in kept
     assert "GreaterThanOrEqual(o_orderdate" in kept
     assert "PushedFilters" not in write
+
+
+def test_write_and_go_plans_carry_no_payload(spark, sf):
+    """Rejected-row payloads (a VARIANT per tagged row) exist only in the
+    plan rejections_df() builds. The write plan and the accounting plan
+    that go() aggregates must not carry them: column pruning does not
+    remove an unused column through add_step's mapInPandas."""
+    p = (
+        table(spark, sf, "customer")
+        .clip("c_custkey", "c_mktsegment")
+        .add_field("num", "IF(c_custkey % 5 = 0, 'x', CAST(c_custkey AS STRING))")
+        .as_int("num")
+        .filter({"c_mktsegment": ["BUILDING", "MACHINERY"]}, name="segment")
+        .add_step("keep", lambda r: r)
+        .unique("c_mktsegment")
+    )
+    written, _ = p._observed_for_save()
+    for plan in (plan_of(written), plan_of(p._acct.build())):
+        assert "variant" not in plan.lower()
+    assert "to_variant_object" in plan_of(p.rejections_df())
+
+
+def test_rejections_df_scans_source_once(spark, sf):
+    """rejections_df() over k row-local rejecting steps reads the source
+    once: the rejected rows ride the accounting plan, instead of one
+    plan branch per step that re-runs the steps above it."""
+    import re
+
+    rej = (
+        table(spark, sf, "orders")
+        .filter("o_totalprice > 1000", name="price")
+        .filter({"o_orderstatus": ["O", "F"]}, name="status")
+        .as_int("o_orderpriority")
+        .rejections_df()
+    )
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan_of(rej))) == 1

@@ -6,6 +6,8 @@ structural invariants that must hold for ANY input."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -291,8 +293,10 @@ def test_flatten_window_runs_match_sequential_model(spark, vals):
     assert got == sorted(expected, key=key)
 
 
-# Row-local rejecting steps: (name, pipeline -> pipeline). Each rejects
-# some rows of the ROW strategy, and their step names are distinct.
+# Rejecting steps: (name, pipeline -> pipeline). Each rejects some rows
+# of the ROW strategy, and their step names are distinct. All are
+# row-local except join, which closes the open accounting segment.
+JOIN_RIGHT = {"a": "wa", "c": "wc"}
 REJECTING_STEPS = {
     "filter_map": lambda p: p.filter({"k": ["a", "b"]}, name="filter_map"),
     "filter_expr": lambda p: p.filter("v IS NULL OR v <> 'x'", name="filter_expr"),
@@ -308,7 +312,61 @@ REJECTING_STEPS = {
     "add_field_closure": lambda p: p.add_field(
         "m", lambda r: 1 // (len(r["v"] or "") - 1), "long"
     ),
+    "join": lambda p: p.join(
+        sources.from_collection(
+            p.spark, [{"k": k, "w": w} for k, w in JOIN_RIGHT.items()], "k string, w string"
+        ),
+        on="k",
+    ),
 }
+
+
+def _sequential_model(rows, chain):
+    """gratum's semantics for REJECTING_STEPS, in plain Python: rows go
+    through the steps one at a time in input order, a rejected row skips
+    every later step, and unique keeps the first row per key. Returns
+    (kept rows, [(category, step, reason, row at rejection)])."""
+    live, rejects = [dict(r) for r in rows], []
+    for name in chain:
+        out, seen = [], set()
+        for r in live:
+            v = r["v"] or ""
+            if name == "filter_map":
+                why = None if r["k"] in ("a", "b") else ("IGNORE_ROW", "filter_map", "filtered out")
+            elif name == "filter_expr":
+                why = None if r["v"] != "x" else ("IGNORE_ROW", "filter_expr", "filtered out")
+            elif name == "filter_closure":
+                why = None if v != "zz" else ("IGNORE_ROW", "filter_closure", "filtered out")
+            elif name == "as_int":
+                n = r["n"]
+                why = None
+                if n is not None and str(n) != "":
+                    if re.fullmatch(r"[+-]?[0-9]+", str(n)):
+                        r = {**r, "n": int(n)}
+                    else:
+                        why = ("INVALID_FORMAT", "asInt(n)", "Could not parse value as Int")
+            elif name == "unique":
+                key = (r["k"], r["v"])
+                why = ("IGNORE_ROW", "unique(k,v)", "duplicate k,v") if key in seen else None
+                seen.add(key)
+            elif name == "add_step":
+                why = ("REJECTION", "add_step", "step returned null") if r["v"] == "0" else None
+                if why is None:
+                    r = {**r, "v": v + "y"}
+            elif name == "add_field_closure":
+                why = ("SCRIPT_ERROR", "add_field(m)", "closure raised") if len(v) == 1 else None
+                if why is None:
+                    r = {**r, "m": 1 // (len(v) - 1)}
+            else:  # join: unmatched left rows reject, the left side wins collisions
+                why = None if r["k"] in JOIN_RIGHT else ("IGNORE_ROW", "join(['k'])", "Could not join on ['k']")
+                if why is None:
+                    r = {"w": JOIN_RIGHT[r["k"]], **r}
+            if why is None:
+                out.append(r)
+            else:
+                rejects.append((*why, r))
+        live = out
+    return live, rejects
 
 
 @given(rows=ROWS, chain=st.lists(st.sampled_from(sorted(REJECTING_STEPS)), min_size=1, max_size=4))
@@ -317,21 +375,34 @@ REJECTING_STEPS = {
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
-def test_tag_counts_agree_with_payload_branches(spark, tmp_path_factory, rows, chain):
-    """For any chain of row-local rejecting steps, the accounting plan's
-    tag counts — from go()'s aggregate and from the observed write —
-    equal the payload branches behind rejections_df(), grouped by
-    (category, step); and loaded is the kept plan's row count."""
+def test_reject_accounting_matches_sequential_model(spark, tmp_path_factory, rows, chain):
+    """For any chain of rejecting steps, go(), save().go() and
+    rejections_df() agree with an independent sequential model of
+    gratum's semantics: the (category, step) counts, the loaded count,
+    and each rejected row's values at rejection (so the raw values
+    as_int refused), with its reason."""
+    kept, model_rejects = _sequential_model(rows, chain)
+    expected: dict[str, dict[str, int]] = {}
+    for cat, step, _, _ in model_rejects:
+        expected.setdefault(cat, {})[step] = expected.get(cat, {}).get(step, 0) + 1
     p = _pipe(spark, rows)
     for name in chain:
         p = REJECTING_STEPS[name](p)
     stat = p.go()
     saved = p.save(str(tmp_path_factory.mktemp("chain") / "out")).go()
-    by_payload: dict[str, dict[str, int]] = {}
+    assert stat.rejections == saved.rejections == expected
+    assert stat.loaded == saved.loaded == len(kept)
+
+    def values(cat, step, reason, r):
+        # n comes back as a string: as_int's point sees it unparsed
+        n = r.get("n")
+        return (cat, step, reason, r["k"], r["v"], None if n is None else str(n),
+                r.get("m"), r.get("w"))
+
     rej = p.rejections_df()
-    if rej is not None:
-        for r in rej.groupBy("rejectionCategory", "rejectionStep").count().collect():
-            by_payload.setdefault(r["rejectionCategory"], {})[r["rejectionStep"]] = r["count"]
-    assert stat.rejections == saved.rejections == by_payload
-    assert stat.loaded == saved.loaded == p.df.count()
-    assert stat.loaded + stat.rejected == len(rows)
+    got = [] if rej is None else [
+        values(r["rejectionCategory"], r["rejectionStep"], r["rejectionReason"], r.asDict())
+        for r in rej.collect()
+    ]
+    key = repr  # rows hold None next to str/int
+    assert sorted(got, key=key) == sorted((values(*x) for x in model_rejects), key=key)
