@@ -1421,35 +1421,45 @@ def _payload_type(dt: DataType) -> DataType:
     return dt if ok else StringType()
 
 
+def _in_payload(name: str) -> bool:
+    """Whether a payload keeps this column: a row's own columns, not the
+    row-order stamp nor the engine's helper columns, named ``__x__``."""
+    return name != ROW_ORDER and not (name.startswith("__") and name.endswith("__"))
+
+
 def _tagged(
     d: DataFrame,
     code: int,
     tag: Column | None = None,
+    sets: dict[str, Column] | None = None,
     cols: Iterable[str] | None = None,
     reason: Column | None = None,
 ) -> DataFrame:
-    """``d`` after a step that tags rows with the codes from ``code`` on:
-    its tag column set to ``tag`` (None: the step set it already) and,
-    in a payload build, the payload of the rows it newly tagged set to
-    their values in ``cols`` (default: ``d``'s own columns), plus
+    """``d`` after a step that tags rows with the codes from ``code`` on,
+    in one projection: the tag column set to ``tag`` (None: the step set
+    it already) and the columns in ``sets`` set. In a payload build, the
+    rows it newly tagged also get their payload: their values as the
+    step received them, in ``cols`` (default: all of ``d``'s), plus
     ``reason`` when each row carries its own."""
+    updates = dict(sets or {})
     if tag is not None:
-        d = d.withColumn(TAG, tag)
-    if PAYLOAD not in d.columns:
-        return d
-    types = {f.name: f.dataType for f in d.schema.fields}
+        updates[TAG] = tag
+    names = d.columns
+    if PAYLOAD in names:
+        types = {f.name: f.dataType for f in d.schema.fields}
 
-    def ref(c: str) -> Column:  # quoted: a name may hold dots
-        col = F.col("`" + c.replace("`", "``") + "`")
-        return col if _payload_type(types[c]) is types[c] else col.cast("string").alias(c)
+        def ref(c: str) -> Column:  # quoted: a name may hold dots
+            col = F.col("`" + c.replace("`", "``") + "`")
+            return col if _payload_type(types[c]) is types[c] else col.cast("string").alias(c)
 
-    row = [ref(c) for c in (d.columns if cols is None else cols) if c not in (TAG, PAYLOAD, ROW_ORDER)]
-    if reason is not None:
-        row.append(reason.alias(REJECT_REASON))
-    new = F.col(TAG) >= code
-    return d.withColumn(
-        PAYLOAD, F.when(new, F.to_variant_object(F.struct(*row))).otherwise(F.col(PAYLOAD))
-    )
+        row = [ref(c) for c in (names if cols is None else cols) if _in_payload(c)]
+        if reason is not None:
+            row.append(reason.alias(REJECT_REASON))
+        new = (F.col(TAG) if tag is None else tag) >= code
+        updates[PAYLOAD] = F.when(new, F.to_variant_object(F.struct(*row))).otherwise(
+            F.col(PAYLOAD)
+        )
+    return d.withColumns(updates) if updates else d
 
 
 class _Tag(NamedTuple):
@@ -1471,8 +1481,9 @@ class _Segment:
     :func:`_tagged`); ``tags[code]`` is what a tag code stands
     for. Row-local steps extend the open segment (:meth:`then`); other
     operators start a new one from their output, and the old one is
-    counted alongside it. ``counts`` holds the rows per tag code that a
-    file write already observed, so it is not counted again."""
+    counted alongside it. ``counts`` holds the rows per tag code (None:
+    the live rows) that a file write already observed, so it is not
+    counted again."""
 
     build: Callable[..., DataFrame]
     tags: tuple[_Tag, ...] = ()
@@ -1563,13 +1574,13 @@ class Pipeline:
         # post-save result pipelines report the PARENT's loaded count
         # (reference: save() result rows are DO_NOT_TRACK,
         # Pipeline.groovy:833-844; asserted by PipelineTest.testSave):
-        # the count a file write observed, or the parent's open segment
-        # (one of _closed) whose live rows go() counts — see _sink_result.
+        # the parent's open segment (one of _closed), whose live rows go()
+        # counts unless a file write observed them — see _sink_result.
         # None: this pipeline's own open segment. It does not survive
         # _next — any operator applied to a result pipeline counts its
         # own rows (p.save(x).filter(...).go() reports the filtered
         # count, not the parent's).
-        self._loaded_from: _Segment | int | None = None
+        self._loaded_from: _Segment | None = None
         # Driver-measured size estimate for collection-backed sources
         # (bytes). Catalyst reports the unknown sentinel for RDD-backed
         # plans (createDataFrame from Python rows = LogicalRDD), so
@@ -1880,7 +1891,7 @@ class Pipeline:
                 .when(F.col("__p__.err").isNotNull(), F.lit(code + 1))
                 .when(~F.col("__p__.keep"), F.lit(code))
             )
-            return _tagged(p, code, tag, d.columns).drop("__p__")
+            return _tagged(p, code, tag).drop("__p__")
 
         out = self._next(
             kept, keep_size_hint=True, acct=acct,
@@ -2101,9 +2112,7 @@ class Pipeline:
                 return _map_in_pandas_exact(d, functools.partial(_run, schema=tagged), tagged)
             schema = StructType(tagged.fields + [d.schema[PAYLOAD], reason])
             out = _map_in_pandas_exact(d, functools.partial(_run, schema=schema), schema)
-            return _tagged(
-                out, code, cols=[f.name for f in row_fields], reason=F.col("__reason__")
-            ).drop("__reason__")
+            return _tagged(out, code, reason=F.col("__reason__")).drop("__reason__")
 
         out = self._next(
             kept, acct=acct, tags=[_Tag(c, step, None, kept) for c in categories]
@@ -2225,8 +2234,10 @@ class Pipeline:
 
             def acct(d: DataFrame) -> DataFrame:
                 f = d.withColumn("__f__", _batch_udf(_eval, rt, gated=True)(row, _live()))
-                f = _tagged(f, code, _retag(F.col("__f__.err").isNotNull(), code), d.columns)
-                return f.withColumn(name, F.col("__f__.value")).drop("__f__")
+                return _tagged(
+                    f, code, _retag(F.col("__f__.err").isNotNull(), code),
+                    {name: F.col("__f__.value")},
+                ).drop("__f__")
 
             return self._next(
                 kept, acct=acct,
@@ -2364,8 +2375,10 @@ class Pipeline:
         code = len(self._acct.tags)
 
         def acct(d: DataFrame) -> DataFrame:
-            p = _tagged(d.withColumn("__parsed__", parsed), code, _retag(bad, code), d.columns)
-            return p.withColumn(column, F.col("__parsed__")).drop("__parsed__")
+            p = d.withColumn("__parsed__", parsed)
+            return _tagged(
+                p, code, _retag(bad, code), {column: F.col("__parsed__")}
+            ).drop("__parsed__")
 
         return self._next(
             kept, acct=acct,
@@ -3165,7 +3178,7 @@ class Pipeline:
             # the join starts a new accounting segment: its own output,
             # with the unmatched left rows tagged
             tag = F.when(F.col("__matched__").isNull(), F.lit(0)).cast("int")
-            return _tagged(_untagged(joined, payload), 0, tag, left_cols).drop("__matched__")
+            return _tagged(_untagged(joined, payload), 0, tag, cols=left_cols).drop("__matched__")
 
         tag = _Tag(RejectionCategory.IGNORE_ROW.value, f"join({lkeys})",
                    f"Could not join on {lkeys}", self.df)
@@ -3292,7 +3305,7 @@ class Pipeline:
         types: dict[str, set] = {}
         for tag in tags:
             for f in tag.row.schema.fields:
-                if f.name != ROW_ORDER:
+                if _in_payload(f.name):
                     types.setdefault(f.name, set()).add(_payload_type(f.dataType))
         row = StructType([
             StructField(n, t.pop() if len(t) == 1 else StringType()) for n, t in types.items()
@@ -3370,7 +3383,7 @@ class Pipeline:
         segments = [s for s in self._closed if s.tags or s is live]
         if live is self._acct:
             segments.append(live)
-        loaded = live if isinstance(live, int) else 0
+        loaded = 0
         # (segment, tag code, rows): None codes the live rows
         counts = [(i, c, n) for i, s in enumerate(segments) for c, n in (s.counts or {}).items()]
         frames = []
@@ -3440,36 +3453,28 @@ class Pipeline:
         return df, (obs, timers)
 
     def _sink_result(
-        self, result: DataFrame, name: str, observed: "tuple[int, dict] | None" = None
+        self, result: DataFrame, name: str, observed: dict | None = None
     ) -> "Pipeline":
         """The 1-row pipeline a sink returns. Its go() reports the
-        parent's counts: ``observed`` — the (loaded, rows per tag code)
-        a file write took from the parent's open segment — or else that
-        segment's live rows and tags, counted at go(). A result saved
-        again keeps reporting the original parent's counts."""
+        parent's counts: those of the parent's open segment, which a
+        file write ``observed`` (rows per tag code, None for live rows)
+        or else go() counts. A result saved again keeps reporting the
+        original parent's counts."""
         out = Pipeline(result, name, self._hooks)
         out._step_ms, out._closed = self._step_ms, self._closed
-        if self._loaded_from is not None:
-            out._loaded_from = self._loaded_from
-        elif observed is None:
-            out._loaded_from = self._acct
-            out._closed += (self._acct,)
+        if self._loaded_from is None:
+            out._loaded_from = replace(self._acct, counts=observed)
+            out._closed += (out._loaded_from,)
         else:
-            # the open segment stays, for rejections_df(), but is not counted again
-            out._loaded_from = observed[0]
-            out._closed += (replace(self._acct, counts=observed[1]),)
+            out._loaded_from = self._loaded_from
         return out
 
     def _save_result(self, path: str, handle) -> "Pipeline":
         obs, timers = handle
-        counts = obs.get
         out = self._sink_result(
             self.spark.createDataFrame([(path,)], "filename string"),
             f"{self.name}-saved",
-            (int(counts["loaded"]), {
-                code: int(counts[f"t{code}"])
-                for code in range(len(self._acct.tags)) if counts[f"t{code}"]
-            }),
+            {None if k == "loaded" else int(k[1:]): int(n) for k, n in obs.get.items() if n},
         )
         # the closure time the write spent reaches go() on the result
         out._step_ms = dict(self._step_ms)

@@ -49,7 +49,6 @@ from enum import Enum
 REJECT_CATEGORY = "rejectionCategory"
 REJECT_REASON = "rejectionReason"
 REJECT_STEP = "rejectionStep"
-REJECT_COLS = (REJECT_CATEGORY, REJECT_REASON, REJECT_STEP)
 # The accounting plan's tag column: null while the row is live, else an
 # int code into the accounting segment's (category, step, reason) table.
 REJECT_TAG = "__reject__"
