@@ -3397,11 +3397,11 @@ class Pipeline:
             agg = functools.reduce(DataFrame.unionAll, frames).groupBy("__seg__", TAG).count()
             counts += [(r["__seg__"], r[TAG], r["count"]) for r in agg.collect()]
         for i, code, n in counts:
-            if code is None:
-                loaded = n
-            else:
+            if code is not None:
                 tag = segments[i].tags[code]
                 _add_count(rejections, tag.category, tag.step, n)
+            elif segments[i] is live:  # not an older sink's live rows
+                loaded = n
         return loaded, rejections
 
     @staticmethod

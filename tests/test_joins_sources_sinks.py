@@ -626,6 +626,20 @@ def test_save_result_operators_count_their_own_rows(tmp_path, people, spark):
     assert kept.go().loaded == 1  # its own single result row
 
 
+def test_save_result_rejecting_every_row_loads_zero(tmp_path, spark):
+    # the saved parent rejected rows; a step after the save that rejects
+    # the result's one row leaves 0 loaded, not the parent's live count,
+    # and the parent's rejections are still reported — also after a
+    # second save, whose write observed 0 live rows
+    p = sources.from_collection(spark, [{"k": k} for k in "aab"], "k string")
+    parent = p.filter({"k": "a"}, name="only_a")
+    none = parent.save(str(tmp_path / "a")).filter("false", name="none")
+    expected = {"IGNORE_ROW": {"only_a": 1, "none": 1}}
+    for stat in (none.go(), none.save(str(tmp_path / "b")).go()):
+        assert stat.loaded == 0
+        assert stat.rejections == expected
+
+
 def test_csv_escaping_off_header_drop_across_splits(tmp_path, spark):
     # header drop is anchored on file offset (block start 0), so it stays
     # exact when one file splits into many read tasks (r2 advice: min(mii)
