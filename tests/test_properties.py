@@ -9,7 +9,7 @@ from __future__ import annotations
 import re
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from gratum_spark import RejectionCategory, sources
@@ -370,6 +370,13 @@ def _sequential_model(rows, chain):
 
 
 @given(rows=ROWS, chain=st.lists(st.sampled_from(sorted(REJECTING_STEPS)), min_size=1, max_size=4))
+# always run: unique's first-wins pick among live duplicates that differ
+# in n, after an as_int reject and before a join reject
+@example(
+    rows=[{"k": "a", "v": None, "n": "bad"}, {"k": "a", "v": None, "n": "1"},
+          {"k": "a", "v": None, "n": "2"}, {"k": "b", "v": "x", "n": None}],
+    chain=["as_int", "unique", "join"],
+)
 @settings(
     max_examples=8,
     deadline=None,
@@ -379,8 +386,8 @@ def test_reject_accounting_matches_sequential_model(spark, tmp_path_factory, row
     """For any chain of rejecting steps, go(), save().go() and
     rejections_df() agree with an independent sequential model of
     gratum's semantics: the (category, step) counts, the loaded count,
-    and each rejected row's values at rejection (so the raw values
-    as_int refused), with its reason."""
+    the kept plan's rows, and each rejected row's values at rejection
+    (so the raw values as_int refused), with its reason."""
     kept, model_rejects = _sequential_model(rows, chain)
     expected: dict[str, dict[str, int]] = {}
     for cat, step, _, _ in model_rejects:
@@ -399,10 +406,17 @@ def test_reject_accounting_matches_sequential_model(spark, tmp_path_factory, row
         return (cat, step, reason, r["k"], r["v"], None if n is None else str(n),
                 r.get("m"), r.get("w"))
 
+    # the kept plan, which neither go() nor the write reads, keeps the
+    # model's rows
+    key = repr  # rows hold None next to str/int
+    got_kept = [values(None, None, None, r.asDict()) for r in p.df.collect()]
+    assert sorted(got_kept, key=key) == sorted(
+        (values(None, None, None, r) for r in kept), key=key
+    )
+
     rej = p.rejections_df()
     got = [] if rej is None else [
         values(r["rejectionCategory"], r["rejectionStep"], r["rejectionReason"], r.asDict())
         for r in rej.collect()
     ]
-    key = repr  # rows hold None next to str/int
     assert sorted(got, key=key) == sorted((values(*x) for x in model_rejects), key=key)
