@@ -24,6 +24,7 @@ from ..functions import (
     simhash64_np,
     words,
 )
+from ..pipeline import fan_scan
 
 __all__ = [
     "exact_dedup",
@@ -99,7 +100,6 @@ def _banded_signatures(
     shingle_k: int,
     n_hashes: int,
     bands: int,
-    n_partitions: int | None,
     checkpoint_sig: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """One side's LSH stage: (signatures, exploded narrow (id, band, h)
@@ -110,12 +110,8 @@ def _banded_signatures(
     nobody re-reads pinned it in executor memory for nothing, r6
     review)."""
     rows_per_band = n_hashes // bands
-    if n_partitions:
-        # signature computation is the CPU-heavy stage; when the input
-        # arrives in few partitions (small files / single row-group
-        # parquet) a round-robin repartition buys per-doc parallelism
-        # for one narrow shuffle of (id, text)
-        df = df.repartition(n_partitions)
+    # signature computation is the CPU-heavy stage
+    df = fan_scan(df)
     # Materialize words -> shingles -> signature as separate projections:
     # higher-order lambdas run interpreted with no subexpression reuse, so
     # an inlined split/shingle subtree would re-execute inside all
@@ -173,13 +169,10 @@ def _lsh_candidates(
     shingle_k: int,
     n_hashes: int,
     bands: int,
-    n_partitions: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared LSH candidate stage: (checkpointed signatures, distinct
     candidate (a, b) pairs). See minhash_lsh_pairs for the plan shape."""
-    sig, banded = _banded_signatures(
-        df, id_col, text_col, shingle_k, n_hashes, bands, n_partitions
-    )
+    sig, banded = _banded_signatures(df, id_col, text_col, shingle_k, n_hashes, bands)
     pairs = (
         banded.select("band", "h", F.col("id").alias("a"))
         .join(banded.select("band", "h", F.col("id").alias("b")), on=["band", "h"])
@@ -198,7 +191,6 @@ def minhash_lsh_pairs(
     n_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash + LSH banding.
 
@@ -217,10 +209,11 @@ def minhash_lsh_pairs(
     hashed — no skew by construction unless many docs are *identical*
     (run exact_dedup first, which is cheaper anyway).
     Returns (a, b, est_jaccard) with a < b.
+
+    Building this plan launches Spark jobs: the signatures are cut with
+    an eager ``localCheckpoint``.
     """
-    sig, pairs = _lsh_candidates(
-        df, id_col, text_col, shingle_k, n_hashes, bands, n_partitions
-    )
+    sig, pairs = _lsh_candidates(df, id_col, text_col, shingle_k, n_hashes, bands)
     sig_a = sig.select(F.col("id").alias("a"), F.col("sig").alias("sig_a"))
     sig_b = sig.select(F.col("id").alias("b"), F.col("sig").alias("sig_b"))
     matches = F.size(
@@ -271,7 +264,6 @@ def minhash_verified_pairs(
     threshold: float = 0.5,
     n_hashes: int = 64,
     bands: int | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """The production near-dup shape: MinHash-LSH candidate generation +
     EXACT n-gram Jaccard verification of only the candidates.
@@ -301,9 +293,7 @@ def minhash_verified_pairs(
     # candidate (a, b) pairs only — the exact verify replaces the
     # estimate, so the two signature re-joins minhash_lsh_pairs does to
     # compute est_jaccard would be pure overhead here
-    _, cands = _lsh_candidates(
-        df, id_col, text_col, shingle_k, n_hashes, bands, n_partitions
-    )
+    _, cands = _lsh_candidates(df, id_col, text_col, shingle_k, n_hashes, bands)
     # r16 (guide §3.2): only docs that appear in a candidate pair need
     # their exact shingle set, but the verify side used to tokenize +
     # shingle the WHOLE corpus twice (once per join side) — the
@@ -347,7 +337,6 @@ def minhash_verified_pairs_cross(
     threshold: float = 0.5,
     n_hashes: int = 64,
     bands: int | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """INCREMENTAL dedup: verified near-duplicate pairs BETWEEN a new
     batch and an existing corpus — the shape a daily-crawl pipeline
@@ -380,12 +369,10 @@ def minhash_verified_pairs_cross(
     if bands is None:
         bands, _ = derive_banding(n_hashes, threshold)
     _, banded_new = _banded_signatures(
-        new_df, id_col, text_col, shingle_k, n_hashes, bands, n_partitions,
-        checkpoint_sig=False,
+        new_df, id_col, text_col, shingle_k, n_hashes, bands, checkpoint_sig=False
     )
     _, banded_corpus = _banded_signatures(
-        corpus_df, id_col, text_col, shingle_k, n_hashes, bands, n_partitions,
-        checkpoint_sig=False,
+        corpus_df, id_col, text_col, shingle_k, n_hashes, bands, checkpoint_sig=False
     )
     cands = (
         banded_new.select("band", "h", F.col("id").alias("new_id"))
@@ -447,8 +434,7 @@ def write_corpus_index(
     if bands is None:
         bands, _ = derive_banding(n_hashes, threshold)
     _, banded = _banded_signatures(
-        corpus_df, id_col, text_col, shingle_k, n_hashes, bands, None,
-        checkpoint_sig=False,
+        corpus_df, id_col, text_col, shingle_k, n_hashes, bands, checkpoint_sig=False
     )
     banded.write.mode("overwrite").parquet(f"{path}/banded")
     sh = corpus_df.select(
@@ -483,8 +469,7 @@ def corpus_novel_stored(
     threshold = float(meta["threshold"])
 
     _, banded_new = _banded_signatures(
-        new_df, id_col, text_col, shingle_k, n_hashes, bands, None,
-        checkpoint_sig=False,
+        new_df, id_col, text_col, shingle_k, n_hashes, bands, checkpoint_sig=False
     )
     banded_corpus = spark.read.parquet(f"{index_path}/banded")
     cands = (
@@ -525,7 +510,6 @@ def corpus_novel(
     threshold: float = 0.5,
     n_hashes: int = 64,
     bands: int | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Doc-level incremental curation filter: the rows of ``new_df`` that
     do NOT near-duplicate the existing corpus (exact-verified Jaccard <
@@ -535,12 +519,13 @@ def corpus_novel(
     shingle have no candidates and are kept (novel by definition).
 
     At 100 TB the anti join is an equi-join on the id against the (far
-    smaller) matched-id set; everything else is the cross-pair plan."""
+    smaller) matched-id set; everything else is the cross-pair plan, so
+    building this plan launches Spark jobs as that one does."""
     matched = (
         minhash_verified_pairs_cross(
             new_df, corpus_df, id_col, text_col,
             shingle_k=shingle_k, threshold=threshold,
-            n_hashes=n_hashes, bands=bands, n_partitions=n_partitions,
+            n_hashes=n_hashes, bands=bands,
         )
         .select(F.col("new_id").alias(id_col))
         .dropDuplicates()
@@ -554,7 +539,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     prefix_bits: int = 16,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs via 64-bit SimHash with prefix-bucket candidates.
 
@@ -563,9 +547,11 @@ def simhash_pairs(
     one of 4 16-bit blocks is identical). Verification = bit_count(xor)
     <= max_hamming. All expressions, equality joins only.
     Returns (a, b, hamming).
+
+    Building this plan launches Spark jobs: the signatures are cut with
+    an eager ``localCheckpoint``.
     """
-    if n_partitions:
-        df = df.repartition(n_partitions)
+    df = fan_scan(df)
     # hash words JVM-side (xxhash64), bit-vote vectorized in numpy;
     # materialize the (id, sh) signatures once — both self-join sides
     # reference this pandas-UDF subtree. Eager localCheckpoint, not
@@ -608,7 +594,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     k: int = 3,
     threshold: float = 0.5,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity pairs via inverted-index join.
 
@@ -622,9 +607,12 @@ def ngram_jaccard_pairs(
     (``max_doc_freq`` guard below caps the blow-up), the standard
     inverted-index mitigation.
     Returns (a, b, jaccard) with a < b, jaccard >= threshold.
+
+    Building this plan launches Spark jobs: the shingle index and the
+    per-doc sizes are cut with eager ``localCheckpoint``s, and the doc
+    count that sets the stop-shingle cap is collected.
     """
-    if n_partitions:
-        df = df.repartition(n_partitions)
+    df = fan_scan(df)
     # materialize the exploded index once: the (interpreted-HOF) shingle
     # computation is referenced by the size agg, the stop-shingle
     # frequency pass, and BOTH self-join sides — rebuilt it re-executes
@@ -1147,7 +1135,6 @@ def _duplicate_span_ranges(
     id_col: str,
     text_col: str,
     k: int,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Maximal duplicated token spans per document (shared core of
     `duplicate_spans` / `duplicate_span_rewrite`).
@@ -1176,13 +1163,8 @@ def _duplicate_span_ranges(
     maximal span: (id, span_start, span_end) in token positions,
     end inclusive.
     """
-    if n_partitions:
-        # shingling is the CPU-heavy stage; when the input arrives in
-        # few partitions (small files / single row-group parquet) a
-        # round-robin repartition buys per-doc parallelism for one
-        # narrow shuffle of (id, text) — same trade as _lsh_side above.
-        # At real scale inputs have ample splits; leave it None there.
-        df = df.repartition(n_partitions)
+    # shingling is the CPU-heavy stage
+    df = fan_scan(df)
     warr = words(F.col(text_col))
     n = F.size(warr)
     starts = F.when(n >= k, F.sequence(F.lit(0), n - k)).otherwise(
@@ -1237,7 +1219,6 @@ def duplicate_spans(
     id_col: str,
     text_col: str,
     k: int = 10,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Per-document duplicated-span accounting: how many maximal
     k-token-window duplicate spans each document carries and what
@@ -1247,8 +1228,11 @@ def duplicate_spans(
     re-joins only (id, 2 longs), never the text bodies.
 
     Returns (id, n_tokens, n_dup_spans, dup_tokens, dup_frac).
+
+    Building this plan launches Spark jobs: the shingle positions are
+    cut with an eager ``localCheckpoint``.
     """
-    spans = _duplicate_span_ranges(df, id_col, text_col, k, n_partitions)
+    spans = _duplicate_span_ranges(df, id_col, text_col, k)
     per_doc = spans.groupBy("id").agg(
         F.count("*").alias("n_dup_spans"),
         F.sum(F.col("span_end") - F.col("span_start") + 1).alias("dup_tokens"),
@@ -1276,7 +1260,6 @@ def duplicate_span_rewrite(
     id_col: str,
     text_col: str,
     k: int = 10,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Exact-substring dedup with document REWRITE: every token covered
     by a duplicated span (`_duplicate_span_ranges`) is cut and the
@@ -1295,9 +1278,12 @@ def duplicate_span_rewrite(
     final join re-shuffles only the span arrays against the corpus).
 
     Returns (id, n_tokens, removed_tokens, clean_text).
+
+    Building this plan launches Spark jobs: the shingle positions are
+    cut with an eager ``localCheckpoint``.
     """
     spans = (
-        _duplicate_span_ranges(df, id_col, text_col, k, n_partitions)
+        _duplicate_span_ranges(df, id_col, text_col, k)
         .groupBy("id")
         .agg(
             F.array_sort(

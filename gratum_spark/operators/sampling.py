@@ -19,6 +19,8 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pipeline import fan_scan
+
 __all__ = [
     "hash_split",
     "stratified_sample",
@@ -236,7 +238,6 @@ def dsir_logratios(
     text_col: str,
     prefix_len: int = 3,
     alpha: float = 0.5,
-    n_partitions: int | None = None,
     target_within_source: bool = False,
 ) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
@@ -282,16 +283,13 @@ def dsir_logratios(
     join keeps each source row once), and a source id shared by several
     documents brings all of their grams into the target model. Either
     silently changes every score; pass ``False`` when ids may repeat.
+
+    Building this plan launches Spark jobs: the source feature table and
+    the target model table are cut with eager ``localCheckpoint``s.
     """
     B = 16 ** prefix_len
-    if n_partitions:
-        # tokenize/hash is the CPU-heavy stage; fan out few-split
-        # inputs (small files / single row-group parquet) with one
-        # narrow round-robin shuffle — no-op worthy at real scale
-        # where inputs have ample splits (same trade as the dedup
-        # module's n_partitions)
-        source = source.repartition(n_partitions)
-        target = target.repartition(n_partitions)
+    # tokenize/hash is the CPU-heavy stage
+    source, target = fan_scan(source), fan_scan(target)
 
     def buckets(df: DataFrame) -> DataFrame:
         warr = F.split(F.lower(F.col(text_col)), " ")

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import shingles_of_words, words
+from ..pipeline import fan_scan
 
 __all__ = [
     "token_stats_named",
@@ -382,21 +383,13 @@ def collapse_repeats(
     )
 
 
-def ngram_counts(
-    df: DataFrame, id_col: str, text_col: str, n_partitions: int | None = None
-) -> tuple[DataFrame, DataFrame]:
+def ngram_counts(df: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, DataFrame]:
     """(unigram, bigram) corpus count tables: (w, cw) and (bg, cb).
     These are the materialization unit for vocabulary mining — at
     100 TB write them to parquet once and run `pmi_from_counts` (and
     any other collocation scoring) off the stored tables instead of
-    re-tokenizing the corpus per query.
-
-    ``n_partitions``: tokenizing is the CPU-heavy stage; when the input
-    arrives in few partitions (small files / single row-group parquet)
-    a round-robin repartition buys per-doc parallelism for one narrow
-    shuffle of the raw rows. At real scale inputs have ample splits —
-    leave it None there (the dedup module makes the same trade)."""
-    counts = _combined_gram_counts(df, text_col, n_partitions)
+    re-tokenizing the corpus per query."""
+    counts = _combined_gram_counts(df, text_col)
     return _split_gram_counts(counts)
 
 
@@ -419,9 +412,7 @@ def _bigram_array(warr) -> Column:
     ).otherwise(F.expr("array()").cast("array<string>"))
 
 
-def _combined_gram_counts(
-    df: DataFrame, text_col: str, n_partitions: int | None = None
-) -> DataFrame:
+def _combined_gram_counts(df: DataFrame, text_col: str) -> DataFrame:
     """(gram, c) counts for unigrams AND bigrams out of ONE tokenize
     pass + ONE aggregate (r15, guide §1.2/§2.4): the corpus was
     previously exploded twice (tokens, then bigrams) with a
@@ -430,8 +421,7 @@ def _combined_gram_counts(
     vocabularies are disjoint by construction and one shared count
     table serves both (`_split_gram_counts` separates them with a
     contains-space filter, no recount)."""
-    if n_partitions:
-        df = df.repartition(n_partitions)
+    df = fan_scan(df)  # tokenizing is the CPU-heavy stage
     warr = words(F.lower(F.col(text_col)))
     return (
         df.select(F.explode(F.concat(warr, _bigram_array(warr))).alias("g"))
@@ -500,7 +490,6 @@ def pmi_bigrams(
     text_col: str,
     min_count: int = 5,
     k: int = 15,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Top-k collocations by pointwise mutual information:
     pmi(a,b) = ln( p(ab) / (p(a)·p(b)) ) over corpus bigram/unigram
@@ -520,6 +509,9 @@ def pmi_bigrams(
     a single TakeOrdered.
 
     Returns (bigram, n, pmi) — pmi rounded to 6dp for engine parity.
+
+    Building this plan launches Spark jobs: the count table is cut with
+    an eager ``localCheckpoint``.
     """
     # The count tables are tiny (vocabulary-sized) but their subtree
     # tokenizes the whole corpus, and pmi_from_counts references the
@@ -529,9 +521,7 @@ def pmi_bigrams(
     # the uni/bi splits downstream are filters over the materialized
     # table — the in-operator version of the "materialize ngram_counts
     # once" advice the docstring gives for stored-table use at scale.
-    counts = _combined_gram_counts(df, text_col, n_partitions).localCheckpoint(
-        eager=True
-    )
+    counts = _combined_gram_counts(df, text_col).localCheckpoint(eager=True)
     uni, bi = _split_gram_counts(counts)
     return pmi_from_counts(uni, bi, min_count=min_count, k=k)
 
@@ -543,7 +533,6 @@ def lm_score_from_counts(
     uni: DataFrame,
     bi: DataFrame,
     alpha: float = 0.5,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Per-document bigram-LM cross-entropy scoring from stored count
     tables — the CCNet-style perplexity quality filter: documents whose
@@ -567,12 +556,9 @@ def lm_score_from_counts(
 
     Returns (id, n_bigrams, avg_nll, ppl); documents with fewer than
     two tokens keep their row with n_bigrams=0 and NULL scores.
-    ``n_partitions`` fans out few-split inputs before the CPU-heavy
-    per-doc tokenize (see `ngram_counts`).
     """
     base = df.select(F.col(id_col).alias("id"))
-    if n_partitions:
-        df = df.repartition(n_partitions)
+    df = fan_scan(df)  # before the CPU-heavy per-doc tokenize
     warr = words(F.lower(F.col(text_col)))
     doc_bi = (
         df.select(
@@ -661,13 +647,15 @@ def lm_score(
     id_col: str,
     text_col: str,
     alpha: float = 0.5,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Self-scoring convenience for `lm_score_from_counts`: trains the
     bigram model on ``df`` itself and scores every document against it
     (the in-corpus outlier sweep). For a held-out reference model,
     materialize `ngram_counts` of the reference corpus and call
-    `lm_score_from_counts` directly."""
+    `lm_score_from_counts` directly.
+
+    Building this plan launches Spark jobs: the per-doc gram counts are
+    cut with an eager ``localCheckpoint``."""
     # r15 single-scan shape: ONE tokenize pass builds the per-doc
     # (id, gram, m) count table (checkpointed — it is referenced by
     # four branches below), and BOTH model tables plus the per-doc
@@ -677,7 +665,7 @@ def lm_score(
     # shape tokenized the corpus three times (uni, bi, doc_bi) behind
     # two checkpoints.
     base = df.select(F.col(id_col).alias("id"))
-    src = df.repartition(n_partitions) if n_partitions else df
+    src = fan_scan(df)
     warr = words(F.lower(F.col(text_col)))
     dg = (
         src.select(

@@ -299,6 +299,41 @@ def consistency_checkpoint(d: DataFrame) -> DataFrame:
     return d.localCheckpoint(eager=False)
 
 
+# Scale-adaptive fan-out (r15, guide §2.5 "input skew"), the one policy
+# for CPU-heavy work that sits on an input before its first exchange
+# (tokenize/shingle/hash operators, exact-decimal partial aggregation).
+# At the bench SFs every table is ONE parquet row group, so a scan is a
+# single task no matter what maxPartitionBytes/openCostInBytes say (a
+# row group is indivisible — verified empirically: openCost 128KB gives
+# 32 byte-range splits but every row still lands in the one split
+# holding the row-group midpoint, zero speedup). Round-robin repartition
+# to the session parallelism, but ONLY when the input actually has fewer
+# splits than cores: the condition reads the real partition count from
+# the engine, so at 100 TB, where a table scan has thousands of splits,
+# no shuffle is inserted and the plan is byte-identical. Join-heavy
+# queries gain nothing — their fact scan feeds a join exchange that
+# already redistributes.
+def fan_scan(df: DataFrame) -> DataFrame:
+    """``df`` round-robined to ``defaultParallelism`` partitions when it
+    has fewer splits than that, else ``df`` itself. Launches no Spark
+    job: an input whose physical plan holds an exchange (or a subquery,
+    which AQE also plans as stages) is returned as is — a shuffle has
+    already spread its rows, and building its RDD to count splits would
+    run the stages below it. Otherwise the count comes from the RDD of
+    the input's plan, which reads file splits but runs nothing."""
+    qe = df._jdf.queryExecution()
+    nodes = (
+        line.lstrip(" :|+-*()0123456789").split(" ", 1)[0]
+        for line in qe.executedPlan().treeString().splitlines()
+    )
+    if any(n.endswith("Exchange") or n in ("AdaptiveSparkPlan", "Subquery") for n in nodes):
+        return df
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if qe.toRdd().getNumPartitions() < par:
+        return df.repartition(par)
+    return df
+
+
 def _distributed_run_ids(
     df: DataFrame,
     ordc: Column,
@@ -1046,6 +1081,20 @@ def _pdf_to_arrow(pdf: pd.DataFrame, arrow_schema):
     return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+def _safe_names(df: DataFrame) -> tuple[DataFrame, list[str], dict[str, str]]:
+    """(frame, original names, {renamed name: safe name}) for handing
+    ``df`` to mapInArrow/applyInArrow. PySpark looks each input column
+    up by its unquoted name there, so a name holding a dot or a backtick
+    fails at plan build; such columns get a positional name, which the
+    Arrow function swaps back. The plan is unchanged when no name needs
+    it."""
+    names = df.columns
+    safe = {c: f"__col{i}__" for i, c in enumerate(names) if "." in c or "`" in c}
+    if safe:
+        df = df.toDF(*[safe.get(c, c) for c in names])
+    return df, names, safe
+
+
 def _map_in_pandas_exact(df: DataFrame, fn, schema) -> DataFrame:
     """``df.mapInPandas(fn, schema)`` with the float null/NaN
     distinction preserved through both conversions (mapInArrow)."""
@@ -1054,11 +1103,12 @@ def _map_in_pandas_exact(df: DataFrame, fn, schema) -> DataFrame:
     if isinstance(schema, str):
         schema = _parse_ddl(df.sparkSession, schema)
     arrow_schema = to_arrow_schema(schema)
+    df, names, _ = _safe_names(df)
 
     def _arrow_fn(batches):
         def _pdfs():
             for b in batches:
-                yield _pdf_from_arrow(b)
+                yield _pdf_from_arrow(b.rename_columns(names))
 
         for out in fn(_pdfs()):
             yield _pdf_to_arrow(out, arrow_schema)
@@ -1066,25 +1116,25 @@ def _map_in_pandas_exact(df: DataFrame, fn, schema) -> DataFrame:
     return df.mapInArrow(_arrow_fn, schema)
 
 
-def _apply_in_pandas_exact(grouped, fn, schema) -> DataFrame:
-    """``grouped.applyInPandas(fn, schema)`` with float null/NaN exact
-    (applyInArrow). ``fn``: pandas DataFrame -> pandas DataFrame; float
-    columns arrive as nullable Float64/Float32."""
+def _apply_in_pandas_exact(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
+    """``df.groupBy(*keys).applyInPandas(fn, schema)`` with float
+    null/NaN exact (applyInArrow). ``fn``: pandas DataFrame -> pandas
+    DataFrame; float columns arrive as nullable Float64/Float32."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    session = grouped._df.sparkSession if hasattr(grouped, "_df") else None
     if isinstance(schema, str):
-        schema = _parse_ddl(session, schema)
+        schema = _parse_ddl(df.sparkSession, schema)
     arrow_schema = to_arrow_schema(schema)
+    df, names, safe = _safe_names(df)
 
     def _arrow_fn(table):
         import pyarrow as pa
 
-        pdf = _pdf_from_arrow(table)
+        pdf = _pdf_from_arrow(table.rename_columns(names))
         out = fn(pdf)
         return pa.Table.from_batches([_pdf_to_arrow(out, arrow_schema)])
 
-    return grouped.applyInArrow(_arrow_fn, schema)
+    return df.groupBy(*[safe.get(k, k) for k in keys]).applyInArrow(_arrow_fn, schema)
 
 
 def _parse_ddl(session, ddl: str):
@@ -2923,9 +2973,7 @@ class Pipeline:
         def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
             return fn(pdf.drop(columns="__gid__"))
 
-        result = _apply_in_pandas_exact(
-            with_gid.groupBy("__gid__"), _apply, out_schema
-        )
+        result = _apply_in_pandas_exact(with_gid, ["__gid__"], _apply, out_schema)
         return self._next(result)
 
     def inject(self, column: str, alias: str | None = None) -> "Pipeline":
@@ -3644,7 +3692,17 @@ class Pipeline:
         return out
 
     def _report_progress(self) -> None:
-        for kept, latest in self._hooks.get("progress", []):
+        from py4j.protocol import Py4JJavaError
+
+        hooks = self._hooks.get("progress", [])
+        if hooks:
+            # Spark completes an Observation from its asynchronous
+            # listener bus: drain it, so a plan that just ran is seen
+            try:
+                self.df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            except Py4JJavaError:  # TimeoutException: still busy after Spark's 10 s
+                pass
+        for kept, latest in hooks:
             rows = _observed_rows(latest)
             rows = _observed_rows(kept) if rows is None else rows
             if rows is not None:
@@ -3678,9 +3736,7 @@ class GroupedPipeline:
         """Arbitrary per-group transform (UDAF/UDTF surface) — distributed,
         one group per pandas DataFrame. Float columns arrive as nullable
         Float64/Float32 (NaN-exact interchange, r12)."""
-        df = _apply_in_pandas_exact(
-            self.parent.df.groupBy(*self.columns), fn, schema
-        )
+        df = _apply_in_pandas_exact(self.parent.df, self.columns, fn, schema)
         return self.parent._next(df)
 
     def rows(self) -> Pipeline:

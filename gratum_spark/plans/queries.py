@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup, joins, multimodal, similarity, text
-from ..pipeline import Pipeline
+from ..pipeline import Pipeline, fan_scan
 from ..sources import table
 
 # Money-sum helper: exact, order-independent, engine-portable.
@@ -63,37 +63,17 @@ def pinned(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-# Scale-adaptive scan fan-out (r15, guide §2.5 "input skew"): at the
-# bench SFs every table is ONE parquet row group, so a scan stage is a
-# single task no matter what maxPartitionBytes/openCostInBytes say (a
-# row group is indivisible — verified empirically: openCost 128KB gives
-# 32 byte-range splits but every row still lands in the one split
-# holding the row-group midpoint, zero speedup), and CPU-heavy work
-# sitting before the first exchange — here exact-decimal partial
-# aggregation — runs single-threaded on a 32-core session. Round-robin
-# repartition to the session parallelism, but ONLY when the scan
-# actually has fewer splits than cores: the condition reads the real
-# FileScan partition count from the engine, so at 100 TB, where a table
-# scan has thousands of splits, no shuffle is inserted and the plan is
-# byte-identical. Worth it only where heavy per-row/aggregate CPU sits
-# directly on the scan; join-heavy queries (q3/q5) gain nothing — their
-# fact scan feeds a join exchange that already redistributes.
-def fan_scan(df: DataFrame) -> DataFrame:
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
-
-
 # --------------------------------------------------------------------------
 # TPC-H-ish analytics
 # --------------------------------------------------------------------------
 
 def q1_pricing_summary(spark, sf) -> DataFrame:
     """Pricing summary: filter + group_by.agg (sums/avgs/counts)."""
-    # fan_scan at the source: the shipdate filter still pushes down to
-    # the parquet scan (Catalyst moves predicates below a Repartition;
-    # asserted in test_q1_filter_pushdown_survives_fan_scan).
+    # fan_scan (pipeline.py, the engine's one fan-out policy) at the
+    # source: heavy exact-decimal partial aggregation sits directly on
+    # the scan. The shipdate filter still pushes down to the parquet
+    # scan (Catalyst moves predicates below a Repartition; asserted in
+    # test_q1_filter_pushdown_survives_fan_scan).
     return (
         Pipeline(fan_scan(T(spark, sf, "lineitem").df), "lineitem")
         .filter("l_shipdate <= timestamp'1998-09-01 00:00:00'")
@@ -1517,7 +1497,6 @@ def dedup_ngram(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     pairs = dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.12,
-        n_partitions=spark.sparkContext.defaultParallelism,
     )
     return pinned(pairs).orderBy("a", "b")
 
@@ -1564,7 +1543,6 @@ def dedup_minhash(spark, sf) -> DataFrame:
     return pinned(
         dedup.minhash_lsh_pairs(
             docs, "doc_id", "text", n_hashes=64, bands=16, threshold=0.10,
-            n_partitions=spark.sparkContext.defaultParallelism,
         )
     ).orderBy("a", "b")
 
@@ -1574,7 +1552,6 @@ def dedup_simhash(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     return dedup.simhash_pairs(
         docs, "doc_id", "text", max_hamming=16,
-        n_partitions=spark.sparkContext.defaultParallelism,
     ).orderBy("a", "b")
 
 
@@ -1641,7 +1618,6 @@ def dedup_minhash_planted(spark, sf) -> DataFrame:
     corpus, planted = _planted_clone_corpus(docs)
     cand = dedup.minhash_lsh_pairs(
         corpus, "doc_id", "text", n_hashes=64, bands=16, threshold=0.10,
-        n_partitions=spark.sparkContext.defaultParallelism,
     )
     return _planted_found_flags(planted, cand)
 
@@ -1656,7 +1632,6 @@ def dedup_simhash_planted(spark, sf) -> DataFrame:
     corpus, planted = _planted_clone_corpus(docs)
     cand = dedup.simhash_pairs(
         corpus, "doc_id", "text", max_hamming=16,
-        n_partitions=spark.sparkContext.defaultParallelism,
     )
     return _planted_found_flags(planted, cand)
 
@@ -1925,7 +1900,6 @@ def dedup_minhash_verified(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     pairs = dedup.minhash_verified_pairs(
         docs, "doc_id", "text", shingle_k=3, threshold=0.5,
-        n_partitions=spark.sparkContext.defaultParallelism,
     )
     return pinned(pairs).orderBy("a", "b")
 
@@ -1942,7 +1916,6 @@ def dedup_incremental(spark, sf) -> DataFrame:
     return pinned(
         dedup.minhash_verified_pairs_cross(
             new_batch, corpus, "doc_id", "text", threshold=0.5,
-            n_partitions=spark.sparkContext.defaultParallelism,
         )
     ).orderBy("new_id", "corpus_id")
 
@@ -2012,7 +1985,6 @@ def corpus_novel_docs(spark, sf) -> DataFrame:
     return pinned(
         dedup.corpus_novel(
             new_batch, corpus, "doc_id", "text", threshold=0.5,
-            n_partitions=spark.sparkContext.defaultParallelism,
         ).select("doc_id", "lang", "source", "n_chars")
     ).orderBy("doc_id")
 
@@ -2182,7 +2154,6 @@ def pipeline_pretraining(spark, sf) -> DataFrame:
     corpus = kept.filter(F.col("doc_id") % 10 != 0)
     novel = dedup.corpus_novel(
         new_batch, corpus, "doc_id", "text", threshold=0.5,
-        n_partitions=spark.sparkContext.defaultParallelism,
     )
     chunks = text.chunk_words(novel, "doc_id", "text", size=64, stride=64)
     ordered = chunks.withColumn(
@@ -2912,7 +2883,6 @@ def dedup_spans(spark, sf) -> DataFrame:
     return pinned(
         dedup.duplicate_spans(
             docs, "doc_id", "text", k=10,
-            n_partitions=spark.sparkContext.defaultParallelism,
         )
     ).orderBy("id")
 
@@ -2956,7 +2926,6 @@ def dedup_span_rewrite(spark, sf) -> DataFrame:
     return pinned(
         dedup.duplicate_span_rewrite(
             docs, "doc_id", "text", k=10,
-            n_partitions=spark.sparkContext.defaultParallelism,
         )
     ).orderBy("id")
 
@@ -3189,7 +3158,6 @@ def text_pmi(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     return text.pmi_bigrams(
         docs, "doc_id", "text", min_count=5, k=15,
-        n_partitions=spark.sparkContext.defaultParallelism,
     ).orderBy(
         F.col("pmi").desc(), F.col("bigram").asc()
     )
@@ -3227,7 +3195,6 @@ def text_perplexity(spark, sf) -> DataFrame:
     return pinned(
         text.lm_score(
             docs, "doc_id", "text", alpha=0.5,
-            n_partitions=spark.sparkContext.defaultParallelism,
         )
     ).orderBy("id")
 
@@ -3280,7 +3247,6 @@ def corpus_dsir(spark, sf) -> DataFrame:
     return pinned(
         sampling.dsir_logratios(
             docs, target, "doc_id", "text",
-            n_partitions=spark.sparkContext.defaultParallelism,
             # the target IS a slice of the source corpus: derive its
             # model from the source feature table (identical counts)
             # instead of tokenizing the en-subset a second time (r16)

@@ -96,6 +96,24 @@ def test_add_step_error_threshold_aborts(spark):
         p.go()
 
 
+@pytest.mark.parametrize("name", ["a.b", "c`d"])
+def test_add_step_over_a_name_that_needs_quoting(spark, name):
+    """A column name holding a dot or a backtick reaches the closure
+    as is: the Arrow map must not look columns up by parsed name."""
+    from gratum_spark import sources
+
+    quoted = "`" + name.replace("`", "``") + "`"
+    p = sources.from_collection(
+        spark, [{name: 1, "g": "x"}, {name: 2, "g": "y"}], f"{quoted} long, g string"
+    ).add_step("s", lambda r: {**r, "g": r["g"] + str(r[name])} if r[name] > 1 else None)
+    assert [(r[name], r["g"]) for r in p.df.collect()] == [(2, "y2")]
+    stat = p.go()
+    assert stat.loaded == 1 and stat.rejections_for(RejectionCategory.REJECTION) == 1
+    assert [r[name] for r in p.rejections_df().collect()] == [1]
+    grouped = p.group_by("g").apply_in_pandas(lambda pdf: pdf, p.df.schema)
+    assert [r[name] for r in grouped.df.collect()] == [2]
+
+
 def test_every_public_operator_is_replayed_or_excluded():
     """prepend_step replays the recorded operator chain; an operator
     missing from _REPLAYED would be silently DROPPED from the rebuilt

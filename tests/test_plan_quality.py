@@ -214,7 +214,7 @@ def test_minhash_band_join_carries_only_band_h_id(spark, sf):
     from gratum_spark.operators.dedup import _lsh_candidates
 
     docs = table(spark, sf, "documents").df
-    _sig, pairs = _lsh_candidates(docs, "doc_id", "text", 3, 64, 16, None)
+    _sig, pairs = _lsh_candidates(docs, "doc_id", "text", 3, 64, 16)
     plan = plan_of(pairs)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     exchanges = [
@@ -382,6 +382,69 @@ def test_q1_filter_pushdown_survives_fan_scan(spark, sf):
     assert "RoundRobinPartitioning" in plan
     # partial aggregation must still sit between the exchanges
     assert "partial_" in plan
+
+
+def test_fan_scan_runs_no_job_and_keeps_shuffled_input(spark, sf):
+    """fan_scan is called while plans are built, so it must not run
+    Spark jobs. Counting the splits of an input that sits above a
+    shuffle would: AQE runs the shuffle stages to build its RDD. Such
+    an input is already spread by the shuffle and comes back as is."""
+    sc = spark.sparkContext
+    orders = table(spark, sf, "orders").df
+    customer = table(spark, sf, "customer").df
+    inputs = {
+        "fan_scan_groupby": orders.groupBy("o_orderstatus").count(),
+        "fan_scan_join": orders.join(
+            customer.hint("merge"), orders.o_custkey == customer.c_custkey
+        ),
+    }
+    for group, df in inputs.items():
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = Q.fan_scan(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], group
+        assert out is df, group
+
+
+def _round_robin_exchanges(monkeypatch, frame_type, build) -> int:
+    """Round-robin exchanges in every plan ``build()`` makes: its
+    result's and those of the frames it cuts with ``localCheckpoint``
+    (an eager cut hides its subtree from the result's plan)."""
+    plans = []
+    cut = frame_type.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(plan_of(self))
+        return cut(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_type, "localCheckpoint", recording)
+    plans.append(plan_of(build()))
+    monkeypatch.undo()
+    return sum(p.count("RoundRobinPartitioning") for p in plans)
+
+
+def test_operator_fans_out_only_an_input_with_few_splits(spark, monkeypatch):
+    """An operator input with defaultParallelism splits already is left
+    alone (no extra shuffle at scale); a one-split input is round-robined
+    exactly once before the CPU-heavy signature stage."""
+    from gratum_spark.operators import dedup
+
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.range(0, 200, 1, numPartitions=par).select(
+        "id",
+        F.concat_ws(
+            " ", F.lit("the quick brown fox"), (F.col("id") % 7).cast("string"), F.lit("jumps")
+        ).alias("text"),
+    )
+    wide = _round_robin_exchanges(
+        monkeypatch, type(docs), lambda: dedup.minhash_lsh_pairs(docs, "id", "text")
+    )
+    narrow = _round_robin_exchanges(
+        monkeypatch, type(docs), lambda: dedup.minhash_lsh_pairs(docs.coalesce(1), "id", "text")
+    )
+    assert (wide, narrow) == (0, 1)
 
 
 def test_filter_map_closure_predicates_are_arrow_batched(spark, sf):

@@ -339,11 +339,10 @@ def test_minhash_estimate_tracks_true_jaccard(spark):
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, far)], "id long, text string"
     )
+    # one split: the operator's fan-out path runs
     pairs = {
         (r["a"], r["b"]): r["est_jaccard"]
-        for r in dedup.minhash_lsh_pairs(
-            df, "id", "text", threshold=0.0, n_partitions=2
-        ).collect()
+        for r in dedup.minhash_lsh_pairs(df.coalesce(1), "id", "text", threshold=0.0).collect()
     }
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.5
     assert (1, 3) not in pairs and (2, 3) not in pairs
