@@ -85,7 +85,7 @@ HEADLINE = [
     "dedup_chunks",
     "text_tfidf",
     # added r6 (set grew 36 -> 40: totals are not directly comparable to
-    # r5 and earlier; tools/bench_compare.py normalizes per-query)
+    # r5 and earlier)
     "text_pack",
     "dedup_incremental",
     "corpus_novel_docs",

@@ -24,7 +24,7 @@ from ..functions import (
     simhash64_np,
     words,
 )
-from ..pipeline import fan_scan
+from ..pipeline import fan_scan, materialize
 
 __all__ = [
     "exact_dedup",
@@ -133,13 +133,9 @@ def _banded_signatures(
         .filter(F.col("sig").isNotNull())
     )
     # when the banding join references the signature subtree more than
-    # once, materialize it once. Eager localCheckpoint (MEMORY_AND_DISK
-    # blocks) instead of persist(): a bare persist with no unpersist
-    # accumulates in a long-lived session, while checkpoint blocks are
-    # released by the ContextCleaner when the plan is dropped. sig is
-    # narrow — id + n_hashes longs.
+    # once, materialize it once. sig is narrow — id + n_hashes longs.
     if checkpoint_sig:
-        sig = sig.localCheckpoint(eager=True)
+        sig = materialize(sig, eager=True)
 
     # the banding join stays NARROW — (band, h, id) only. Carrying the
     # n_hashes-long signature array through the exploded band rows
@@ -211,7 +207,7 @@ def minhash_lsh_pairs(
     Returns (a, b, est_jaccard) with a < b.
 
     Building this plan launches Spark jobs: the signatures are cut with
-    an eager ``localCheckpoint``.
+    an eager ``materialize``.
     """
     sig, pairs = _lsh_candidates(df, id_col, text_col, shingle_k, n_hashes, bands)
     sig_a = sig.select(F.col("id").alias("a"), F.col("sig").alias("sig_a"))
@@ -283,7 +279,7 @@ def minhash_verified_pairs(
     Returns (a, b, jaccard) with exact jaccard >= threshold.
 
     Building this plan launches Spark jobs: the candidate pair set is
-    cut with an eager ``localCheckpoint`` before the verify joins, so
+    cut with an eager ``materialize`` before the verify joins, so
     the call runs the shingle, signature and band-join stages and keeps
     the pairs in executor storage. The returned DataFrame is lazy from
     there on.
@@ -306,15 +302,15 @@ def minhash_verified_pairs(
     # pruned table is shared by both join sides via one lazy cut.
     # Same rows by construction — inner joins on a/b keep exactly the
     # candidate ids the semi-join keeps.
-    cands = cands.localCheckpoint(eager=True)
+    cands = materialize(cands, eager=True)
     cand_ids = (
         cands.select(F.col("a").alias("__vid__"))
         .unionByName(cands.select(F.col("b").alias("__vid__")))
         .dropDuplicates()
     )
-    sh = _candidate_shingles(
-        df, id_col, text_col, cand_ids, shingle_k, "__vid__"
-    ).localCheckpoint(eager=False)
+    sh = materialize(
+        _candidate_shingles(df, id_col, text_col, cand_ids, shingle_k, "__vid__")
+    )
     sh_a = sh.select(F.col("__vid__").alias("a"), F.col("__vsh__").alias("sh_a"))
     sh_b = sh.select(F.col("__vid__").alias("b"), F.col("__vsh__").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -362,7 +358,7 @@ def minhash_verified_pairs_cross(
     catch).
 
     Building this plan launches Spark jobs: the candidate pair set is
-    cut with an eager ``localCheckpoint``, so the call runs the
+    cut with an eager ``materialize``, so the call runs the
     signature and band-join stages of both inputs and keeps the pairs in
     executor storage. The returned DataFrame is lazy from there on.
     """
@@ -390,7 +386,7 @@ def minhash_verified_pairs_cross(
     # The pair set is materialized once (it feeds both prunes and the
     # verify join); rows identical by construction (the later inner
     # joins keep exactly the pruned ids).
-    cands = cands.localCheckpoint(eager=True)
+    cands = materialize(cands, eager=True)
     sh_new = _candidate_shingles(
         new_df, id_col, text_col,
         cands.select("new_id").dropDuplicates(), shingle_k, "new_id",
@@ -549,20 +545,19 @@ def simhash_pairs(
     Returns (a, b, hamming).
 
     Building this plan launches Spark jobs: the signatures are cut with
-    an eager ``localCheckpoint``.
+    an eager ``materialize``.
     """
     df = fan_scan(df)
     # hash words JVM-side (xxhash64), bit-vote vectorized in numpy;
     # materialize the (id, sh) signatures once — both self-join sides
-    # reference this pandas-UDF subtree. Eager localCheckpoint, not
-    # persist: checkpoint blocks are ContextCleaner-released when the
-    # plan is dropped (no long-session cache accumulation).
+    # reference this pandas-UDF subtree.
     sh = df.select(
         F.col(id_col).alias("id"),
         simhash64_np(
             F.transform(words(F.col(text_col)), lambda w: F.xxhash64(w))
         ).alias("sh"),
-    ).localCheckpoint(eager=True)
+    )
+    sh = materialize(sh, eager=True)
     n_blocks = 64 // prefix_bits
     blocks = [
         F.struct(
@@ -609,22 +604,18 @@ def ngram_jaccard_pairs(
     Returns (a, b, jaccard) with a < b, jaccard >= threshold.
 
     Building this plan launches Spark jobs: the shingle index and the
-    per-doc sizes are cut with eager ``localCheckpoint``s, and the doc
+    per-doc sizes are cut eagerly with ``materialize``, and the doc
     count that sets the stop-shingle cap is collected.
     """
     df = fan_scan(df)
     # materialize the exploded index once: the (interpreted-HOF) shingle
     # computation is referenced by the size agg, the stop-shingle
     # frequency pass, and BOTH self-join sides — rebuilt it re-executes
-    # 4x (measured ~2x query slowdown at bench scale). Eager
-    # localCheckpoint, not persist: blocks release with the plan instead
-    # of accumulating in a long-lived session.
-    sh = (
-        df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("__ws__"))
-        .select("id", F.explode(shingles_of_words(F.col("__ws__"), k)).alias("shingle"))
-        .localCheckpoint(eager=True)
-    )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n")).localCheckpoint(eager=True)
+    # 4x (measured ~2x query slowdown at bench scale).
+    sh = df.select(F.col(id_col).alias("id"), words(F.col(text_col)).alias("__ws__"))
+    sh = sh.select("id", F.explode(shingles_of_words(F.col("__ws__"), k)).alias("shingle"))
+    sh = materialize(sh, eager=True)
+    sizes = materialize(sh.groupBy("id").agg(F.count("*").alias("n")), eager=True)
     # stop-shingle guard: drop shingles present in >1% of docs (min 100),
     # with an ABSOLUTE cap — a relative-only cap stops capping at scale
     # (10 B docs would allow 100 M-doc shingles ⇒ 10^16 pair rows from a
@@ -760,21 +751,26 @@ def connected_components(
     (join on dst, groupBy src) — and converges in O(graph diameter)
     rounds. Dedup-pair graphs are near-star-shaped (tiny diameter), so
     this beats the constant-factor-heavier large-star/small-star
-    alternation in practice; lineage is cut with localCheckpoint each
-    round so the plan doesn't grow exponentially, and convergence is the
-    driver-side count of changed labels (one scalar per round).
+    alternation in practice; lineage is cut each round so the plan
+    doesn't grow exponentially, and convergence is the driver-side count
+    of changed labels (one scalar per round).
+
+    Building this plan launches Spark jobs: each round cuts its label
+    table with an eager ``materialize`` and counts the changed labels,
+    two jobs per round for up to ``max_iter`` rounds. The cuts hold the
+    symmetrized edge set (two (u, v) rows per distinct edge) and one
+    (node, new_comp, comp) table per round.
     """
     sym = edges.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sym = sym.dropDuplicates(["u", "v"]).localCheckpoint(eager=False)
+    sym = materialize(sym.dropDuplicates(["u", "v"]))
 
-    labels = (
+    labels = materialize(
         sym.select(F.col("u").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
-        .localCheckpoint(eager=False)
     )
     for _ in range(max_iter):
         nbr_min = (
@@ -791,8 +787,8 @@ def connected_components(
                 ),
                 F.col("comp"),
             )
-            .localCheckpoint()
         )
+        updated = materialize(updated, eager=True)
         changed = updated.filter(F.col("new_comp") != F.col("comp")).count()
         labels = updated.select("node", F.col("new_comp").alias("comp"))
         if changed == 0:
@@ -1173,17 +1169,17 @@ def _duplicate_span_ranges(
     # r16: the position index is referenced TWICE (the dup-count
     # aggregate and the hits join probe), and Catalyst does not share
     # subplans — the k-word slice+concat shingle computation ran twice
-    # per query. Materialize it once (eager localCheckpoint, the same
-    # trade ngram_jaccard_pairs makes for its inverted index; blocks
-    # are ContextCleaner-released). A/B at sf0.1, alternating min-of-6:
-    # 1.43 -> 1.31 s, checkpoint wins every pair; at scale it is one
-    # full corpus shingle pass instead of two.
+    # per query. Materialize it once (eager, the same trade
+    # ngram_jaccard_pairs makes for its inverted index). A/B at sf0.1,
+    # alternating min-of-6: 1.43 -> 1.31 s, checkpoint wins every pair;
+    # at scale it is one full corpus shingle pass instead of two.
     sh = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
             F.transform(starts, lambda i: F.concat_ws(" ", F.slice(warr, i + 1, k)))
         ).alias("pos", "shingle"),
-    ).localCheckpoint(eager=True)
+    )
+    sh = materialize(sh, eager=True)
     dup = (
         sh.groupBy("shingle")
         .agg(F.count("*").alias("__occ__"))
@@ -1230,7 +1226,7 @@ def duplicate_spans(
     Returns (id, n_tokens, n_dup_spans, dup_tokens, dup_frac).
 
     Building this plan launches Spark jobs: the shingle positions are
-    cut with an eager ``localCheckpoint``.
+    cut with an eager ``materialize``.
     """
     spans = _duplicate_span_ranges(df, id_col, text_col, k)
     per_doc = spans.groupBy("id").agg(
@@ -1280,7 +1276,7 @@ def duplicate_span_rewrite(
     Returns (id, n_tokens, removed_tokens, clean_text).
 
     Building this plan launches Spark jobs: the shingle positions are
-    cut with an eager ``localCheckpoint``.
+    cut with an eager ``materialize``.
     """
     spans = (
         _duplicate_span_ranges(df, id_col, text_col, k)

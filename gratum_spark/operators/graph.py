@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..pipeline import materialize
+
 __all__ = ["pagerank"]
 
 _DEC = "decimal(38,12)"
@@ -90,6 +92,13 @@ def pagerank(
     contributions), and the rank of sink nodes (out-degree 0) is
     redistributed uniformly — the standard dangling-mass term (Brin &
     Page 1998 §2.1.1) — so total rank mass stays exactly 1.
+
+    Building this plan launches Spark jobs: the edge table is cut with
+    an eager ``materialize`` (one (src, dst, deg) row per distinct
+    edge, doubled when undirected) and the node count is collected.
+    Directed mode also eagerly cuts the (node, is_sink) table and each
+    superstep's (node, is_sink, rank) table: one node-sized table per
+    iteration.
     """
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if undirected:
@@ -110,15 +119,12 @@ def pagerank(
         ).select("__e__.src", "__e__.dst")
     # every iteration re-joins the edge table; without a lineage cut
     # Catalyst re-derives it (scan + distinct) once per iteration and
-    # the plan grows superlinearly in n_iters. Eager localCheckpoint
-    # (MEMORY_AND_DISK blocks, ContextCleaner-released) — same trade as
-    # connected_components; call setCheckpointDir + .checkpoint() for a
-    # replayable cut on a real cluster.
+    # the plan grows superlinearly in n_iters.
     # the static side is also PRE-PARTITIONED on the join key before
     # the cut (the Pregel trade: co-locate the graph once, shuffle only
     # the ranks each superstep) — the checkpointed LogicalRDD keeps the
     # hashpartitioning, so no iteration re-shuffles the edge table
-    ed = _edge_table(e).localCheckpoint(eager=True)
+    ed = materialize(_edge_table(e), eager=True)
     if undirected:
         # doubled edges ⇒ every node appears as src; no dangling nodes
         nodes = ed.select(F.col("src").alias("node")).distinct()
@@ -137,8 +143,8 @@ def pagerank(
             .distinct()
             .join(srcs, F.col("node") == F.col("__s__"), "left")
             .select("node", F.col("__s__").isNull().alias("is_sink"))
-            .localCheckpoint(eager=True)
         )
+        nodes = materialize(nodes, eager=True)
     # the N scalar appears in EVERY iteration's rank update. It used to
     # ride along as an eagerly-checkpointed 1-row frame cross-joined
     # (broadcast) per superstep; since r15 the count is read once on
@@ -251,7 +257,7 @@ def pagerank(
                     F.lit(0.0),
                 ).alias("dm")
             )
-            ranks = (
+            ranks = materialize(
                 nodes.join(in_sums, on="node", how="left")
                 .crossJoin(F.broadcast(dmass))
                 .select(
@@ -265,10 +271,10 @@ def pagerank(
                             + F.col("dm") / F.lit(n_rows)
                         )
                     ).alias("rank"),
-                )
+                ),
                 # ranks feed the next iteration TWICE (contrib + dmass);
                 # without a per-superstep cut the unrolled plan doubles
                 # per iteration
-                .localCheckpoint(eager=True)
+                eager=True,
             )
     return ranks.select("node", "rank")

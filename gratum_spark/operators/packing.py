@@ -13,7 +13,7 @@ Built on a DISTRIBUTED PREFIX SUM — no single-partition stage:
    rejoins as a broadcast.
 
 The same shape as pipeline._distributed_run_ids (shares its
-consistency checkpoint: the totals digest and the offset join both
+``materialize`` cut: the totals digest and the offset join both
 consume the range-shuffled frame, and RangePartitioner boundaries are
 nondeterministic across plan branches). At 100 TB: one range exchange
 of the data + one broadcast of ~#partitions rows; every other stage is
@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pipeline import consistency_checkpoint
+from ..pipeline import materialize
 
 
 def global_prefix_sum(
@@ -66,7 +66,7 @@ def global_prefix_sum(
         "__lsum__",
         F.sum(wc).over(wloc.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
     ).withColumn("__w__", wc)
-    d = consistency_checkpoint(d)
+    d = materialize(d)
 
     totals = d.groupBy("__pid__").agg(F.sum("__w__").alias("__tot__"))
     wp = Window.orderBy("__pid__").rowsBetween(Window.unboundedPreceding, -1)

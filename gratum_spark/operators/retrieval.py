@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import words
+from ..pipeline import materialize
 
 __all__ = ["build_postings", "bm25_topk", "write_postings_index", "bm25_topk_stored"]
 
@@ -81,12 +82,12 @@ def bm25_topk(
     # postings feeds FOUR plan branches (dft, dft_q's semi-join probe,
     # the scored join, and doclens→stats) and Catalyst does not share
     # the tokenize+aggregate subtree across them — without a cut the
-    # corpus is re-tokenized once per branch. The lazy localCheckpoint
+    # corpus is re-tokenized once per branch. The lazy cut
     # materializes the inverted index once at first use (the same table
     # the docstring says to persist at 100 TB); everything downstream
     # is vocabulary-sized work off it. (A/B at sf0.1: lazy 1.03 s vs
     # eager 1.18 vs no-cut 1.25 vs the old two-tokenize shape 1.25.)
-    postings = postings.localCheckpoint(eager=False)
+    postings = materialize(postings)
     doclens = postings.groupBy("id").agg(F.sum("tf").alias("dl"))
     stats = doclens.agg(
         F.count("*").cast("double").alias("n_docs"),

@@ -19,7 +19,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..pipeline import fan_scan
+from ..pipeline import fan_scan, materialize
 
 __all__ = [
     "hash_split",
@@ -285,7 +285,7 @@ def dsir_logratios(
     silently changes every score; pass ``False`` when ids may repeat.
 
     Building this plan launches Spark jobs: the source feature table and
-    the target model table are cut with eager ``localCheckpoint``s.
+    the target model table are cut eagerly with ``materialize``.
     """
     B = 16 ** prefix_len
     # tokenize/hash is the CPU-heavy stage
@@ -332,33 +332,31 @@ def dsir_logratios(
     # ENTIRE second tokenize+md5 pass over the target corpus removed.
     # The semi join keys on id — small side, AQE broadcasts it.
     if target_within_source:
-        doc_feats = (
-            buckets(source)
-            .groupBy("id", "__b__")
-            .agg(F.count("*").alias("__m__"))
-            .localCheckpoint(eager=True)
+        doc_feats = materialize(
+            buckets(source).groupBy("id", "__b__").agg(F.count("*").alias("__m__")),
+            eager=True,
         )
-        tgt_counts = (
+        tgt_counts = materialize(
             doc_feats.join(
                 target.select(F.col(id_col).alias("id")), on="id", how="leftsemi"
             )
             .groupBy("__b__")
-            .agg(F.sum("__m__").alias("__ct__"))
-            .localCheckpoint(eager=True)
+            .agg(F.sum("__m__").alias("__ct__")),
+            eager=True,
         )
     else:
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_tgt = pool.submit(
-                lambda: buckets(target)
-                .groupBy("__b__")
-                .agg(F.count("*").alias("__ct__"))
-                .localCheckpoint(eager=True)
+                lambda: materialize(
+                    buckets(target).groupBy("__b__").agg(F.count("*").alias("__ct__")),
+                    eager=True,
+                )
             )
             f_src = pool.submit(
-                lambda: buckets(source)
-                .groupBy("id", "__b__")
-                .agg(F.count("*").alias("__m__"))
-                .localCheckpoint(eager=True)
+                lambda: materialize(
+                    buckets(source).groupBy("id", "__b__").agg(F.count("*").alias("__m__")),
+                    eager=True,
+                )
             )
             tgt_counts = f_tgt.result()
             doc_feats = f_src.result()

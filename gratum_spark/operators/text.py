@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import shingles_of_words, words
-from ..pipeline import fan_scan
+from ..pipeline import fan_scan, materialize
 
 __all__ = [
     "token_stats_named",
@@ -511,7 +511,7 @@ def pmi_bigrams(
     Returns (bigram, n, pmi) — pmi rounded to 6dp for engine parity.
 
     Building this plan launches Spark jobs: the count table is cut with
-    an eager ``localCheckpoint``.
+    an eager ``materialize``.
     """
     # The count tables are tiny (vocabulary-sized) but their subtree
     # tokenizes the whole corpus, and pmi_from_counts references the
@@ -521,7 +521,7 @@ def pmi_bigrams(
     # the uni/bi splits downstream are filters over the materialized
     # table — the in-operator version of the "materialize ngram_counts
     # once" advice the docstring gives for stored-table use at scale.
-    counts = _combined_gram_counts(df, text_col).localCheckpoint(eager=True)
+    counts = materialize(_combined_gram_counts(df, text_col), eager=True)
     uni, bi = _split_gram_counts(counts)
     return pmi_from_counts(uni, bi, min_count=min_count, k=k)
 
@@ -655,7 +655,7 @@ def lm_score(
     `lm_score_from_counts` directly.
 
     Building this plan launches Spark jobs: the per-doc gram counts are
-    cut with an eager ``localCheckpoint``."""
+    cut with an eager ``materialize``."""
     # r15 single-scan shape: ONE tokenize pass builds the per-doc
     # (id, gram, m) count table (checkpointed — it is referenced by
     # four branches below), and BOTH model tables plus the per-doc
@@ -674,8 +674,8 @@ def lm_score(
         )
         .groupBy("id", "g")
         .agg(F.count("*").alias("m"))
-        .localCheckpoint(eager=True)
     )
+    dg = materialize(dg, eager=True)
     uni = (
         dg.filter(~F.col("g").contains(" "))
         .groupBy("g")

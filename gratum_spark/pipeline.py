@@ -255,7 +255,7 @@ def _local_run_id_frame(
     (partitions globally ordered) + partition-local run-ids via local
     windows. Split out so plan-quality tests can assert this stage's
     shape (rangepartitioning, no SinglePartition) directly — the full
-    operator wraps it in a consistency checkpoint that hides the plan
+    operator wraps it in a ``materialize`` cut that hides the plan
     behind an RDD scan."""
     d = df.repartitionByRange(ordc).withColumn("__pid__", F.spark_partition_id())
     wloc = Window.partitionBy("__pid__").orderBy(ordc)
@@ -270,33 +270,52 @@ def _local_run_id_frame(
     )
 
 
-def consistency_checkpoint(d: DataFrame) -> DataFrame:
-    """Pin a frame so every downstream plan branch reads IDENTICAL
-    partitions. Needed whenever two consumers depend on the same
-    nondeterministic partitioning (RangePartitioner samples boundaries
-    with an RDD-id-dependent seed; spark_partition_id then differs
-    between physical instantiations). Shared by _distributed_run_ids and
-    operators.packing.global_prefix_sum.
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Cut ``df``'s lineage: the returned frame reads ``df``'s rows from
+    stored blocks (a ``Scan ExistingRDD``) instead of re-deriving its
+    subtree. The engine's one materialization barrier, used wherever a
+    subtree is referenced by several plan branches (Catalyst does not
+    share subplans), wherever an iterative plan would otherwise grow per
+    round, and wherever branches must agree on partitioning.
 
-    RELIABILITY (r5 ADVICE): localCheckpoint blocks live on executors
-    and are NOT replayable — on a real cluster, losing an executor
-    after materialization fails the job instead of recomputing. Opt in
-    to a reliable checkpoint by setting a checkpoint dir on the session
-    (spark.sparkContext.setCheckpointDir("hdfs://...")): when one is
-    configured the frame checkpoints there instead (replayable from
-    shared storage, at the cost of a cluster-FS write). Local mode
-    keeps the zero-copy localCheckpoint default.
+    A checkpoint, not ``cache()``: checkpoint blocks are released by the
+    ContextCleaner once the plans that reference them are dropped, while
+    a bare cache with no unpersist accumulates storage memory across a
+    long-lived session.
 
-    The reliable path PERSISTS before checkpointing (the canonical
-    pairing): an unpersisted reliable checkpoint runs a SECOND job that
-    recomputes the lineage to write the files — doubling upstream work
-    and, worse, letting a nondeterministically-partitioned lineage
-    (RangePartitioner again) write partitions that differ from what the
-    first consumer already read, re-opening exactly the branch
-    divergence this function exists to close (r6 review finding)."""
-    if d.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return d.persist().checkpoint(eager=False)
-    return d.localCheckpoint(eager=False)
+    Consistency: every consumer of the returned frame reads IDENTICAL
+    partitions. Plan branches that depend on one nondeterministic
+    partitioning need that: RangePartitioner samples its boundaries
+    with an RDD-id-dependent seed, so two physical instantiations of a
+    range shuffle can place boundary rows (and ``spark_partition_id``)
+    differently.
+
+    ``eager=True`` runs a Spark job now, while the caller builds its
+    plan; a lazy cut materializes inside the first action that reads
+    it.
+
+    Reliability: with no checkpoint dir on the session the cut is a
+    ``localCheckpoint``. Its blocks live on executors and are NOT
+    replayable: losing an executor after the cut fails the query
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``) instead of recomputing.
+    Local mode keeps this zero-copy default. With a checkpoint dir set
+    (``spark.sparkContext.setCheckpointDir("hdfs://...")``) the frame is
+    checkpointed there instead, replayable from shared storage at the
+    cost of a file-system write. That path PERSISTS first: an
+    unpersisted reliable checkpoint runs a second job that recomputes
+    the lineage to write the files, doubling upstream work and letting
+    a nondeterministic lineage write partitions that differ from what
+    the first consumer read. An eager cut unpersists its input once the
+    files are written, leaving no cache entry behind; a lazy cut keeps
+    its input persisted (one input-sized MEMORY_AND_DISK cache entry
+    per lazy cut, for the life of the session)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    kept = df.persist()
+    out = kept.checkpoint(eager=eager)
+    if eager:
+        kept.unpersist()
+    return out
 
 
 # Scale-adaptive fan-out (r15, guide §2.5 "input skew"), the one policy
@@ -363,17 +382,12 @@ def _distributed_run_ids(
     run. Returns df + ``__gid__`` with helper columns dropped.
     """
     d = _local_run_id_frame(df, ordc, payload, starts_new_run)
-    # CONSISTENCY CHECKPOINT — load-bearing, not an optimization. The
-    # digest aggregate and the gid join both consume d; left as two plan
-    # branches they would each re-execute the range shuffle, and
-    # RangePartitioner SAMPLES its boundaries with an RDD-id-dependent
-    # seed — two physical instantiations can draw different boundaries,
-    # silently misaligning __pid__ between the digest and the data
-    # (boundary rows land in different partitions per branch). Lazy
-    # localCheckpoint materializes the frame once inside the consuming
-    # action; both branches then read identical partitions.
-    #
-    d = consistency_checkpoint(d)
+    # CONSISTENCY CUT — load-bearing, not an optimization. The digest
+    # aggregate and the gid join both consume d; left as two plan
+    # branches they would each re-execute the range shuffle and could
+    # draw different boundaries, silently misaligning __pid__ between
+    # the digest and the data.
+    d = materialize(d)
     stats = d.groupBy("__pid__").agg(
         F.max("__lid__").alias("__nruns__"),
         F.min_by(payload, ordc).alias("__first__"),
@@ -2059,12 +2073,13 @@ class Pipeline:
 
         gratum rows are schemaless maps; a DataFrame needs a static
         schema. Without an explicit ``schema`` the output schema is
-        inferred by running ``fn`` on ONE sampled row at plan time
-        (``limit(1)`` — one row-group read even at 100 TB): retained keys
-        keep their input types, added keys get types inferred from the
-        sample's Python values. If the closure's output keys vary by row
-        or the sample row rejects, pass ``schema`` (StructType or DDL
-        string) explicitly.
+        inferred at plan time: building the step collects up to 50 rows
+        (``limit(50)``, one early-stopping Spark job) and runs ``fn`` on
+        them until one returns a dict. Retained keys keep their input
+        types, added keys get types inferred from that result's Python
+        values. If the closure's output keys vary by row or every
+        sampled row rejects, pass ``schema`` (StructType or DDL string)
+        explicitly; that also skips the job.
 
         Scale: Arrow-batched ``mapInPandas`` with a per-row Python loop —
         the documented slow path, like every closure form here. Prefer

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import dedup, joins, multimodal, similarity, text
-from ..pipeline import Pipeline, fan_scan
+from ..pipeline import Pipeline, fan_scan, materialize
 from ..sources import table
 
 # Money-sum helper: exact, order-independent, engine-portable.
@@ -50,8 +50,9 @@ def T(spark: SparkSession, sf: str, name: str) -> Pipeline:
 # (and, measured, the duplicated tail segment also loses AQE's
 # post-shuffle stats). For queries whose tail is an expensive
 # non-shuffle segment (window interpolation, array-rebuild projections,
-# LSH verify joins) the lazy localCheckpoint materializes the RESULT
-# rows once — sampler and sort then both read the materialized blocks.
+# LSH verify joins) a lazy materialize() of the RESULT rows right
+# before the sort computes them once — sampler and sort then both read
+# the materialized blocks.
 # Measured at sf0.1: dedup_span_rewrite 2.3→0.5 s, dedup_ngram
 # 1.6→0.25 s, incremental cross-LSH 2.1→0.2 s (identical rows). At
 # scale the trade is storing one result-sized intermediate vs
@@ -59,8 +60,6 @@ def T(spark: SparkSession, sf: str, name: str) -> Pipeline:
 # the plan. Queries whose sort input is already a shuffle boundary
 # (plain groupBy tails) don't pay the double-compute and are left
 # unpinned.
-def pinned(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False)
 
 
 # --------------------------------------------------------------------------
@@ -1498,7 +1497,7 @@ def dedup_ngram(spark, sf) -> DataFrame:
     pairs = dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", k=3, threshold=0.12,
     )
-    return pinned(pairs).orderBy("a", "b")
+    return materialize(pairs).orderBy("a", "b")
 
 
 ORACLE_DEDUP_NGRAM = """
@@ -1540,7 +1539,7 @@ def dedup_minhash(spark, sf) -> DataFrame:
     are engine-specific; correctness is covered by the estimate-vs-exact
     test in tests/test_dedup.py)."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         dedup.minhash_lsh_pairs(
             docs, "doc_id", "text", n_hashes=64, bands=16, threshold=0.10,
         )
@@ -1683,10 +1682,7 @@ def ann_ivf_planted(spark, sf) -> DataFrame:
     ann_recall_exact)."""
     from functools import reduce as _reduce
 
-    # eager localCheckpoint, not .cache(): checkpoint blocks are
-    # ContextCleaner-released when the plan is dropped (same trade as
-    # the other ANN queries)
-    emb = T(spark, sf, "embeddings").df.localCheckpoint(eager=True)
+    emb = materialize(T(spark, sf, "embeddings").df, eager=True)
     assignments, centroids = similarity.ivf_build(emb, n_lists=8, n_iters=2)
     qrows = (
         emb.filter(F.col("vec_id") < 4)
@@ -1721,7 +1717,7 @@ def dedup_embedding(spark, sf) -> DataFrame:
     bucketing is hash-specific; exact-cosine path is oracle-checked in
     ann_topk)."""
     emb = T(spark, sf, "embeddings").df
-    return pinned(
+    return materialize(
         dedup.embedding_cosine_pairs(
             emb, "vec_id", "embedding", threshold=0.5, n_planes=6, n_tables=16
         )
@@ -1901,7 +1897,7 @@ def dedup_minhash_verified(spark, sf) -> DataFrame:
     pairs = dedup.minhash_verified_pairs(
         docs, "doc_id", "text", shingle_k=3, threshold=0.5,
     )
-    return pinned(pairs).orderBy("a", "b")
+    return materialize(pairs).orderBy("a", "b")
 
 
 def dedup_incremental(spark, sf) -> DataFrame:
@@ -1913,7 +1909,7 @@ def dedup_incremental(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     new_batch = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return pinned(
+    return materialize(
         dedup.minhash_verified_pairs_cross(
             new_batch, corpus, "doc_id", "text", threshold=0.5,
         )
@@ -1982,7 +1978,7 @@ def corpus_novel_docs(spark, sf) -> DataFrame:
     docs = T(spark, sf, "documents").df
     new_batch = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    return pinned(
+    return materialize(
         dedup.corpus_novel(
             new_batch, corpus, "doc_id", "text", threshold=0.5,
         ).select("doc_id", "lang", "source", "n_chars")
@@ -2149,7 +2145,7 @@ def pipeline_pretraining(spark, sf) -> DataFrame:
     # dedupe the mapInPandas scoring subtree across them — re-running
     # the model per branch is exactly what a 100 TB pipeline avoids by
     # checkpointing its filter stage (measured ~2x on this query)
-    kept = docs.join(good, on="doc_id").localCheckpoint(eager=False)
+    kept = materialize(docs.join(good, on="doc_id"))
     new_batch = kept.filter(F.col("doc_id") % 10 == 0)
     corpus = kept.filter(F.col("doc_id") % 10 != 0)
     novel = dedup.corpus_novel(
@@ -2379,11 +2375,7 @@ ORDER BY query_id, cosine DESC, vec_id
 
 def ann_ivf(spark, sf) -> DataFrame:
     """IVF approximate top-k (no oracle: recall-traded approximation)."""
-    # eager localCheckpoint, not .cache(): checkpoint blocks are
-    # ContextCleaner-released when the plan is dropped, while a bare
-    # cache with no unpersist accumulates storage memory across the
-    # 50-query driver session (same trade as operators/dedup.py)
-    emb = T(spark, sf, "embeddings").df.localCheckpoint(eager=True)
+    emb = materialize(T(spark, sf, "embeddings").df, eager=True)
     query = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     assignments, centroids = similarity.ivf_build(emb, n_lists=8, n_iters=2)
     return similarity.ivf_topk(
@@ -2398,11 +2390,7 @@ def ann_ivf_full_probe(spark, sf) -> DataFrame:
     pruning, in-list exact scoring) verifiable against the same SQL
     oracle as ann_topk. The recall-traded partial-probe variant stays in
     ann_ivf."""
-    # eager localCheckpoint, not .cache(): checkpoint blocks are
-    # ContextCleaner-released when the plan is dropped, while a bare
-    # cache with no unpersist accumulates storage memory across the
-    # 50-query driver session (same trade as operators/dedup.py)
-    emb = T(spark, sf, "embeddings").df.localCheckpoint(eager=True)
+    emb = materialize(T(spark, sf, "embeddings").df, eager=True)
     query = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     assignments, centroids = similarity.ivf_build(emb, n_lists=8, n_iters=2)
     topk = similarity.ivf_topk(
@@ -2420,11 +2408,7 @@ def ann_recall_exact(spark, sf) -> DataFrame:
     k-means build, probe, brute-force join, per-query recall) through
     an exact value check; the honest partial-probe metric stays in
     ann_recall."""
-    # eager localCheckpoint, not .cache(): checkpoint blocks are
-    # ContextCleaner-released when the plan is dropped, while a bare
-    # cache with no unpersist accumulates storage memory across the
-    # 50-query driver session (same trade as operators/dedup.py)
-    emb = T(spark, sf, "embeddings").df.localCheckpoint(eager=True)
+    emb = materialize(T(spark, sf, "embeddings").df, eager=True)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -2451,11 +2435,7 @@ def ann_recall(spark, sf) -> DataFrame:
     pinned in tests/test_similarity.py, the recall@full-probe==1.0
     invariant is driver-checked in ann_recall_exact, and the driver
     records the rows-only check here."""
-    # eager localCheckpoint, not .cache(): checkpoint blocks are
-    # ContextCleaner-released when the plan is dropped, while a bare
-    # cache with no unpersist accumulates storage memory across the
-    # 50-query driver session (same trade as operators/dedup.py)
-    emb = T(spark, sf, "embeddings").df.localCheckpoint(eager=True)
+    emb = materialize(T(spark, sf, "embeddings").df, eager=True)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding")
     )
@@ -2714,7 +2694,7 @@ def dedup_chunks(spark, sf) -> DataFrame:
     chunk_dedup_stats): a 10-word chunk repeated anywhere in the corpus
     survives only in its first-seen (doc, position)."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         dedup.chunk_dedup_stats(docs, "doc_id", "text", chunk_words=10)
     ).orderBy("id")
 
@@ -2819,7 +2799,7 @@ def text_tfidf(spark, sf) -> DataFrame:
     rank compares ROUND(score, 6) with term tie-break for cross-engine
     determinism."""
     out = text.tfidf_top_terms(T(spark, sf, "documents").df, "doc_id", "text", k=3)
-    return pinned(out.withColumn("rank", F.col("rank").cast("long"))).orderBy(
+    return materialize(out.withColumn("rank", F.col("rank").cast("long"))).orderBy(
         "id", "rank"
     )
 
@@ -2851,7 +2831,7 @@ def dedup_rewrite(spark, sf) -> DataFrame:
     repeated 10-word chunks survive only first-seen and each doc is
     rewritten from its survivors in order."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         dedup.chunk_dedup_rewrite(docs, "doc_id", "text", chunk_words=10)
     ).orderBy("id")
 
@@ -2880,7 +2860,7 @@ def dedup_spans(spark, sf) -> DataFrame:
     maximal spans (Lee et al. 2021 shape, distributed as shingle-count +
     gaps-and-islands instead of a suffix array)."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         dedup.duplicate_spans(
             docs, "doc_id", "text", k=10,
         )
@@ -2923,7 +2903,7 @@ def dedup_span_rewrite(spark, sf) -> DataFrame:
     in order — the aggressive all-occurrences variant; keep-first at
     fixed granularity is dedup_rewrite."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         dedup.duplicate_span_rewrite(
             docs, "doc_id", "text", k=10,
         )
@@ -3192,7 +3172,7 @@ def text_perplexity(spark, sf) -> DataFrame:
     log-likelihood — the CCNet-style perplexity quality filter. Each
     nll term rounds to 6dp before aggregation for engine parity."""
     docs = T(spark, sf, "documents").df
-    return pinned(
+    return materialize(
         text.lm_score(
             docs, "doc_id", "text", alpha=0.5,
         )
@@ -3244,7 +3224,7 @@ def corpus_dsir(spark, sf) -> DataFrame:
 
     docs = T(spark, sf, "documents").df
     target = docs.filter(F.col("lang") == "en")
-    return pinned(
+    return materialize(
         sampling.dsir_logratios(
             docs, target, "doc_id", "text",
             # the target IS a slice of the source corpus: derive its
@@ -3475,7 +3455,7 @@ def op_resample_interpolate(spark, sf) -> DataFrame:
     # fixed-width formatted string is equivalent but pays string
     # building + comparison inside the range sort (~1.5 s at sf0.1)
     return (
-        pinned(out)
+        materialize(out)
         .orderBy("user_id", "grid_ts")
         .select(
             "user_id",
@@ -3798,10 +3778,9 @@ def text_rerank_model(spark, sf) -> DataFrame:
     # them — without a cut the whole postings build ran twice. The
     # candidate set is |queries|·20 rows, so the eager checkpoint is
     # tiny.
-    bm = (
-        retrieval.bm25_topk(docs, "doc_id", "text", qdf, k=20)
-        .select("query_id", "doc_id")
-        .localCheckpoint(eager=True)
+    bm = materialize(
+        retrieval.bm25_topk(docs, "doc_id", "text", qdf, k=20).select("query_id", "doc_id"),
+        eager=True,
     )
     cand = bm.join(docs.select("doc_id", "text"), on="doc_id")
     scored = score_documents(cand, "doc_id", "text", model="fake").dropDuplicates(

@@ -88,6 +88,42 @@ def test_run_ids_reliable_checkpoint_opt_in(spark, tmp_path):
             pass
 
 
+def test_eager_reliable_cut_leaves_no_cache_entry(spark, tmp_path):
+    # with a checkpoint dir, materialize() persists before checkpointing;
+    # an eager cut unpersists once the files are written, so neither the
+    # helper nor an operator made of eager cuts (directed pagerank) leaves
+    # a cache entry behind. A lazy cut keeps its persist (documented bound).
+    from gratum_spark.operators.graph import pagerank
+    from gratum_spark.pipeline import materialize
+
+    from conftest import plan_of
+
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    src = spark.range(0, 1000, 1, 4).withColumn("v", F.col("id") * 2)
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (4, 3), (5, 5)], "src long, dst long"
+    )
+    want = sorted(pagerank(edges, undirected=False, n_iters=3).collect())
+    sc.setCheckpointDir(str(tmp_path / "ck"))
+    try:
+        cut = materialize(src, eager=True)
+        assert cm.lookupCachedData(src._jdf).isEmpty()
+        assert "Scan ExistingRDD" in plan_of(cut)
+        assert cut.agg(F.sum("v")).first()[0] == 999000
+
+        before = set(dict(sc._jsc.getPersistentRDDs()))
+        assert sorted(pagerank(edges, undirected=False, n_iters=3).collect()) == want
+        assert set(dict(sc._jsc.getPersistentRDDs())) <= before
+
+        lazy = materialize(src)
+        assert cm.lookupCachedData(src._jdf).isDefined()
+        assert lazy.count() == 1000
+        src.unpersist()
+    finally:
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(None))
+
+
 def test_filter_map_forms(people):
     # collection => IN
     assert people.filter({"gender": ["male", "female"]}).go().loaded == 5

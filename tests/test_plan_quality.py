@@ -283,7 +283,7 @@ def test_embedding_dedup_single_bucket_shuffle(spark, sf):
 
     Inspects the operator directly (same args as the dedup_embedding
     catalog query): since r15 the catalog query pins its result rows
-    before the final sort (pinned()), which replaces the upstream plan
+    before the final sort (materialize()), which replaces the upstream plan
     with a LogicalRDD scan in explain output."""
     from gratum_spark.operators import dedup as D
 
@@ -310,7 +310,7 @@ def test_tfidf_is_one_action(spark, sf):
 
     Inspects the operator directly (same args as the text_tfidf catalog
     query): since r15 the catalog query pins its result rows before the
-    final sort (pinned()), whose AQE materialization legitimately runs
+    final sort (materialize()), whose AQE materialization legitimately runs
     the upstream stages at build time and replaces the plan with a
     LogicalRDD scan — the no-collect guarantee lives in the operator."""
     from gratum_spark.operators import text as T2
@@ -339,7 +339,7 @@ def test_tfidf_is_one_action(spark, sf):
 
 
 def test_pinned_preserves_rows_and_truncates_plan(spark, sf):
-    """pinned() (r15, pin-before-global-sort) must be a pure
+    """materialize() (r15, pin-before-global-sort) must be a pure
     materialization point: identical rows/schema to the unpinned shape,
     while the downstream plan reads a LogicalRDD scan instead of
     re-deriving (and re-executing, via the range-sort sampler) the tail
@@ -350,10 +350,10 @@ def test_pinned_preserves_rows_and_truncates_plan(spark, sf):
         .withColumn("bucket", F.col("o_orderkey") % 7)
     )
     plain = base.orderBy("bucket", "o_orderkey")
-    pinned = Q.pinned(base).orderBy("bucket", "o_orderkey")
+    pinned = Q.materialize(base).orderBy("bucket", "o_orderkey")
     assert plain.schema == pinned.schema
     assert plain.collect() == pinned.collect()
-    assert "Scan ExistingRDD" in plan_of(Q.pinned(base))
+    assert "Scan ExistingRDD" in plan_of(Q.materialize(base))
 
 
 def test_fan_scan_is_noop_when_scan_has_parallelism(spark, sf):
@@ -537,20 +537,20 @@ def test_prefix_sum_packing_has_no_data_sized_single_partition_stage(spark, sf):
     from gratum_spark.operators.packing import global_prefix_sum as _gps
     import gratum_spark.pipeline as _pl
 
-    orig = _pl.consistency_checkpoint
-    _pl.consistency_checkpoint = lambda d: d  # peek under the checkpoint
+    orig = _pl.materialize
+    _pl.materialize = lambda d: d  # peek under the checkpoint
     try:
         import gratum_spark.operators.packing as _pk
 
-        pk_orig = _pk.consistency_checkpoint
-        _pk.consistency_checkpoint = lambda d: d
+        pk_orig = _pk.materialize
+        _pk.materialize = lambda d: d
         try:
             raw = _gps(docs, "doc_id", "n")
             s1 = plan_of(raw)
         finally:
-            _pk.consistency_checkpoint = pk_orig
+            _pk.materialize = pk_orig
     finally:
-        _pl.consistency_checkpoint = orig
+        _pl.materialize = orig
     assert "rangepartitioning" in s1
     data_singles = [
         q for q in re.split(r"\n\s*\n", s1)

@@ -60,8 +60,9 @@ coercions       trim / as_boolean / replace_values / defaults /
                 switch, Groovy elvis substitution, <= U+0020 trim,
                 strict date resolution) with LoadStatistic
                 loaded/rejected accounting.
-fill_down_ckpt / prefix_sum_ckpt  same trials as their base campaigns
-                but with a checkpoint dir set, driving the replayable
+fill_down_ckpt / prefix_sum_ckpt / connected_components_ckpt /
+pagerank_ckpt   same trials as their base campaigns but with a
+                checkpoint dir set, driving the replayable
                 persist().checkpoint() cluster branch.
 
 On failure the campaign prints the trial seed and the minimal
@@ -2296,10 +2297,10 @@ def fuzz_dates(spark, n: int, seed: int) -> list[str]:
 
 def _with_checkpoint_dir(base_fn):
     """Reliable-checkpoint campaign variant (r7 verdict task 5): run the
-    same trials with a checkpoint dir set on the SparkContext, so
-    consistency_checkpoint (gratum_spark/pipeline.py) takes the
-    replayable persist().checkpoint() branch — the real-cluster path —
-    instead of localCheckpoint. Gives the cluster branch the same
+    same trials with a checkpoint dir set on the SparkContext, so every
+    ``materialize`` cut (gratum_spark/pipeline.py) takes the replayable
+    persist().checkpoint() branch — the real-cluster path — instead of
+    localCheckpoint. Gives the cluster branch the same
     N×2-seed fuzz breadth the local branch has had since r5 (it was
     pytest-covered exactly once before this)."""
 
@@ -2655,6 +2656,8 @@ CAMPAIGNS = {
     "fill_down": (fuzz_fill_down, 25),
     "fill_down_ckpt": (_with_checkpoint_dir(fuzz_fill_down), 25),
     "prefix_sum_ckpt": (_with_checkpoint_dir(fuzz_prefix_sum), 15),
+    "connected_components_ckpt": (_with_checkpoint_dir(fuzz_connected_components), 20),
+    "pagerank_ckpt": (_with_checkpoint_dir(fuzz_pagerank), 20),
     "perplexity": (fuzz_perplexity, 20),
     "pagerank": (fuzz_pagerank, 20),
     "asof": (fuzz_asof, 25),
