@@ -122,8 +122,10 @@ def pagerank(
     # the plan grows superlinearly in n_iters.
     # the static side is also PRE-PARTITIONED on the join key before
     # the cut (the Pregel trade: co-locate the graph once, shuffle only
-    # the ranks each superstep) — the checkpointed LogicalRDD keeps the
-    # hashpartitioning, so no iteration re-shuffles the edge table
+    # the ranks each superstep), but the checkpointed LogicalRDD reports
+    # UnknownPartitioning, so the plan cannot use that co-location: on
+    # the non-broadcast path below, every superstep re-shuffles the
+    # full edge table
     ed = materialize(_edge_table(e), eager=True)
     if undirected:
         # doubled edges ⇒ every node appears as src; no dangling nodes

@@ -19,7 +19,8 @@ Spark design — wrap, don't re-implement:
 
 Scale posture: all hot-path operators are built-in Spark expressions
 (JVM, codegen'd). Python closures are supported for API parity but run
-as Arrow-batched pandas UDFs and are documented as the slow path.
+over Arrow batches, converted to row dicts, and are documented as the
+slow path.
 Order-dependent operators (fill_down_by, flatten_window, unique
 first-wins, limit) key off an explicit ``_row_order`` column stamped at
 the source scan — file/partition order, stable under later shuffles.
@@ -42,8 +43,6 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DataType,
-    DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     MapType,
@@ -139,110 +138,143 @@ def _is_regex(v: Any) -> bool:
     return isinstance(v, re.Pattern)
 
 
-def _batch_udf(batch_fn: Callable[[Any], Any], return_type, gated: bool = False):
-    """Arrow-batched UDF over ``batch_fn`` (a pandas batch -> result).
+# ------------------------------------------------------------ row closures
+# The one boundary for every Python closure that takes a row: filter and
+# the Condition-map closures, add_field, fill_down_by's decider,
+# add_step, flat_map and reduce_rows. Rows cross as Arrow data, and a
+# closure sees the values ``Row.asDict(recursive=True)`` gives for the
+# same row on the driver, as add_step's schema probe and exchange() do:
+# None for every null, an int for an integral type, float('nan') for a
+# NaN, a naive datetime in the Python process's local time for a
+# timestamp (the session time wherever the two zones agree, as both are
+# UTC under get_spark on a UTC host), a list for an array and a dict for
+# a map or a struct. pandas cannot hold that contract: it renders a null
+# long as NaN, an int next to a null as a float, and a null timestamp as
+# NaT. Closures never see the ``_row_order`` stamp.
+
+
+def _py_fix(t, out: bool = False) -> Callable[[Any], Any] | None:
+    """The per-value step that pyarrow's Python conversion of Arrow type
+    ``t`` leaves to do, or None when there is none. ``to_pylist`` gives
+    a timestamp as an aware datetime and a map as key-value pairs;
+    ``out=True`` gives the step back for ``from_pylist``, which would
+    take a naive datetime as UTC where PySpark takes it as local time.
+    The step passes None through."""
+    import datetime
+
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        if t.tz is None:
+            return None
+        if out:
+            f = lambda v: v.astimezone(datetime.timezone.utc)  # noqa: E731
+        else:
+            f = lambda v: v.astimezone().replace(tzinfo=None)  # noqa: E731
+    elif pa.types.is_map(t):
+        kf, vf = _py_fix(t.key_type, out), _py_fix(t.item_type, out)
+        if out and kf is None and vf is None:
+            return None  # from_pylist takes a dict as a map
+        kf, vf = kf or (lambda k: k), vf or (lambda x: x)
+        f = lambda v: {  # noqa: E731
+            kf(k): vf(x) for k, x in (v.items() if isinstance(v, dict) else v)
+        }
+    elif pa.types.is_struct(t):
+        fixes = [(x.name, g) for x in t if (g := _py_fix(x.type, out))]
+        if not fixes:
+            return None
+        f = lambda v: {**v, **{n: g(v.get(n)) for n, g in fixes}}  # noqa: E731
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
+        g = _py_fix(t.value_type, out)
+        if g is None:
+            return None
+        f = lambda v: [g(x) for x in v]  # noqa: E731
+    else:
+        return None
+    return lambda v: None if v is None else f(v)
+
+
+def _rows_from_arrow(data) -> list:
+    """Arrow rows as the row dicts a closure takes. ``data`` is a
+    RecordBatch, or a StructArray whose null entries become None."""
+    import pyarrow as pa
+
+    if isinstance(data, pa.StructArray):
+        names, columns = [f.name for f in data.type], data.flatten()
+    else:
+        names, columns = data.schema.names, data.columns
+    values = []
+    for col in columns:
+        fix, vals = _py_fix(col.type), col.to_pylist()
+        values.append(vals if fix is None else [fix(v) for v in vals])
+    rows = [dict(zip(names, r)) for r in zip(*values)] if values else [{} for _ in range(len(data))]
+    if isinstance(data, pa.StructArray) and data.null_count:
+        rows = [r if ok else None for r, ok in zip(rows, data.is_valid().to_pylist())]
+    return rows
+
+
+def _rows_to_arrow(rows: list, schema):
+    """Row dicts as an Arrow RecordBatch under ``schema`` (a pyarrow
+    schema): the inverse of :func:`_rows_from_arrow`. None is a null,
+    float('nan') a NaN value, a missing key a null; keys outside
+    ``schema`` are dropped."""
+    import pyarrow as pa
+
+    fixes = [(f.name, g) for f in schema if (g := _py_fix(f.type, out=True))]
+    if fixes:
+        rows = [{**r, **{n: g(r.get(n)) for n, g in fixes}} for r in rows]
+    return pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
+def _row_udf(fn: Callable[..., Any], return_type, gated: bool = False, timer=None):
+    """Arrow UDF that calls ``fn`` once per row. Each argument Column is
+    a struct, and ``fn`` takes one row dict per argument (see
+    :func:`_rows_from_arrow`); its results convert back under
+    ``return_type``, where a struct type takes dicts. ``timer`` (an
+    accumulator) adds the milliseconds the rows spend in Python.
 
     ``gated=True`` gives the accounting plan's form (see
-    :mod:`gratum_spark.rejections`): the UDF takes the step's input plus
-    the live flag ``_live()``, runs ``batch_fn`` on the live rows only
-    and gives every other row a null result. The accounting plan carries
-    rows an earlier step rejected, and gratum never hands such a row to
-    a later closure."""
-    if not gated:
+    :mod:`gratum_spark.rejections`): the UDF takes the live flag
+    ``_live()`` as one more argument, and only the live rows convert and
+    reach ``fn``; every other row gets a null result. The accounting
+    plan carries rows an earlier step rejected, and gratum never hands
+    such a row to a later closure."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        @F.pandas_udf(return_type)
-        def _udf(batch: pd.Series) -> pd.Series:
-            return batch_fn(batch)
-
-        return _udf
     rt = _parse_ddl(None, return_type) if isinstance(return_type, str) else return_type
+    out_schema = to_arrow_schema(StructType([StructField("v", rt)]))
 
-    def nulls(n: int):
-        if isinstance(rt, StructType):
-            return pd.DataFrame({f.name: [None] * n for f in rt.fields})
-        return pd.Series([None] * n, dtype=object)
+    def _eval(*cols):
+        if gated:
+            *cols, live = cols
+            cols = [c.filter(live) for c in cols]
+        t0 = time.perf_counter()
+        res = [fn(*r) for r in zip(*map(_rows_from_arrow, cols))]
+        if timer is not None:
+            timer.add((time.perf_counter() - t0) * 1000.0)
+        if gated:
+            it = iter(res)
+            res = [next(it) if ok else None for ok in live.to_pylist()]
+        return _rows_to_arrow([{"v": v} for v in res], out_schema).column(0)
 
-    @F.pandas_udf(return_type)
-    def _live_only(batch: pd.Series, live: pd.Series) -> pd.Series:
-        m = live.to_numpy(dtype=bool)
-        if m.all():
-            return batch_fn(batch)
-        if not m.any():
-            return nulls(len(batch))
-        return batch_fn(batch[m]).reindex(batch.index)
-
-    return _live_only
-
-
-def _pandas_value_predicate(fn: Callable[[Any], Any], gated: bool = False):
-    """Arrow-batched boolean predicate over a single column — the
-    Condition-map closure form. One Arrow batch crosses the Python
-    boundary per ~10k rows instead of one pickled value per row.
-
-    The series is normalized to Python-native values BEFORE the user
-    closure sees it: Arrow hands nulls to pandas as NaN/NaT/pd.NA, so a
-    closure like ``lambda x: x is None`` silently matched nothing after
-    the r5 switch from F.udf (r5 ADVICE, verified). astype(object) +
-    where(notna) restores None for every null, matching the row-at-a-time
-    boundary the reference's closures were written against.
-    ``gated=True`` returns the accounting plan's live-only form."""
-
-    def _eval(s: pd.Series) -> pd.Series:
-        native = s.astype(object).where(s.notna(), None)
-        return native.map(lambda x: bool(fn(x)))
-
-    return _batch_udf(_eval, BooleanType(), gated)
+    return F.arrow_udf(_eval, rt)
 
 
-def _pandas_float_value_predicate(fn: Callable[[Any], Any], gated: bool = False):
-    """Float-column variant of :func:`_pandas_value_predicate` (r12):
-    the input is struct(v, n) where ``n`` is a JVM-side ``isnan`` flag,
-    so the closure sees float('nan') for a true NaN value and None for
-    a null — the pandas_udf input conversion alone conflates them (null
-    arrives as numpy NaN)."""
+def _map_rows(df: DataFrame, fn, schema: StructType | str) -> DataFrame:
+    """``df.mapInArrow`` for a row closure: ``fn(batches, arrow_schema)``
+    takes ``df``'s Arrow batches under its own column names and yields
+    batches under ``arrow_schema``, the Arrow form of ``schema``
+    (StructType or DDL). The rows convert with :func:`_rows_from_arrow`
+    and :func:`_rows_to_arrow`."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _eval(b: pd.DataFrame) -> pd.Series:
-        vals = b["v"].astype(object).where(b["v"].notna(), None)
-        out = [
-            bool(fn(float("nan") if flag else v))
-            for v, flag in zip(vals, b["n"])
-        ]
-        return pd.Series(out, index=b.index)
-
-    return _batch_udf(_eval, BooleanType(), gated)
-
-
-# JVM-side NaN flags for closure-visible row dicts (r12): the pandas
-# serializer renders a float NULL as numpy NaN on input, so without
-# help a row-dict closure cannot tell null from a true NaN value. Every
-# closure site that converts a struct batch to row dicts appends one
-# ``__nan__<col>`` boolean per float/double column (exact, computed by
-# Catalyst's isnan before the Arrow boundary) and restores the cell
-# python-side: flagged -> float('nan'), unflagged NaN/None -> None.
-
-
-def _nan_flag_cols(df: DataFrame, cols: Iterable[str]) -> list[Column]:
-    want = set(cols)
-    return [
-        F.coalesce(F.isnan(F.col(f.name)), F.lit(False)).alias(f"__nan__{f.name}")
-        for f in df.schema.fields
-        if f.name in want and isinstance(f.dataType, (DoubleType, FloatType))
-    ]
-
-
-def _restore_nan_cells(d: dict) -> dict:
-    """Apply and strip ``__nan__*`` flags from a row dict: flagged float
-    cells become float('nan'); unflagged cells that arrived as NaN (the
-    serializer's null rendering) become None."""
-    for fk in [k for k in d if k.startswith("__nan__")]:
-        flag = d.pop(fk)
-        c = fk[7:]
-        v = d.get(c)
-        if flag:
-            d[c] = float("nan")
-        elif isinstance(v, float) and v != v:
-            d[c] = None
-    return d
+    if isinstance(schema, str):
+        schema = _parse_ddl(df.sparkSession, schema)
+    arrow_schema = to_arrow_schema(schema)
+    df, names, _ = _safe_names(df)
+    return df.mapInArrow(
+        lambda batches: fn((b.rename_columns(names) for b in batches), arrow_schema), schema
+    )
 
 
 def _local_run_id_frame(
@@ -411,23 +443,6 @@ def _distributed_run_ids(
         .withColumn("__gid__", F.col("__base__") + F.col("__lid__"))
         .drop("__pid__", "__lid__", "__base__", *extra_drop)
     )
-
-
-def _pandas_row_predicate(fn: Callable[[dict], Any], gated: bool = False):
-    """Arrow-batched boolean predicate over the whole row (Condition's
-    "*" wildcard closure): struct input arrives as a pandas DataFrame.
-    Nulls are normalized to Python None before the closure sees the row
-    dict (same boundary contract as _pandas_value_predicate); float
-    cells carry ``__nan__*`` flags so a true NaN survives as
-    float('nan') (r12)."""
-
-    def _eval(batch: pd.DataFrame) -> pd.Series:
-        native = batch.astype(object).where(batch.notna(), None)
-        return native.apply(
-            lambda r: bool(fn(_restore_nan_cells(r.to_dict()))), axis=1
-        )
-
-    return _batch_udf(_eval, BooleanType(), gated)
 
 
 # English month names for lenient text-month parsing (MMM/MMMM) —
@@ -1019,27 +1034,23 @@ def _simple_date_pattern(
     )
 
 
-# --------------------------------------------------------------- NaN-exact
-# pandas interchange (r12). PySpark's pandas serializers conflate float
-# NULL and NaN in BOTH directions: Spark->pandas renders null as numpy
-# NaN (plain float64 has no null), and pandas->Arrow treats NaN as the
-# null sentinel (pa.Array.from_pandas semantics). The reference's rows
-# carry Double.NaN faithfully (a parsed "NaN" survives any step), so
-# every operator that roundtrips PAYLOAD columns through pandas — the
-# closure forms add_step/flat_map/reduce-fold and the pandas-fn forms
-# flatten_window/grouped-apply — goes through mapInArrow/applyInArrow
-# with these adapters instead: float columns travel as pandas nullable
-# Float64/Float32 (NaN is a value, NA is null — exact both ways,
-# probed), timestamps are localized tz-naive like PySpark's own
-# serializer, and everything else converts as from_pandas always did.
-# Caught by fuzz campaign `chain` at seed 661 (as_double("NaN") ->
-# flatten_window nulled the NaN). The pandas_udf predicate/value forms
-# (filter closure, add_field value, fill_down decider) stay on
-# pandas_udf but carry JVM-side ``__nan__*`` flags so their
-# closure-visible row dicts are null-vs-NaN exact too (see
-# _nan_flag_cols/_restore_nan_cells). Known residual conflation: a
-# pandas fn that CONSTRUCTS a fresh plain-float64 output column gets
-# from_pandas NaN->null (use a nullable Float64 column to be exact).
+# ------------------------------------------------ NaN-exact pandas adapters
+# flatten_window and GroupedPipeline.apply_in_pandas hand the user
+# function a pandas DataFrame by contract, so they keep a pandas
+# conversion; every row closure goes through the converter pair above
+# instead. PySpark's pandas serializers conflate float NULL and NaN in
+# BOTH directions: Spark->pandas renders null as numpy NaN (plain
+# float64 has no null), and pandas->Arrow treats NaN as the null
+# sentinel (pa.Array.from_pandas semantics). The reference's rows carry
+# Double.NaN faithfully (a parsed "NaN" survives any step), so these two
+# run through applyInArrow with the adapters below: float columns travel
+# as pandas nullable Float64/Float32 (NaN is a value, NA is null — exact
+# both ways, probed), timestamps are localized tz-naive like PySpark's
+# own serializer, and everything else converts as from_pandas always
+# did. Caught by fuzz campaign `chain` at seed 661 (as_double("NaN") ->
+# flatten_window nulled the NaN). Known residual conflation: a pandas fn
+# that CONSTRUCTS a fresh plain-float64 output column gets from_pandas
+# NaN->null (use a nullable Float64 column to be exact).
 
 
 def _nullable_float_dtype(t):
@@ -1109,27 +1120,6 @@ def _safe_names(df: DataFrame) -> tuple[DataFrame, list[str], dict[str, str]]:
     return df, names, safe
 
 
-def _map_in_pandas_exact(df: DataFrame, fn, schema) -> DataFrame:
-    """``df.mapInPandas(fn, schema)`` with the float null/NaN
-    distinction preserved through both conversions (mapInArrow)."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = _parse_ddl(df.sparkSession, schema)
-    arrow_schema = to_arrow_schema(schema)
-    df, names, _ = _safe_names(df)
-
-    def _arrow_fn(batches):
-        def _pdfs():
-            for b in batches:
-                yield _pdf_from_arrow(b.rename_columns(names))
-
-        for out in fn(_pdfs()):
-            yield _pdf_to_arrow(out, arrow_schema)
-
-    return df.mapInArrow(_arrow_fn, schema)
-
-
 def _apply_in_pandas_exact(df: DataFrame, keys: list[str], fn, schema) -> DataFrame:
     """``df.groupBy(*keys).applyInPandas(fn, schema)`` with float
     null/NaN exact (applyInArrow). ``fn``: pandas DataFrame -> pandas
@@ -1155,12 +1145,6 @@ def _parse_ddl(session, ddl: str):
     from pyspark.sql.types import _parse_datatype_string
 
     return _parse_datatype_string(ddl)
-
-
-def _na_to_none(d: dict) -> dict:
-    """Row-dict fidelity for closures: nullable-dtype NA cells become
-    None (the reference's null), NaN stays a float value."""
-    return {k: (None if v is pd.NA else v) for k, v in d.items()}
 
 
 _GREGORIAN_CUTOVER_JDN = 2299161  # 1582-10-15 (Gregorian), Java's default
@@ -1839,40 +1823,19 @@ class Pipeline:
                 # predicate sees the full row as a dict. Arrow-batched
                 # (same boundary as _filter_rows) — a row-at-a-time
                 # F.udf here would pickle per row in the hot path.
-                exprs.append(
-                    _pandas_row_predicate(v, gated)(
-                        F.struct(
-                            *[F.col(c) for c in self.df.columns],
-                            *_nan_flag_cols(self.df, self.df.columns),
-                        ),
-                        *live,
-                    )
-                )
+                pred = _row_udf(lambda r, fn=v: bool(fn(r)), BooleanType(), gated)
+                exprs.append(pred(F.struct(*self.columns), *live))
                 continue
             c = F.col(col)
-            is_float_col = any(
-                f.name == col and isinstance(f.dataType, (DoubleType, FloatType))
-                for f in self.df.schema.fields
-            )
             if v is None:
                 exprs.append(c.isNull())
             elif _is_regex(v):
                 exprs.append(c.rlike(v.pattern))
             elif isinstance(v, (list, tuple, set, frozenset)):
                 exprs.append(c.isin(*v))
-            elif callable(v) and is_float_col:
-                # null-vs-NaN exact for float columns (r12)
-                exprs.append(
-                    _pandas_float_value_predicate(v, gated)(
-                        F.struct(
-                            c.alias("v"),
-                            F.coalesce(F.isnan(c), F.lit(False)).alias("n"),
-                        ),
-                        *live,
-                    )
-                )
             elif callable(v):
-                exprs.append(_pandas_value_predicate(v, gated)(c, *live))
+                pred = _row_udf(lambda r, fn=v: bool(fn(r["v"])), BooleanType(), gated)
+                exprs.append(pred(F.struct(c.alias("v")), *live))
             elif isinstance(v, Column):
                 exprs.append(v)
             else:
@@ -1892,7 +1855,7 @@ class Pipeline:
         (reference: Pipeline.groovy:240-251 closure form, 284-294 map form)
         Accepts a Column expression / SQL string (fast path, codegen'd),
         a mapping with gratum Condition semantics, or a row-level Python
-        callable (slow path: Arrow-batched pandas UDF).
+        callable (slow path: Arrow-batched, see :func:`_row_udf`).
         """
         acct_keep, user_cols = None, []
         if isinstance(condition, Mapping):
@@ -1919,37 +1882,26 @@ class Pipeline:
         )
 
     def _filter_rows(self, fn: Callable[[dict], bool], step: str) -> "Pipeline":
-        """Whole-row Python predicate via Arrow-batched pandas UDF.
+        """Whole-row Python predicate, Arrow-batched (:func:`_row_udf`).
 
         Closure exceptions don't kill the job: the row rejects as
         SCRIPT_ERROR, mirroring Step.execute (etl/Step.groovy:23-51)."""
-        cols = self.df.columns
         timer = self.spark.sparkContext.accumulator(0.0)
         rt = "keep boolean, err string"
 
-        def _eval(batch: pd.DataFrame) -> pd.DataFrame:
-            import time as _time
+        def one(r):
+            try:
+                return {"keep": bool(fn(r)), "err": None}
+            except Exception as e:  # noqa: BLE001 - reference catches all
+                return {"keep": False, "err": f"{type(e).__name__}: {e}"}
 
-            _t0 = _time.perf_counter()
-
-            def one(r):
-                try:
-                    return bool(fn(_restore_nan_cells(r.to_dict()))), None
-                except Exception as e:  # noqa: BLE001 - reference catches all
-                    return False, f"{type(e).__name__}: {e}"
-
-            out = batch.apply(one, axis=1, result_type="expand")
-            out.columns = ["keep", "err"]
-            timer.add((_time.perf_counter() - _t0) * 1000.0)
-            return out
-
-        row = F.struct(*cols, *_nan_flag_cols(self.df, cols))
-        marked = self.df.withColumn("__p__", _batch_udf(_eval, rt)(row))
+        row = F.struct(*self.columns)
+        marked = self.df.withColumn("__p__", _row_udf(one, rt, timer=timer)(row))
         kept = marked.filter(F.col("__p__.keep")).drop("__p__")
         code = len(self._acct.tags)
 
         def acct(d: DataFrame) -> DataFrame:
-            p = d.withColumn("__p__", _batch_udf(_eval, rt, gated=True)(row, _live()))
+            p = d.withColumn("__p__", _row_udf(one, rt, True, timer)(row, _live()))
             tag = (
                 F.when(F.col(TAG).isNotNull(), F.col(TAG))
                 .when(F.col("__p__.err").isNotNull(), F.lit(code + 1))
@@ -2081,9 +2033,10 @@ class Pipeline:
         sampled row rejects, pass ``schema`` (StructType or DDL string)
         explicitly; that also skips the job.
 
-        Scale: Arrow-batched ``mapInPandas`` with a per-row Python loop —
-        the documented slow path, like every closure form here. Prefer
-        the expression-based operators for hot paths.
+        Scale: ``mapInArrow`` with a per-row Python loop over the row
+        dicts of :func:`_rows_from_arrow` — the documented slow path,
+        like every closure form here. Prefer the expression-based
+        operators for hot paths.
         """
         if callable(name) and fn is None:
             name, fn = None, name
@@ -2091,13 +2044,11 @@ class Pipeline:
             raise TypeError("add_step requires a callable")
         step = name or getattr(fn, "__name__", None) or "add_step"
 
-        in_cols = self.df.columns
-        has_order = ROW_ORDER in in_cols
+        has_order = ROW_ORDER in self.df.columns
         if schema is None:
             out_fields = self._infer_step_fields(fn)
         else:
             out_fields = list(_schema_fields(schema))
-        out_names = [f.name for f in out_fields]
 
         row_fields = list(out_fields)
         if has_order:
@@ -2115,68 +2066,67 @@ class Pipeline:
         code = len(self._acct.tags)
         categories = [c.value for c in RejectionCategory]
 
-        def _run(batches: Iterable[pd.DataFrame], schema: StructType = full):
+        def _run(batches, arrow_schema):
             """Kept plan: every row gets (__cat__, __reason__), null when
             the closure kept it. Accounting plan: rows arrive with the
-            tag column; a tagged row skips the closure and carries only
-            its tag (and its payload, in a payload build), and a
-            rejection sets the category's tag code and, in a payload
-            build, keeps its reason."""
-            import time as _time
+            tag column; a tagged row skips the conversion and the closure
+            and carries only its tag (and its payload, in a payload
+            build), and a rejection sets the category's tag code and, in
+            a payload build, keeps its reason."""
+            import pyarrow as pa
+            import pyarrow.compute as pc
 
             from .rejections import Rejection as _Rej
 
-            names = schema.fieldNames()
-            accounting = TAG in names
-            for pdf in batches:
-                _t0 = _time.perf_counter()
+            accounting = TAG in arrow_schema.names
+            for b in batches:
+                if accounting:
+                    live = pc.is_null(b.column(TAG))
+                    gone = b.filter(pc.invert(live))
+                    if gone.num_rows:
+                        yield pa.RecordBatch.from_arrays([
+                            gone.column(f.name).cast(f.type) if f.name in (TAG, PAYLOAD)
+                            else pa.nulls(gone.num_rows, f.type)
+                            for f in arrow_schema
+                        ], schema=arrow_schema)
+                    b = b.filter(live).drop_columns(
+                        [c for c in (TAG, PAYLOAD) if c in b.schema.names]
+                    )
+                t0 = time.perf_counter()
                 out_rows = []
-                tags_in = pdf.pop(TAG) if accounting else None
-                carried = pdf.pop(PAYLOAD) if PAYLOAD in pdf.columns else None
-                for i, r in enumerate(pdf.to_dict("records")):
-                    if accounting and pd.notna(tags_in.iat[i]):
-                        out_rows.append({TAG: int(tags_in.iat[i]),
-                                         PAYLOAD: carried.iat[i] if carried is not None else None})
-                        continue
-                    r = _na_to_none(r)
+                for r in _rows_from_arrow(b):
                     order_v = r.pop(ROW_ORDER, None)
-                    orig = {k: r.get(k) for k in out_names}
                     try:
                         res = callback(dict(r))
                     except Exception as e:  # noqa: BLE001 - reference catches all
-                        row = {**orig, "__cat__": "SCRIPT_ERROR",
+                        row = {**r, "__cat__": "SCRIPT_ERROR",
                                "__reason__": f"{type(e).__name__}: {e}"}
                     else:
                         if res is None:
-                            row = {**orig, "__cat__": "REJECTION",
+                            row = {**r, "__cat__": "REJECTION",
                                    "__reason__": "step returned null"}
                         elif isinstance(res, _Rej):
-                            row = {**orig, "__cat__": res.category.value,
+                            row = {**r, "__cat__": res.category.value,
                                    "__reason__": res.reason}
                         else:
-                            row = {k: res.get(k) for k in out_names}
-                            row["__cat__"] = row["__reason__"] = None
+                            row = {**res, "__cat__": None, "__reason__": None}
                     if has_order:
                         row[ROW_ORDER] = order_v
                     if accounting:
                         cat = row.pop("__cat__")
                         row[TAG] = None if cat is None else code + categories.index(cat)
                     out_rows.append(row)
-                timer.add((_time.perf_counter() - _t0) * 1000.0)
-                # dtype=object: a plain float64 frame would fold None
-                # (null) and float('nan') (a value) together before the
-                # NaN-exact Arrow conversion could tell them apart; keys
-                # outside ``names`` are dropped
-                yield pd.DataFrame(out_rows, columns=names, dtype=object)
+                timer.add((time.perf_counter() - t0) * 1000.0)
+                # keys outside the output schema are dropped
+                yield _rows_to_arrow(out_rows, arrow_schema)
 
-        marked = _map_in_pandas_exact(self.df, _run, full)
+        marked = _map_rows(self.df, _run, full)
         kept = marked.filter(F.col("__cat__").isNull()).drop("__cat__", "__reason__")
 
         def acct(d: DataFrame) -> DataFrame:
             if PAYLOAD not in d.columns:
-                return _map_in_pandas_exact(d, functools.partial(_run, schema=tagged), tagged)
-            schema = StructType(tagged.fields + [d.schema[PAYLOAD], reason])
-            out = _map_in_pandas_exact(d, functools.partial(_run, schema=schema), schema)
+                return _map_rows(d, _run, tagged)
+            out = _map_rows(d, _run, StructType(tagged.fields + [d.schema[PAYLOAD], reason]))
             return _tagged(out, code, reason=F.col("__reason__")).drop("__reason__")
 
         out = self._next(
@@ -2264,7 +2214,8 @@ class Pipeline:
         returnType: DataType | str = StringType(),
     ) -> "Pipeline":
         """Computed column (Pipeline.groovy:925-939). Column/SQL-string is
-        the fast path; a Python callable becomes a pandas UDF over the row."""
+        the fast path; a Python callable becomes an Arrow UDF over the row
+        dict (:func:`_row_udf`)."""
         if isinstance(value, Column):
             col = value
         elif isinstance(value, str):
@@ -2272,23 +2223,17 @@ class Pipeline:
         elif callable(value):
             # closure exceptions reject the row as SCRIPT_ERROR instead of
             # failing the job (reference Step.execute, etl/Step.groovy:23-51)
-            cols = self.df.columns
             rt = returnType.simpleString() if isinstance(returnType, DataType) else returnType
             rt = f"value {rt}, err string"
 
-            def _eval(batch: pd.DataFrame) -> pd.DataFrame:
-                def one(r):
-                    try:
-                        return value(_restore_nan_cells(r.to_dict())), None
-                    except Exception as e:  # noqa: BLE001
-                        return None, f"{type(e).__name__}: {e}"
+            def one(r):
+                try:
+                    return {"value": value(r), "err": None}
+                except Exception as e:  # noqa: BLE001
+                    return {"value": None, "err": f"{type(e).__name__}: {e}"}
 
-                out = batch.apply(one, axis=1, result_type="expand")
-                out.columns = ["value", "err"]
-                return out
-
-            row = F.struct(*cols, *_nan_flag_cols(self.df, cols))
-            marked = self.df.withColumn("__f__", _batch_udf(_eval, rt)(row))
+            row = F.struct(*self.columns)
+            marked = self.df.withColumn("__f__", _row_udf(one, rt)(row))
             kept = (
                 marked.filter(F.col("__f__.err").isNull())
                 .withColumn(name, F.col("__f__.value"))
@@ -2298,7 +2243,7 @@ class Pipeline:
             code = len(self._acct.tags)
 
             def acct(d: DataFrame) -> DataFrame:
-                f = d.withColumn("__f__", _batch_udf(_eval, rt, gated=True)(row, _live()))
+                f = d.withColumn("__f__", _row_udf(one, rt, gated=True)(row, _live()))
                 return _tagged(
                     f, code, _retag(F.col("__f__.err").isNotNull(), code),
                     {name: F.col("__f__.value")},
@@ -2908,39 +2853,26 @@ class Pipeline:
             )
             return self._next(self.df.withColumns(self._fill_updates(w, keys)))
 
-        cols = [c for c in self.df.columns if c != ROW_ORDER]
         callback = decider
 
-        @F.pandas_udf(BooleanType())
-        def _joins_run(cur_b: pd.DataFrame, prv_b: pd.DataFrame) -> pd.Series:
-            out = []
-            for i in range(len(cur_b)):
-                try:
-                    out.append(
-                        bool(callback(
-                            _restore_nan_cells(cur_b.iloc[i].to_dict()),
-                            _restore_nan_cells(prv_b.iloc[i].to_dict()),
-                        ))
-                    )
-                except Exception:  # noqa: BLE001 - boundary on decider error
-                    out.append(False)
-            return pd.Series(out)
+        def _decide(cur: dict, prev: dict | None) -> bool:
+            try:
+                return bool(callback(cur, prev))
+            except Exception:  # noqa: BLE001 - boundary on decider error
+                return False
+
+        _joins_run = _row_udf(_decide, BooleanType())
 
         def joins(cur_c: Column, prv_c: Column) -> Column:
-            # pandas UDFs evaluate on every row regardless of when()
-            # branches; null prev structs (first row of a run boundary)
-            # surface as all-NaN dicts and the try/except above maps a
-            # raising decider to False (new run) — same contract as the
-            # guarded pre-distributed form
+            # Arrow UDFs evaluate on every row regardless of when()
+            # branches; a null prev struct (the first row of a partition)
+            # reaches the decider as None, and _decide maps a raising
+            # decider to False (new run) — same contract as the guarded
+            # pre-distributed form
             return F.coalesce(_joins_run(cur_c, prv_c), F.lit(False))
 
         d, ordc, extra = self._ordered_base(order_by)
-        # __nan__* flags ride in the payload struct so the decider's row
-        # dicts keep null-vs-NaN exact (r12); min_by/max_by carry them
-        # to the boundary pairs unchanged
-        cur = F.struct(
-            *[F.col(c) for c in cols], *_nan_flag_cols(self.df, cols)
-        )
+        cur = F.struct(*self.columns)
         with_gid = _distributed_run_ids(
             d,
             ordc,
@@ -3006,19 +2938,14 @@ class Pipeline:
         schema: StructType | str,
     ) -> "Pipeline":
         """Row -> many rows via a Python generator (gratum inject closure
-        form / UDTF, Pipeline.groovy:1005-1027). mapInPandas: Arrow-batched,
-        partition-parallel."""
+        form / UDTF, Pipeline.groovy:1005-1027). mapInArrow over row
+        dicts: Arrow-batched, partition-parallel."""
 
-        def _gen(batches: Iterable[pd.DataFrame]):
-            for pdf in batches:
-                out: list[dict] = []
-                for row in pdf.to_dict("records"):
-                    out.extend(fn(_na_to_none(row)))
-                yield pd.DataFrame(out, dtype=object) if out else pd.DataFrame(
-                    {f.name: pd.Series(dtype="object") for f in _schema_fields(schema)}
-                )
+        def _gen(batches, arrow_schema):
+            for b in batches:
+                yield _rows_to_arrow([o for r in _rows_from_arrow(b) for o in fn(r)], arrow_schema)
 
-        return self._next(_map_in_pandas_exact(self.df, _gen, schema))
+        return self._next(_map_rows(self.df.drop(ROW_ORDER), _gen, schema))
 
     def exchange(
         self,
@@ -3107,7 +3034,7 @@ class Pipeline:
         Pipeline.groovy:1253-1269).
 
         With ``merge`` (acc, acc) -> acc: partition-parallel fold via
-        mapInPandas then driver merge of the num-partitions-sized
+        mapInArrow then driver merge of the num-partitions-sized
         partials — the scalable path when the accumulator is small.
         Without ``merge``: sequential fold on a single partition,
         matching gratum's one-thread semantics exactly (order-dependent
@@ -3115,18 +3042,18 @@ class Pipeline:
         """
         import json
 
-        def _fold(batches: Iterable[pd.DataFrame]):
+        def _fold(batches, arrow_schema):
             acc = dict(init)
             any_rows = False
-            for pdf in batches:
-                for row in pdf.to_dict("records"):
+            for b in batches:
+                for row in _rows_from_arrow(b):
                     any_rows = True
-                    acc = fn(acc, _na_to_none(row))
+                    acc = fn(acc, row)
             if any_rows:
-                yield pd.DataFrame({"acc": [json.dumps(acc, default=str)]})
+                yield _rows_to_arrow([{"acc": json.dumps(acc, default=str)}], arrow_schema)
 
-        df = self.df if merge else self.df.coalesce(1)
-        partials = _map_in_pandas_exact(df, _fold, "acc string").collect()
+        df = self.df.drop(ROW_ORDER)
+        partials = _map_rows(df if merge else df.coalesce(1), _fold, "acc string").collect()
         acc = dict(init)
         combine = merge or (lambda a, b: b)  # single partial when merge is None
         for p in partials:

@@ -44,6 +44,44 @@ def test_filter_closure_sees_python_none_for_nulls(spark):
     assert p2.filter({"s": lambda x: x is None}).go().loaded == 1
     assert p2.filter({"t": lambda x: x is None}).go().loaded == 2
 
+    # Every row closure site sees what Row.asDict gives on the driver:
+    # None for each null, an int for a long and a naive datetime, also
+    # when a null and a value share one Arrow batch (one partition).
+    import datetime
+
+    from gratum_spark import Pipeline
+
+    t0 = datetime.datetime(2020, 1, 2, 3, 4, 5)
+    rows3 = [{"i": 1, "q": 5, "t": t0, "b": True},
+             {"i": 2, "q": None, "t": None, "b": None}]
+    p3 = sources.from_collection(
+        spark, rows3, "i long, q long, t timestamp, b boolean", name="nulls3"
+    )
+    p3 = Pipeline(p3.df.coalesce(1), "nulls3")
+    assert [r.asDict() for r in p3.df.drop("_row_order").collect()] == rows3
+
+    def exact(r):
+        if r["i"] == 2:
+            return r["q"] is None and r["t"] is None and r["b"] is None
+        return (type(r["q"]) is int and r["q"] == 5 and r["t"] == t0
+                and r["t"].tzinfo is None and r["b"] is True)
+
+    assert p3.filter(exact).go().loaded == 2
+    assert p3.filter({"*": exact}).go().loaded == 2
+    assert p3.filter({"q": lambda x: x is None}).go().loaded == 1
+    assert p3.filter({"q": lambda x: type(x) is int}).go().loaded == 1
+    assert p3.filter({"t": lambda x: x == t0 and x.tzinfo is None}).go().loaded == 1
+    assert p3.filter({"b": lambda x: x is None}).go().loaded == 1
+    assert [r["ok"] for r in p3.add_field("ok", exact, "boolean").df.collect()] == [True, True]
+    stepped = p3.add_step("probe", lambda r: {**r, "ok": exact(r)}, schema="i long, ok boolean")
+    assert [r["ok"] for r in stepped.df.collect()] == [True, True]
+    mapped = p3.flat_map(lambda r: [{"ok": exact(r)}], "ok boolean")
+    assert [r["ok"] for r in mapped.df.collect()] == [True, True]
+    assert p3.reduce_rows(lambda acc, r: {"n": acc["n"] + exact(r)}, {"n": 0}) == {"n": 2}
+    # the decider sees the null as None (not NaN), so the row fills
+    filled = p3.fill_down_by(lambda r, prev: r["q"] is None and prev["q"] is not None)
+    assert [(r["i"], r["q"]) for r in filled.df.collect()] == [(1, 5), (2, 5)]
+
 
 def test_filter_wildcard_closure_sees_python_none(spark):
     # the "*" whole-row closure gets the same None-for-null boundary
@@ -1066,9 +1104,10 @@ def test_nan_exact_through_pandas_roundtrips(spark):
     """Float NULL and NaN are distinct values in the reference's rows
     (a parsed "NaN" is Double.NaN and survives every step), but
     PySpark's pandas serializers conflate them in both directions. The
-    r12 NaN-exact Arrow adapters preserve the distinction through every
-    payload roundtrip: add_step, flat_map, flatten_window, grouped
-    apply_in_pandas, and reduce_rows. Caught by fuzz `chain` seed 661
+    NaN-exact Arrow adapters (flatten_window, grouped apply_in_pandas)
+    and the row-closure converter (add_step, flat_map, reduce_rows and
+    the expression sites) preserve the distinction through every
+    payload roundtrip. Caught by fuzz `chain` seed 661
     (as_double("NaN") -> flatten_window nulled the NaN)."""
     import math
 
@@ -1109,8 +1148,8 @@ def test_nan_exact_through_pandas_roundtrips(spark):
     seen_kinds = {r["i"]: r["kind"]
                   for r in d.add_step("probe", _peek).df.collect()}
     assert seen_kinds == {1: "nan", 2: "val", 3: "null"}
-    # closure INPUT fidelity on the pandas_udf predicate/value forms
-    # (JVM-side __nan__ flags, r12): filter closures and add_field
+    # closure INPUT fidelity at the expression sites (Arrow UDFs over
+    # the row struct): filter, add_field and fill_down_by decider
     # closures can tell a true NaN from a null
     assert [r["i"] for r in d.filter(
         lambda row: isinstance(row["s"], float) and row["s"] != row["s"]
@@ -1130,6 +1169,8 @@ def test_nan_exact_through_pandas_roundtrips(spark):
                      else "nan" if row["s"] != row["s"] else "val"),
     ).df.collect()}
     assert kinds2 == {1: "nan", 2: "val", 3: "null"}
+    filled = d.fill_down_by(lambda row, prev: row["s"] is None and prev["s"] == 1.5)
+    assert kinds(filled.df) == {1: "nan", 2: 1.5, 3: 1.5}
 
 
 def test_sort(people):

@@ -293,9 +293,10 @@ def test_flatten_window_runs_match_sequential_model(spark, vals):
     assert got == sorted(expected, key=key)
 
 
-# Rejecting steps: (name, pipeline -> pipeline). Each rejects some rows
-# of the ROW strategy, and their step names are distinct. All are
-# row-local except join, which closes the open accounting segment.
+# Rejecting steps: (name, pipeline -> pipeline). Each but add_field_repr
+# rejects some rows of the ROW strategy, and their step names are
+# distinct. All are row-local except join, which closes the open
+# accounting segment.
 JOIN_RIGHT = {"a": "wa", "c": "wc"}
 REJECTING_STEPS = {
     "filter_map": lambda p: p.filter({"k": ["a", "b"]}, name="filter_map"),
@@ -312,6 +313,8 @@ REJECTING_STEPS = {
     "add_field_closure": lambda p: p.add_field(
         "m", lambda r: 1 // (len(r["v"] or "") - 1), "long"
     ),
+    # rejects nothing: it shows the value a closure sees for n
+    "add_field_repr": lambda p: p.add_field("nr", lambda r: repr(r["n"])),
     "join": lambda p: p.join(
         sources.from_collection(
             p.spark, [{"k": k, "w": w} for k, w in JOIN_RIGHT.items()], "k string, w string"
@@ -357,6 +360,8 @@ def _sequential_model(rows, chain):
                 why = ("SCRIPT_ERROR", "add_field(m)", "closure raised") if len(v) == 1 else None
                 if why is None:
                     r = {**r, "m": 1 // (len(v) - 1)}
+            elif name == "add_field_repr":
+                why, r = None, {**r, "nr": repr(r["n"])}
             else:  # join: unmatched left rows reject, the left side wins collisions
                 why = None if r["k"] in JOIN_RIGHT else ("IGNORE_ROW", "join(['k'])", "Could not join on ['k']")
                 if why is None:
@@ -376,6 +381,12 @@ def _sequential_model(rows, chain):
     rows=[{"k": "a", "v": None, "n": "bad"}, {"k": "a", "v": None, "n": "1"},
           {"k": "a", "v": None, "n": "2"}, {"k": "b", "v": "x", "n": None}],
     chain=["as_int", "unique", "join"],
+)
+# always run: a closure after as_int sees an int n as an int and a null
+# n as None, also when both share one Arrow batch
+@example(
+    rows=[{"k": "a", "v": None, "n": "12"}, {"k": "b", "v": None, "n": None}],
+    chain=["as_int", "add_field_repr"],
 )
 @settings(
     max_examples=8,
@@ -404,7 +415,7 @@ def test_reject_accounting_matches_sequential_model(spark, tmp_path_factory, row
         # n comes back as a string: as_int's point sees it unparsed
         n = r.get("n")
         return (cat, step, reason, r["k"], r["v"], None if n is None else str(n),
-                r.get("m"), r.get("w"))
+                r.get("m"), r.get("w"), r.get("nr"))
 
     # the kept plan, which neither go() nor the write reads, keeps the
     # model's rows

@@ -85,7 +85,9 @@ def summarize(plan: str) -> dict[str, object]:
         "window": nodes("Window"),
         "arrow_py": nodes("ArrowEvalPython")
         + nodes("MapInPandas")
-        + nodes("FlatMapGroupsInPandas"),
+        + nodes("MapInArrow")
+        + nodes("FlatMapGroupsInPandas")
+        + nodes("FlatMapGroupsInArrow"),
         "row_py": nodes("BatchEvalPython"),
         "topk": nodes("TakeOrderedAndProject"),
         "expand": nodes("Expand"),
