@@ -15,6 +15,13 @@ while a row is live. A row-local rejecting step sets the tag on the live
 rows it rejects — the code indexes that segment's (category, step,
 reason) table — and a tagged row skips every later step, closures
 included, as gratum's ``__reject__`` row does (Pipeline.groovy:1384-1387).
+Such a step is defined once, as gratum's step is one closure
+(``Pipeline._row_step``): helper columns, one keep predicate per reject
+rule, and the columns it sets. The kept plan filters on the AND of those
+keep predicates, and the accounting plan tags each live row with the
+first rule whose predicate is not true, so the two plans cannot disagree
+on which rows a step keeps. A closure in a predicate or a helper takes
+the live flag in its accounting form and never sees a tagged row.
 Each row therefore crosses the step chain once, and one aggregate over
 the tag column yields the loaded count and every category×step count
 together: a file sink writes ``accounting.observe(counts).filter(live)``,

@@ -96,6 +96,40 @@ def test_add_step_error_threshold_aborts(spark):
         p.go()
 
 
+def test_closure_result_its_column_cannot_hold_is_a_script_error(spark):
+    """A closure result that its declared column cannot hold exactly
+    rejects that row as SCRIPT_ERROR, with a reason that names the
+    column, instead of being truncated (4.5 stored as 4 in a long) or
+    failing the task (True into a long). Rows whose results fit keep
+    them."""
+    from gratum_spark import sources
+
+    rows = [{"id": i, "qty": q} for i, q in enumerate([2, 3, 4, 5])]
+    p = sources.from_collection(spark, rows, "id long, qty long")
+    stepped = p.add_step(lambda r: {**r, "qty": r["qty"] * 1.5})
+    # 2*1.5 and 4*1.5 are whole: a long holds them exactly
+    assert sorted((r["id"], r["qty"]) for r in stepped.df.collect()) == [(0, 3), (2, 6)]
+    stat = stepped.go()
+    assert stat.loaded == 2
+    assert stat.rejections_for(RejectionCategory.SCRIPT_ERROR) == 2
+    rej = stepped.rejections_df().collect()
+    assert sorted(r["qty"] for r in rej) == [3, 5]  # the rows as the step received them
+    assert all("'qty'" in r["rejectionReason"] for r in rej)
+
+    flagged = p.add_step(lambda r: {**r, "qty": r["id"] == 1})
+    assert flagged.go().rejections_for(RejectionCategory.SCRIPT_ERROR) == 4
+
+    halved = p.add_field("half", lambda r: r["qty"] / 2, "long")
+    assert sorted((r["id"], r["half"]) for r in halved.df.collect()) == [(0, 1), (2, 2)]
+    assert halved.go().rejections_for(RejectionCategory.SCRIPT_ERROR) == 2
+    reasons = {r["rejectionReason"] for r in halved.rejections_df().collect()}
+    assert reasons == {"field 'half' cannot hold 1.5 as long",
+                       "field 'half' cannot hold 2.5 as long"}
+
+    with pytest.raises(Exception, match="'qty'"):
+        p.flat_map(lambda r: [{"qty": r["qty"] / 2}], "qty long").df.collect()
+
+
 @pytest.mark.parametrize("name", ["a.b", "c`d"])
 def test_add_step_over_a_name_that_needs_quoting(spark, name):
     """A column name holding a dot or a backtick reaches the closure

@@ -7,10 +7,12 @@ structural invariants that must hold for ANY input."""
 from __future__ import annotations
 
 import re
+from datetime import date
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from gratum_spark import RejectionCategory, sources
 
@@ -293,10 +295,11 @@ def test_flatten_window_runs_match_sequential_model(spark, vals):
     assert got == sorted(expected, key=key)
 
 
-# Rejecting steps: (name, pipeline -> pipeline). Each but add_field_repr
-# rejects some rows of the ROW strategy, and their step names are
-# distinct. All are row-local except join, which closes the open
-# accounting segment.
+# Rejecting steps: (name, pipeline -> pipeline). Each but add_field_repr,
+# add_field_sql and remove_field_cond rejects some rows of the ROW
+# strategy, and their step names are distinct. All are row-local except
+# join, which closes the open accounting segment; filter_udf, whose
+# Column holds a Python UDF, starts a new one from its input.
 JOIN_RIGHT = {"a": "wa", "c": "wc"}
 REJECTING_STEPS = {
     "filter_map": lambda p: p.filter({"k": ["a", "b"]}, name="filter_map"),
@@ -304,7 +307,17 @@ REJECTING_STEPS = {
     "filter_closure": lambda p: p.filter(
         lambda r: (r["v"] or "") != "zz", name="filter_closure"
     ),
+    # the gated closure inside a Condition map
+    "filter_map_closure": lambda p: p.filter(
+        {"v": lambda v: v is None or "z" not in v}, name="filter_map_closure"
+    ),
+    "filter_udf": lambda p: p.filter(
+        F.udf(lambda v: v is None or len(v) < 3, "boolean")("v"), name="filter_udf"
+    ),
     "as_int": lambda p: p.as_int("n"),
+    "as_double": lambda p: p.as_double("n"),
+    # strict: month first, then day of month
+    "as_date": lambda p: p.as_date("n", "M", "d"),
     "unique": lambda p: p.unique("k", "v"),
     "add_step": lambda p: p.add_step(
         "add_step",
@@ -315,6 +328,8 @@ REJECTING_STEPS = {
     ),
     # rejects nothing: it shows the value a closure sees for n
     "add_field_repr": lambda p: p.add_field("nr", lambda r: repr(r["n"])),
+    "add_field_sql": lambda p: p.add_field("sl", "length(v)"),
+    "remove_field_cond": lambda p: p.remove_field("v", "k = 'c'"),
     "join": lambda p: p.join(
         sources.from_collection(
             p.spark, [{"k": k, "w": w} for k, w in JOIN_RIGHT.items()], "k string, w string"
@@ -340,14 +355,26 @@ def _sequential_model(rows, chain):
                 why = None if r["v"] != "x" else ("IGNORE_ROW", "filter_expr", "filtered out")
             elif name == "filter_closure":
                 why = None if v != "zz" else ("IGNORE_ROW", "filter_closure", "filtered out")
-            elif name == "as_int":
-                n = r["n"]
-                why = None
+            elif name == "filter_map_closure":
+                why = None if "z" not in v else ("IGNORE_ROW", "filter_map_closure", "filtered out")
+            elif name == "filter_udf":
+                why = None if len(v) < 3 else ("IGNORE_ROW", "filter_udf", "filtered out")
+            elif name in ("as_int", "as_double", "as_date"):
+                # a coercion reads n as Spark's string cast gives it: str()
+                # of an int, a float or a date in this value range
+                n, why = r["n"], None
                 if n is not None and str(n) != "":
-                    if re.fullmatch(r"[+-]?[0-9]+", str(n)):
-                        r = {**r, "n": int(n)}
+                    s = str(n)
+                    if name == "as_int" and re.fullmatch(r"[+-]?[0-9]+", s):
+                        r = {**r, "n": int(s)}
+                    elif name == "as_double" and re.fullmatch(r"-?[0-9]+(\.[0-9]+)?", s):
+                        r = {**r, "n": float(s)}
+                    elif name == "as_date" and re.fullmatch(r"[0-9]+", s) and 1 <= int(s) <= 31:
+                        d = int(s)
+                        r = {**r, "n": date(1970, d, 1) if d <= 12 else date(1970, 1, d)}
                     else:
-                        why = ("INVALID_FORMAT", "asInt(n)", "Could not parse value as Int")
+                        t = {"as_int": "Int", "as_double": "Double", "as_date": "Date"}[name]
+                        why = ("INVALID_FORMAT", f"as{t}(n)", f"Could not parse value as {t}")
             elif name == "unique":
                 key = (r["k"], r["v"])
                 why = ("IGNORE_ROW", "unique(k,v)", "duplicate k,v") if key in seen else None
@@ -362,6 +389,10 @@ def _sequential_model(rows, chain):
                     r = {**r, "m": 1 // (len(v) - 1)}
             elif name == "add_field_repr":
                 why, r = None, {**r, "nr": repr(r["n"])}
+            elif name == "add_field_sql":
+                why, r = None, {**r, "sl": None if r["v"] is None else len(r["v"])}
+            elif name == "remove_field_cond":
+                why, r = None, ({**r, "v": None} if r["k"] == "c" else r)
             else:  # join: unmatched left rows reject, the left side wins collisions
                 why = None if r["k"] in JOIN_RIGHT else ("IGNORE_ROW", "join(['k'])", "Could not join on ['k']")
                 if why is None:
@@ -387,6 +418,18 @@ def _sequential_model(rows, chain):
 @example(
     rows=[{"k": "a", "v": None, "n": "12"}, {"k": "b", "v": None, "n": None}],
     chain=["as_int", "add_field_repr"],
+)
+# always run: the steps whose forms the random chains rarely reach, each
+# on rows it keeps and rows it rejects
+@example(
+    rows=[{"k": "a", "v": "xyz", "n": "12"}, {"k": "c", "v": "x", "n": "31"},
+          {"k": "b", "v": None, "n": "0"}, {"k": "c", "v": "0", "n": None}],
+    chain=["as_date", "filter_udf", "add_field_sql", "remove_field_cond"],
+)
+@example(
+    rows=[{"k": "a", "v": "z", "n": "5"}, {"k": "b", "v": "x", "n": "-7"},
+          {"k": "c", "v": None, "n": "bad"}, {"k": "a", "v": "x", "n": None}],
+    chain=["as_double", "filter_map_closure", "as_int"],
 )
 @settings(
     max_examples=8,
@@ -415,7 +458,7 @@ def test_reject_accounting_matches_sequential_model(spark, tmp_path_factory, row
         # n comes back as a string: as_int's point sees it unparsed
         n = r.get("n")
         return (cat, step, reason, r["k"], r["v"], None if n is None else str(n),
-                r.get("m"), r.get("w"), r.get("nr"))
+                r.get("m"), r.get("w"), r.get("nr"), r.get("sl"))
 
     # the kept plan, which neither go() nor the write reads, keeps the
     # model's rows

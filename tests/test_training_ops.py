@@ -7,7 +7,13 @@ numeric paths)."""
 
 from __future__ import annotations
 
+import json
 import math
+import os
+import signal
+import subprocess
+import sys
+import tempfile
 
 import numpy as np
 import pytest
@@ -15,6 +21,7 @@ from pyspark.sql import functions as F
 
 from gratum_spark.operators import dedup, multimodal, similarity, text
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
     "from the warm windowsill and the birds sing in the garden trees"
@@ -642,24 +649,61 @@ def test_minhash_verified_pairs_cross_incremental(spark):
     assert all(nid in (100, 101) for nid, _ in got)  # no corpus-internal pairs
 
 
-def test_score_documents_fake_model_and_worker_cache(spark):
+def _score_documents_worker_cache() -> dict:
+    """The body of the worker-cache test, run in a child process: fake-
+    model scores and token counts that differ from the Python model, and
+    how many times the model loaded."""
+    from gratum_spark.operators.inference import score_documents
+    from gratum_spark.session import get_spark
+
+    spark = get_spark("worker-cache")
+    try:
+        rows = [(i, f"doc {i} " + "word " * (i % 29)) for i in range(400)]
+        df = spark.createDataFrame(rows, "doc_id long, text string").repartition(16)
+        out = score_documents(df, "doc_id", "text")
+        got = {r["doc_id"]: (r["score"], r["n_tokens"]) for r in out.collect()}
+        wrong = []
+        for i, text in rows[:50]:
+            n_chars, n_words = len(text), len(text.split(" "))
+            expect = ((n_chars % 97) + (n_words % 13)) / 110.0
+            if abs(got[i][0] - expect) >= 1e-12 or got[i][1] != n_words:
+                wrong.append(i)
+        return {"rows": len(got), "wrong": wrong, "loads": out._model_loads.value}
+    finally:
+        spark.stop()
+
+
+def test_score_documents_fake_model_and_worker_cache():
     # batch-inference harness: fake-model scores must match the python
     # model, and the accumulator must show the model loaded once per
     # WORKER PROCESS, not once per partition/batch (16 partitions on a
-    # 4-core test session -> loads well under partitions).
-    from gratum_spark.operators.inference import score_documents
-
-    rows = [(i, f"doc {i} " + "word " * (i % 29)) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(16)
-    out = score_documents(df, "doc_id", "text")
-    got = {r["doc_id"]: (r["score"], r["n_tokens"]) for r in out.collect()}
-    assert len(got) == 400
-    for i, text in rows[:50]:
-        n_chars, n_words = len(text), len(text.split(" "))
-        expect = ((n_chars % 97) + (n_words % 13)) / 110.0
-        assert abs(got[i][0] - expect) < 1e-12
-        assert got[i][1] == n_words
-    loads = out._model_loads.value
+    # 4-core session -> loads well under partitions). The session is the
+    # child process's own local[4] one: in a shared session, the idle
+    # Python workers that earlier tests leave behind (the pool is never
+    # reaped) serve the 16 tasks first, and none of them has the model.
+    with tempfile.TemporaryDirectory(prefix="worker-cache-") as tmp:
+        env = {**os.environ, "PYTHONPATH": REPO, "PYSPARK_PYTHON": sys.executable,
+               "SPARK_GRAFT_MASTER": "local[4]"}
+        proc = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "worker-cache"],
+            cwd=tmp, env=env, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+            text=True, start_new_session=True,
+        )
+        try:
+            stdout, stderr = proc.communicate(timeout=300)
+        finally:
+            # the session's Python workers share the child's group
+            try:
+                os.killpg(proc.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+            proc.communicate()
+    lines = [ln for ln in stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, stderr[-4000:]
+    result = json.loads(lines[-1][len("RESULT "):])
+    assert result["rows"] == 400
+    assert result["wrong"] == []
+    loads = result["loads"]
     assert 1 <= loads < 16, f"model loaded {loads} times for 16 partitions"
 
 
@@ -1584,3 +1628,7 @@ def test_dsir_subset_path_equals_generic_path(spark):
         docs, target, "doc_id", "text", target_within_source=True
     ).orderBy("id").toPandas()
     assert generic.equals(subset)
+
+
+if __name__ == "__main__" and sys.argv[1:] == ["worker-cache"]:
+    print("RESULT " + json.dumps(_score_documents_worker_cache()), flush=True)
