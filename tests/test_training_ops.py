@@ -679,8 +679,8 @@ def test_score_documents_fake_model_and_worker_cache():
     # WORKER PROCESS, not once per partition/batch (16 partitions on a
     # 4-core session -> loads well under partitions). The session is the
     # child process's own local[4] one: in a shared session, the idle
-    # Python workers that earlier tests leave behind (the pool is never
-    # reaped) serve the 16 tasks first, and none of them has the model.
+    # Python workers that earlier tests leave behind (reaped only after
+    # 60 s idle) serve the 16 tasks first, and none of them has the model.
     with tempfile.TemporaryDirectory(prefix="worker-cache-") as tmp:
         env = {**os.environ, "PYTHONPATH": REPO, "PYSPARK_PYTHON": sys.executable,
                "SPARK_GRAFT_MASTER": "local[4]"}
